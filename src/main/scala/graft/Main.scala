@@ -57,23 +57,26 @@ object Main {
     args(0) match {
       case "create" =>
         val dir = args(1)
-        var store = emptyStore(spark)
-        for (f <- args.drop(2)) store = appendFile(store, f, None)
+        val (store, batches) = args.toSeq.drop(2).foldLeft(
+            (StoreEncoder.empty(spark, IriScheme.default), Seq.empty[DataFrame])) {
+          case ((st, bs), f) =>
+            val (appended, batch) = appendFile(st, f, None)
+            (appended, bs :+ batch)
+        }
         StorePersist.save(store, dir)
-        println(s"created $dir (${store.quads.count()} quads)")
+        batches.foreach(_.unpersist())
+        println(s"created $dir (${store.quadCount} quads)")
         0
       case "load" =>
-        val (dir, file) = (args(1), args(2))
+        val (dir, file) = (args(1).stripSuffix("/"), args(2))
         val graph = args.lift(3)
         val base = if (exists(dir)) StorePersist.open(spark, dir, cache = false)
-          else emptyStore(spark)
-        val appended = appendFile(base, file, graph)
-        // materialize before save: the appended frames' lineage reads the very
-        // table save() is about to drop and rewrite (read-write conflict)
-        val store = appended.copy(quads = appended.quads.localCheckpoint(),
-          terms = appended.terms.localCheckpoint())
-        StorePersist.save(store, dir)
-        println(s"loaded $file into $dir (${store.quads.count()} quads total)")
+          else StoreEncoder.empty(spark, IriScheme.default)
+        // the appended store reads `dir`: replace() writes a sibling and swaps
+        val (store, batch) = appendFile(base, file, graph)
+        StorePersist.replace(store, dir)
+        batch.unpersist()
+        println(s"loaded $file into $dir (${store.quadCount} quads total)")
         0
       case "query" => flag(args, "--endpoint") match {
         case Some(url) => // remote endpoint-client mode (kineo-client parity)
@@ -103,29 +106,9 @@ object Main {
         val dir = args(1).stripSuffix("/")
         val store = StorePersist.open(spark, dir, cache = false)
           .copy(charSetStats = None, charSetsDisabled = false).analyze()
-        // save() persists the freshly computed stats (or the explicit
-        // "charSets":null disabled marker when the store exceeds the cap).
-        // Crash-safe: the refreshed store's lineage reads `dir`, so write
-        // to a TEMP SIBLING (reading dir, writing tmp — no read-write
-        // conflict, no checkpoint) and swap directories; a failure
-        // mid-save leaves the original store untouched instead of
-        // half-overwritten
-        val (tmp, old) = (dir + ".analyze-tmp", dir + ".analyze-old")
-        deleteDir(tmp); deleteDir(old)
-        StorePersist.save(store, tmp)
-        val p = java.nio.file.Paths.get(_: String)
-        java.nio.file.Files.move(p(dir), p(old))
-        java.nio.file.Files.move(p(tmp), p(dir))
-        deleteDir(old)
-        // drop the session-catalog registrations that now point at moved
-        // paths (the save registered tmp's table; dir's table caches the
-        // PRE-swap file listing) so a later open() in this session
-        // re-registers against the swapped-in files
-        spark.sql(s"DROP TABLE IF EXISTS ${StorePersist.quadsTable(tmp)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${StorePersist.quadsTable(dir)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${StorePersist.termsTable(tmp)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${StorePersist.termsTable(dir)}")
-        spark.catalog.refreshByPath(dir)
+        // replace() persists the freshly computed stats (or the explicit
+        // "charSets":null disabled marker when the store exceeds the cap)
+        StorePersist.replace(store, dir)
         println(store.charSetStats match {
           case Some(cs) => s"analyzed $dir: ${cs.size} characteristic sets"
           case None => s"analyzed $dir: over set cap — statistic disabled"
@@ -157,15 +140,6 @@ object Main {
   private def exists(dir: String): Boolean =
     new java.io.File(dir, "meta.json").exists()
 
-  private def deleteDir(dir: String): Unit = {
-    val f = new java.io.File(dir)
-    if (f.exists()) {
-      Option(f.listFiles()).foreach(_.foreach(c =>
-        if (c.isDirectory) deleteDir(c.getPath) else c.delete()))
-      f.delete()
-    }
-  }
-
   /** `query`/`explain`/`graphs` also accept a raw testdata dir (parquet
     * tables) for convenience — matches how the library maps it. */
   private def openOrTestData(spark: SparkSession, dir: String): RdfStore =
@@ -174,16 +148,10 @@ object Main {
       graft.store.RelToRdf.cached(spark, dir)
     else throw new IllegalArgumentException(s"no store at $dir (need meta.json)")
 
-  private def emptyStore(spark: SparkSession): RdfStore = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq("s", "p", "o", "g").map(n =>
-      StructField(n, TermRow.schema, nullable = true)))
-    StoreEncoder.encode(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-      IriScheme.default)
-  }
-
-  private def appendFile(store: RdfStore, file: String, graph: Option[String]): RdfStore = {
+  /** The appended store and its cached batch quads (see
+    * [[StoreEncoder.appendBatch]]). */
+  private def appendFile(store: RdfStore, file: String,
+      graph: Option[String]): (RdfStore, DataFrame) = {
     val spark = store.spark
     val g = Iri(graph.getOrElse("urn:g:default"))
     val structQuads: DataFrame =
@@ -199,7 +167,7 @@ object Main {
         spark.createDataFrame(
           spark.sparkContext.parallelize(rows.toSeq, math.max(1, rows.size / 10000)), schema)
       } else RdfIO.readNTriples(spark, file, defaultGraph = g.value)
-    StoreEncoder.append(store, structQuads)
+    StoreEncoder.appendBatch(store, structQuads)
   }
 
   private def queryText(arg: String): String = {

@@ -1434,12 +1434,10 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
         case _ => return None
       }
     }
-    // PERSISTED stats only (manifest-loaded at open): compile must never
+    // PERSISTED or explicitly analyzed stats only: compile must never
     // launch a Spark job as a side effect (the job-free-compile invariant),
-    // and the lazy store.charSets would trigger the full characteristic-set
-    // ANALYZE (two shuffles over all quads + driver collect) right here for
-    // in-memory/appended/filtered stores — even when the shortcut then
-    // refuses. ANALYZE is paid once, at StorePersist.save.
+    // so it never runs the characteristic-set ANALYZE itself. ANALYZE is
+    // paid once, at StorePersist.save.
     val sets = store.charSetStats.getOrElse(return None)
     val pset = pids.toSet
     val supers = sets.filter(cs => pset.subsetOf(cs.preds.toSet))

@@ -40,10 +40,11 @@ object Battery {
   private val bucketComps = new ConcurrentHashMap[String, Compiler]()
   def bucketedCompiler(spark: SparkSession, dir: String): Compiler =
     bucketComps.computeIfAbsent(dir, d => {
-      // layout-versioned cache dir: a layout change must not reuse a stale
-      // on-disk store written by an earlier build
+      // layout-versioned cache dir, keyed by a digest of the full data path
+      // (two data dirs must never share a store): a layout change must not
+      // reuse a stale on-disk store written by an earlier build
       val out = "/tmp/graft_store_v2_" +
-        Integer.toHexString(d.hashCode).replace('-', 'n')
+        graft.store.StorePersist.pathDigest(new java.io.File(d).getAbsolutePath)
       // rebuild if absent OR written by a different term-codec/mapping build
       // (a stale cached store would silently decode wrong ids)
       if (graft.store.StorePersist.savedCodecVersion(out) !=

@@ -42,10 +42,11 @@ object LangPrefStore {
       .select(plain.columns.map(col): _*)
 
     val filtered = plain.unionByName(kept)
-    val (profiles, spg) = RdfStore.computeProfiles(filtered)
+    val stats = RdfStore.computeStats(filtered)
     // charSetStats are quad-set-derived: the filtered store must NOT inherit
     // the unfiltered stats (they'd answer star COUNTs over dropped quads)
-    store.copy(quads = filtered, predProfiles = profiles, spgAllInline = spg,
-      charSetStats = None)
+    store.copy(quads = filtered, predProfiles = stats.profiles,
+      spgAllInline = stats.spgAllInline, charSetStats = None,
+      knownGraphIds = Some(stats.graphIds))
   }
 }

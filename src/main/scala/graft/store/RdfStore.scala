@@ -38,51 +38,60 @@ final case class RdfStore(
       * shuffle-free and sort-free — the Spark analogue of the reference's
       * index-ordered merge joins (IDQueryPlan.swift:183-225). */
     bucketedS: Boolean = false,
-    /** Characteristic-set statistics loaded from a persisted manifest
-      * (None = not persisted; [[charSets]] computes them on demand). */
+    /** Characteristic sets (Neumann & Moerkotte, ICDE'11; reference
+      * analogue: Diomede's COUNT-from-characteristic-sets shortcut,
+      * kasei/kineo QuadStore/DiomedeQuadStore.swift:15-97): subjects
+      * partitioned by their exact predicate set, with the subject count and
+      * per-predicate quad totals of each set. Answers star-shaped COUNT
+      * queries statically — exactly, never as an estimate (the compiler
+      * refuses shapes the stats can't prove). Loaded from a persisted
+      * manifest (the ANALYZE-once contract) or set by [[analyze]]; None =
+      * not computed (StorePersist.save computes them). */
     charSetStats: Option[Seq[CharSetStat]] = None,
     /** true when a persisted manifest recorded `"charSets":null` — the
       * ANALYZE ran at save time and found the store exceeds the set cap, so
-      * the stat is DISABLED: [[charSets]] must not re-run the expensive pass
-      * only to re-discover the over-cap (every re-save of an opened over-cap
-      * store would otherwise pay two shuffles over all quads for nothing). */
-    charSetsDisabled: Boolean = false) {
+      * the stat is DISABLED: a re-save must not re-run the pass only to
+      * re-discover the over-cap. */
+    charSetsDisabled: Boolean = false,
+    /** The exact graph-id set when known (from the manifest, `encode`,
+      * `append`, `RelToRdf.load`); None = [[graphIds]] scans for it.
+      * Quad-derived, like [[predProfiles]] and [[charSetStats]]: a copy that
+      * changes `quads` must recompute or drop all three. It also witnesses
+      * that [[predProfiles]] covers every predicate (every constructor that
+      * sets it computed the profiles over the same quads), which lets
+      * `append` merge statistics instead of recomputing them. */
+    knownGraphIds: Option[Seq[Long]] = None,
+    /** Dictionary row count and max id payload when known; None = [[dict]]
+      * aggregates the dictionary for them. */
+    knownDict: Option[DictStats] = None) {
 
   def spark: SparkSession = quads.sparkSession
 
-  /** Characteristic sets (Neumann & Moerkotte, ICDE'11; reference analogue:
-    * Diomede's COUNT-from-characteristic-sets shortcut, kasei/kineo
-    * QuadStore/DiomedeQuadStore.swift:15-97): subjects partitioned by their
-    * exact predicate set, with the subject count and per-predicate quad
-    * totals of each set. Answers star-shaped COUNT queries statically —
-    * exactly, never as an estimate (the compiler refuses shapes the stats
-    * can't prove). Computed lazily once per store session; persisted stores
-    * load it from the manifest (the ANALYZE-once contract). None = the
-    * store exceeded the set cap (pathological heterogeneity) — the stat is
-    * disabled and star counts stay dynamic. */
-  @transient lazy val charSets: Option[Seq[CharSetStat]] =
-    if (charSetsDisabled) None
-    else charSetStats.map(Some(_)).getOrElse(RdfStore.computeCharSets(quads))
-
-  /** Explicit ANALYZE: compute characteristic sets NOW and attach them, so
-    * star COUNTs on this (in-memory / appended) store answer statically.
-    * The compiler only consults [[charSetStats]] — never the lazy
-    * [[charSets]] — because query COMPILE must not launch a Spark job as a
-    * side effect; this is the user-facing way to opt an un-persisted store
-    * in (persisted stores get it automatically at StorePersist.save). An
-    * over-cap result marks the stat disabled so re-saves skip the pass. */
+  /** Explicit ANALYZE: compute characteristic sets ([[CharSetStat]]) NOW
+    * and attach them, so star COUNTs on this (in-memory / appended) store
+    * answer statically. The compiler only consults [[charSetStats]] and
+    * never computes them, because query COMPILE must not launch a Spark job
+    * as a side effect; this is the user-facing way to opt an un-persisted
+    * store in (persisted stores get it automatically at StorePersist.save).
+    * An over-cap result marks the stat disabled so re-saves skip the pass. */
   def analyze(): RdfStore = {
     val computed = RdfStore.computeCharSets(quads)
     copy(charSetStats = computed, charSetsDisabled = computed.isEmpty)
   }
 
   /** Ids of all named graphs (distinct g values). Small by construction. */
-  lazy val graphIds: Seq[Long] =
-    quads.select("g").distinct().collect().map(_.getLong(0)).toSeq
+  lazy val graphIds: Seq[Long] = knownGraphIds.getOrElse(
+    quads.select("g").distinct().collect().map(_.getLong(0)).toSeq.sorted)
 
-  /** Dictionary small enough to broadcast into materialization joins
-    * (computed once per store; ~60 B/term → 500k ≈ 30 MB). */
-  lazy val termsBroadcastable: Boolean = terms.count() <= 500000L
+  /** Dictionary size; fresh ids are assigned past its `maxPayload`. */
+  lazy val dict: DictStats = knownDict.getOrElse(RdfStore.computeDict(terms))
+
+  /** Dictionary small enough to broadcast into materialization joins. */
+  lazy val termsBroadcastable: Boolean = dict.terms <= RdfStore.BroadcastTerms
+
+  /** Live quads, summed from the statistics (exact: the profiles cover every
+    * predicate of a store built by this package). */
+  def quadCount: Long = predProfiles.valuesIterator.map(_.count).sum
 
   @transient private lazy val idCache =
     new java.util.concurrent.ConcurrentHashMap[Term, Option[Long]]()
@@ -129,19 +138,38 @@ final case class PredProfile(allInline: Boolean, allNumeric: Boolean, count: Lon
   * (each matching subject contributes exactly one solution row). */
 final case class CharSetStat(preds: Seq[Long], subjects: Long, occ: Seq[Long])
 
+/** Dictionary size: row count and the largest id payload (-1 when empty).
+  * Fresh ids are assigned past `maxPayload`. */
+final case class DictStats(terms: Long, maxPayload: Long)
+
+/** The quad-derived statistics of one aggregation pass. */
+final case class QuadStats(profiles: Map[Long, PredProfile], spgAllInline: Boolean,
+    graphIds: Seq[Long])
+
 object RdfStore {
   import TermId._
   private val dictTags = Seq(TAG_BLANK, TAG_IRI, TAG_DECIMAL, TAG_DOUBLE, TAG_FLOAT,
     TAG_STRING, TAG_LANG, TAG_TYPED)
 
+  /** Dictionaries up to this many rows are broadcast into joins
+    * (~60 B/term → 500k ≈ 30 MB). */
+  val BroadcastTerms = 500000L
+
   private def isDict(c: org.apache.spark.sql.Column) =
     shiftright(c, PAYLOAD_BITS).bitwiseAND(0xFF).isin(dictTags.map(Integer.valueOf): _*)
 
-  /** One aggregation pass over the quads computing per-predicate type profiles and
-    * the global s/p/g inline flag. Cheap relative to load; at cluster scale this is
-    * the ANALYZE step persisted next to the data.
+  /** One aggregation over the dictionary: its row count and max payload. */
+  def computeDict(terms: DataFrame): DictStats = {
+    val r = terms.agg(count(lit(1)), max(col("id").bitwiseAND(PAYLOAD_MASK))).head()
+    DictStats(r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
+  }
+
+  /** One aggregation pass over the quads computing per-predicate type
+    * profiles, the global s/p/g inline flag and the graph-id set. Cheap
+    * relative to load; at cluster scale this is the ANALYZE step persisted
+    * next to the data.
     */
-  def computeProfiles(quads: DataFrame): (Map[Long, PredProfile], Boolean) = {
+  def computeStats(quads: DataFrame): QuadStats = {
     val hasDec = quads.columns.contains("odec")
     val anyDecNull =
       if (hasDec) max(when(col("onum").isNotNull && col("odec").isNull, 1)
@@ -156,7 +184,8 @@ object RdfStore {
       collect_set(shiftright(col("o"), PAYLOAD_BITS).bitwiseAND(0xFF)).as("otags"),
       anyDecNull.as("anyDecNull"),
       count_distinct(col("s")).as("nDistS"),
-      count_distinct(col("o")).as("nDistO"))
+      count_distinct(col("o")).as("nDistO"),
+      collect_set(col("g")).as("graphs"))
       .collect()
     val m = perPred.map(r =>
       r.getLong(0) -> PredProfile(r.getInt(1) == 0, r.getInt(2) == 0, r.getLong(4),
@@ -164,45 +193,47 @@ object RdfStore {
         decExact = r.getInt(2) == 0 && r.getInt(6) == 0,
         funcS = r.getLong(7) == r.getLong(4),
         distS = r.getLong(7), distO = r.getLong(8))).toMap
-    val spg = perPred.forall(_.getInt(3) == 0)
-    (m, spg)
+    QuadStats(m, perPred.forall(_.getInt(3) == 0),
+      perPred.flatMap(_.getSeq[Long](9)).distinct.sorted.toSeq)
   }
 
-  /** Characteristic-set ANALYZE pass: group quads by (s, p) with map-side
-    * combine, attach each subject's sorted predicate set, then aggregate
-    * per (set, p). Two shuffles over ANALYZE-time data — the standard
-    * cluster-scale way to build this stat (the set count is bounded by the
-    * schema's predicate-combination diversity, not by data volume).
+  /** Characteristic-set ANALYZE pass, one action: group quads by (s, p),
+    * then by subject into its sorted predicate set with the aligned
+    * per-predicate quad counts; each partition then sums its subjects per
+    * set (subject count, element-wise counts), and the collected partial
+    * sums are merged. On a subject-bucketed scan neither grouping needs an
+    * exchange, so the pass is one Spark job. The set count is bounded by
+    * the schema's predicate-combination diversity, not by data volume.
     * None when the store holds more than `maxSets` distinct sets — a
-    * pathologically heterogeneous corpus where the stat would be
-    * driver-resident dead weight (Neumann & Moerkotte cap it the same way). */
+    * pathologically heterogeneous corpus where the stat would be resident
+    * dead weight (Neumann & Moerkotte cap it the same way); a partition
+    * stops at `maxSets + 1` sets, so such a corpus is never collected. Sets are sorted by predicate ids, so equal
+    * stores give equal results. */
   def computeCharSets(quads: DataFrame,
       maxSets: Int = 4096): Option[Seq[CharSetStat]] = {
-    val sp = quads.groupBy("s", "p").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val subjSet = sp.groupBy("s")
-        .agg(sort_array(collect_list(col("p"))).as("preds"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val bySet = sp.join(subjSet, "s")
-        .groupBy("preds", "p").agg(sum("c").as("occ"))
-      val grouped = subjSet.groupBy("preds").agg(count(lit(1)).as("n"))
-      // cap BEFORE collecting: a pathological corpus must not be collected
-      // onto the driver just to discover it exceeds the cap
-      val overCap = grouped.limit(maxSets + 1).count() > maxSets
-      val out = if (overCap) None
-      else {
-        val subjects = grouped.collect()
-        val occ = bySet.collect()
-          .map(r => (r.getSeq[Long](0), r.getLong(1)) -> r.getLong(2)).toMap
-        Some(subjects.map { r =>
-          val preds = r.getSeq[Long](0)
-          CharSetStat(preds, r.getLong(1), preds.map(p => occ((preds, p))))
-        }.toSeq)
+    type Acc = scala.collection.mutable.HashMap[Seq[Long], (Long, Array[Long])]
+    def add(m: Acc, preds: Seq[Long], n: Long, occ: Array[Long]): Unit =
+      m.get(preds) match {
+        case Some((n0, occ0)) =>
+          m(preds) = (n0 + n, occ0.indices.map(i => occ0(i) + occ(i)).toArray)
+        case None => m(preds) = (n, occ)
       }
-      subjSet.unpersist()
-      out
-    } finally sp.unpersist()
+    val parts = quads.groupBy("s", "p").agg(count(lit(1)).as("c"))
+      .groupBy("s").agg(sort_array(collect_list(struct(col("p"), col("c")))).as("pc"))
+      .select(col("pc.p"), col("pc.c"))
+      .rdd.mapPartitions { it =>
+        val m: Acc = new Acc()
+        while (it.hasNext && m.size <= maxSets) {
+          val r = it.next()
+          add(m, r.getSeq[Long](0), 1L, r.getSeq[Long](1).toArray)
+        }
+        Iterator(m)
+      }.collect()
+    val all: Acc = new Acc()
+    for (m <- parts; (preds, (n, occ)) <- m if all.size <= maxSets) add(all, preds, n, occ)
+    if (all.size > maxSets) None
+    else Some(all.toSeq.map { case (preds, (n, occ)) => CharSetStat(preds, n, occ.toSeq) }
+      .sortBy(_.preds)(Ordering.Implicits.seqOrdering[Seq, Long]))
   }
 }
 
@@ -214,115 +245,155 @@ object StoreEncoder {
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType, nullable = false) +: TermRow.schema.fields.toSeq)
 
-  /** Encode a DataFrame of struct-space quads (columns s,p,o,g of [[TermRow.schema]])
-    * into an [[RdfStore]]. Dictionary ids are assigned with a distinct+zipWithIndex
-    * pass (one extra shuffle at load; deterministic within a build).
-    */
-  def encode(structQuads: DataFrame, scheme: IriScheme): RdfStore = {
-    val spark = structQuads.sparkSession
-    val inl = udf { (r: org.apache.spark.sql.Row) =>
-      if (r == null) None else scheme.tryInline(TermRow.fromRow(r)).map(Long.box)
-    }
-    val withInline = structQuads
-      .withColumn("sid", inl(col("s"))).withColumn("pid", inl(col("p")))
-      .withColumn("oid", inl(col("o"))).withColumn("gid", inl(col("g")))
-      .localCheckpoint()
-
-    val positions = Seq("s", "p", "o", "g")
-    val dictViews = positions.map(pos =>
-        withInline.filter(col(pos + "id").isNull).select(col(pos).as("t")))
-      .reduce(_ unionByName _).distinct()
-
-    val terms = dictFromViews(dictViews, scheme)
-
-    var q = withInline
-    for (pos <- positions) {
-      val d = terms.select(struct(col("kind"), col("lex"), col("dt"), col("lang"),
-        col("num")).as("t"), col("id").as("__did"))
-      q = q.join(d, q(pos) <=> d("t"), "left")
-        .withColumn(pos + "id", coalesce(col(pos + "id"), col("__did")))
-        .drop("t", "__did")
-    }
-    val quads = q.select(
-      col("sid").as("s"), col("pid").as("p"), col("oid").as("o"), col("gid").as("g"),
-      col("o.num").as("onum"),
-      // exact-decimal companion: the lexical form parsed at the engine's
-      // xsd:decimal working precision; NULL (unparseable / out of range)
-      // disables the predicate's decExact flag and with it the fast path
-      col("o.lex").try_cast(org.apache.spark.sql.types.DecimalType(38, 18))
-        .as("odec"))
-      // RDF graphs are SETS of triples: duplicate input quads collapse at
-      // load (ids preserve term identity incl. lexical form, so id-tuple
-      // dedup IS term dedup; onum/odec are functions of o). One exchange at
-      // load time, same family as the dictionary distinct above.
-      .dropDuplicates("s", "p", "o", "g")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val graphs = quads.select("g").distinct().collect().map(_.getLong(0)).toSeq
-    val (profiles, spg) = RdfStore.computeProfiles(quads)
-    RdfStore(quads, terms, scheme, graphs, profiles, spg)
+  private val quadsSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq("s", "p", "o", "g").map(StructField(_, LongType)) ++ Seq(
+      StructField("onum", DoubleType), StructField("odec", DecimalType(38, 18))))
   }
 
+  private val positions = Seq("s", "p", "o", "g")
+
+  private def termStruct: org.apache.spark.sql.Column =
+    struct(col("kind"), col("lex"), col("dt"), col("lang"), col("num"))
+
+  /** A store with no quads and no terms, its statistics known — no job. */
+  def empty(spark: SparkSession, scheme: IriScheme): RdfStore = {
+    def none(schema: org.apache.spark.sql.types.StructType) =
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        schema)
+    RdfStore(none(quadsSchema), none(termsSchema), scheme, Nil, spgAllInline = true,
+      charSetStats = Some(Nil), knownGraphIds = Some(Nil),
+      knownDict = Some(DictStats(0L, -1L)))
+  }
+
+  /** Encode a DataFrame of struct-space quads (columns s,p,o,g of [[TermRow.schema]])
+    * into an [[RdfStore]]: an [[append]] onto the [[empty]] store. */
+  def encode(structQuads: DataFrame, scheme: IriScheme): RdfStore =
+    append(empty(structQuads.sparkSession, scheme), structQuads)
+
   /** Bulk append (the reference's only mutation: `MutableQuadStoreProtocol
-    * .load(version:quads:)`, QuadStore.swift:141-144,170-258): encode new quads
-    * reusing the existing dictionary, assign fresh ids past the current maximum
-    * for genuinely new terms, and return a new store over the unioned frames.
+    * .load(version:quads:)`, QuadStore.swift:141-144,170-258), batch-sized:
+    *
+    *  1. the batch dictionary — every term the batch needs, looked up in
+    *     the existing dictionary by one grouping — is materialized once;
+    *     terms the store lacks get fresh ids past the current maximum, by a
+    *     deterministic numbering of the materialized rows, so every use sees
+    *     the same ids;
+    *  2. the batch's new quads are encoded against that small frame, deduped
+    *     within the batch and against the store (RDF graphs are sets; ids
+    *     preserve term identity incl. lexical form, so id-tuple dedup IS term
+    *     dedup), and materialized once;
+    *  3. statistics merge: untouched predicates keep their profiles, touched
+    *     ones are recomputed in one aggregation over their quads plus the
+    *     batch (on a persisted store the predicate filter prunes to their
+    *     `p=` directories). A base whose statistics are not known to be
+    *     complete gets a full recompute.
+    *
+    * The batch's frames are materialized lazily: the first job that reads
+    * one (the next step's) computes it, so materializing costs no job of
+    * its own. The returned store reads `store`'s frames, two local
+    * checkpoints (freed by the context cleaner once the store is dropped)
+    * and the cached batch quads (see [[appendBatch]]).
     */
-  def append(store: RdfStore, structQuads: DataFrame): RdfStore = {
+  def append(store: RdfStore, structQuads: DataFrame): RdfStore =
+    appendBatch(store, structQuads)._1
+
+  /** [[append]], also returning the batch's new quads, which the appended
+    * store caches: a caller that saves the store and then drops it
+    * unpersists them. */
+  def appendBatch(store: RdfStore, structQuads: DataFrame): (RdfStore, DataFrame) = {
     val spark = structQuads.sparkSession
     val scheme = store.scheme
     val inl = udf { (r: org.apache.spark.sql.Row) =>
       if (r == null) None else scheme.tryInline(TermRow.fromRow(r)).map(Long.box)
     }
-    val withInline = structQuads
-      .withColumn("sid", inl(col("s"))).withColumn("pid", inl(col("p")))
-      .withColumn("oid", inl(col("o"))).withColumn("gid", inl(col("g")))
-      .localCheckpoint()
-    val positions = Seq("s", "p", "o", "g")
+    val withInline = positions.foldLeft(structQuads)((df, pos) =>
+      df.withColumn(pos + "id", inl(col(pos)))).localCheckpoint(eager = false)
+
+    // 1. batch dictionary: (t, id) for each distinct term the batch needs,
+    // id null where the store lacks it; one grouping over the batch's terms
+    // and the existing dictionary (whose terms are unique)
     val needed = positions.map(pos =>
         withInline.filter(col(pos + "id").isNull && col(pos).isNotNull)
-          .select(col(pos).as("t")))
-      .reduce(_ unionByName _).distinct()
-    val existing = store.terms.select(
-      struct(col("kind"), col("lex"), col("dt"), col("lang"), col("num")).as("t"))
-    val fresh = needed.join(existing, needed("t") <=> existing("t"), "left_anti")
-    val maxPayload = store.terms
-      .agg(max(col("id").bitwiseAND(TermId.PAYLOAD_MASK))).collect()
-      .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(-1L)
-    val freshTerms = dictFromViews(fresh, scheme, offset = maxPayload + 1)
-    val allTerms = store.terms.unionByName(freshTerms)
-    var q = withInline
-    val d = allTerms.select(struct(col("kind"), col("lex"), col("dt"), col("lang"),
-      col("num")).as("t"), col("id").as("__did"))
-    for (pos <- positions) {
-      q = q.join(d, q(pos) <=> d("t"), "left")
+          .select(col(pos).as("t"), lit(null).cast("long").as("id"), lit(true).as("need")))
+      .reduce(_ unionByName _)
+    val existing = store.terms.select(termStruct.as("t"), col("id"), lit(false).as("need"))
+    val looked = needed.unionByName(existing).groupBy("t")
+      .agg(max("id").as("id"), max("need").as("need"))
+      .filter(col("need")).select("t", "id").localCheckpoint(eager = false)
+    // materializes `looked`: per partition (rows, fresh rows); fresh ids
+    // continue past the max
+    val sizes = looked.rdd.mapPartitions { it =>
+      var (n, fresh) = (0L, 0L)
+      it.foreach { r => n += 1; if (r.isNullAt(1)) fresh += 1 }
+      Iterator((n, fresh))
+    }.collect()
+    val firstFresh = store.dict.maxPayload + 1
+    val offsets = sizes.map(_._2).scanLeft(firstFresh)(_ + _)
+    val numbered = looked.rdd.mapPartitionsWithIndex { (i, it) =>
+      var next = offsets(i)
+      it.map { r =>
+        if (!r.isNullAt(1)) r
+        else {
+          val id = make(dictTag(TermRow.fromRow(r.getStruct(0))), next)
+          next += 1
+          org.apache.spark.sql.Row(r.get(0), id)
+        }
+      }
+    }
+    val batchDict = spark.createDataFrame(numbered, looked.schema)
+    val freshCount = offsets.last - firstFresh
+    val freshTerms = batchDict.filter(col("id").bitwiseAND(PAYLOAD_MASK) >= firstFresh)
+      .select(col("id") +: TermRow.schema.fieldNames.map(f => col("t." + f).as(f)): _*)
+
+    // 2. the batch's new quads, encoded against the batch dictionary
+    val d0 = batchDict.select(col("t"), col("id").as("__did"))
+    val d = if (sizes.map(_._1).sum <= RdfStore.BroadcastTerms) broadcast(d0) else d0
+    val encoded = positions.foldLeft(withInline) { (q, pos) =>
+      q.join(d, q(pos) <=> d("t"), "left")
         .withColumn(pos + "id", coalesce(col(pos + "id"), col("__did")))
         .drop("t", "__did")
     }
-    val newQuads = q.select(col("sid").as("s"), col("pid").as("p"),
+    val batchQuads = encoded.select(col("sid").as("s"), col("pid").as("p"),
       col("oid").as("o"), col("gid").as("g"), col("o.num").as("onum"),
+      // exact-decimal companion: the lexical form parsed at the engine's
+      // xsd:decimal working precision; NULL (unparseable / out of range)
+      // disables the predicate's decExact flag and with it the fast path
       col("o.lex").try_cast(org.apache.spark.sql.types.DecimalType(38, 18))
         .as("odec"))
-      // set semantics on insert (same contract as encode's load-time dedup):
-      // dedup WITHIN the batch, then drop quads already present — an
-      // anti-join keyed on the id tuple, so the cost scales with the BATCH,
-      // not with a full-store re-shuffle
       .dropDuplicates("s", "p", "o", "g")
-      .join(store.quads.select("s", "p", "o", "g"),
-        Seq("s", "p", "o", "g"), "left_anti")
-    val quads = store.quads.unionByName(newQuads)
-    val graphs = quads.select("g").distinct().collect().map(_.getLong(0)).toSeq
-    val (profiles, spg) = RdfStore.computeProfiles(quads)
-    RdfStore(quads, allTerms, scheme, graphs, profiles, spg)
+      .join(store.quads.select("s", "p", "o", "g"), Seq("s", "p", "o", "g"), "left_anti")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+    // 3. statistics
+    val quads = store.quads.unionByName(batchQuads)
+    val stats =
+      if (store.knownGraphIds.isEmpty) RdfStore.computeStats(quads)
+      else if (store.predProfiles.isEmpty) RdfStore.computeStats(batchQuads)
+      else {
+        val touched = batchQuads.select("p").rdd
+          .mapPartitions(_.map(_.getLong(0)).toSet.iterator).collect().distinct
+        if (touched.isEmpty) QuadStats(store.predProfiles, store.spgAllInline, Nil)
+        else {
+          val t = RdfStore.computeStats(store.quads
+            .filter(col("p").isin(touched.toSeq: _*)).unionByName(batchQuads))
+          QuadStats(store.predProfiles ++ t.profiles, store.spgAllInline && t.spgAllInline,
+            t.graphIds)
+        }
+      }
+    val graphs = (store.knownGraphIds.getOrElse(Nil) ++ stats.graphIds).distinct.sorted
+    (RdfStore(quads, store.terms.unionByName(freshTerms), scheme, graphs, stats.profiles,
+      stats.spgAllInline, knownGraphIds = Some(graphs),
+      knownDict = Some(DictStats(store.dict.terms + freshCount,
+        if (freshCount > 0) offsets.last - 1 else store.dict.maxPayload))), batchQuads)
   }
 
   /** Assign dictionary ids to distinct struct-space term views. */
-  def dictFromViews(dictViews: DataFrame, scheme: IriScheme,
-      offset: Long = 0L): DataFrame = {
+  def dictFromViews(dictViews: DataFrame, scheme: IriScheme): DataFrame = {
     val spark = dictViews.sparkSession
     val rdd = dictViews.rdd.zipWithIndex().map { case (r, idx) =>
       val t = TermRow.fromRow(if (r.schema.fields.length == 1) r.getStruct(0) else r)
-      val tg = dictTag(t)
-      org.apache.spark.sql.Row.fromSeq(make(tg, offset + idx) +: TermRow.toRow(t).toSeq)
+      org.apache.spark.sql.Row.fromSeq(make(dictTag(t), idx) +: TermRow.toRow(t).toSeq)
     }
     spark.createDataFrame(rdd, termsSchema)
   }

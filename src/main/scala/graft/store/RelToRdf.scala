@@ -216,8 +216,9 @@ object RelToRdf {
 
     val graphs = testSpecs.filter(s => new java.io.File(s"$dir/${s.name}.parquet").exists())
       .map(s => wkId(s"urn:g:${s.name}"))
-    val (profiles, spg) = RdfStore.computeProfiles(quads)
-    RdfStore(quads, terms, scheme, graphs, profiles, spg)
+    val stats = RdfStore.computeStats(quads)
+    RdfStore(quads, terms, scheme, graphs, stats.profiles, stats.spgAllInline,
+      knownGraphIds = Some(stats.graphIds), knownDict = Some(RdfStore.computeDict(terms)))
   }
 
   /** Session-level cache of loaded stores, keyed by data directory. */

@@ -15,6 +15,16 @@ import graft.model.IriScheme
   *   <dir>/meta.json default graphs, per-predicate statistics, layout + schema
   * }}}
   *
+  * `meta.json` keys: `defaultGraphs`, `namedGraphs`, `spgAllInline`,
+  * `profiles` (per-predicate [[PredProfile]]s), `charSets` (characteristic
+  * sets; `null` = over the set cap), `graphIds` (the exact graph-id set),
+  * `termCount` and `maxPayload` (dictionary rows and largest id payload, -1
+  * when empty), `buckets`, `termsBuckets`, `layout`, `schemaDDL`,
+  * `termsSchemaDDL` and `codecVersion`. With `graphIds`, `termCount` and
+  * `maxPayload` an opened store answers [[RdfStore.graphIds]],
+  * [[RdfStore.termsBroadcastable]] and `append`'s id offset with no Spark
+  * job; manifests without them fall back to a scan.
+  *
   * The layout is the Spark analogue of the reference's index orders
   * (`availableOrders`, QuadStore.swift:69-88; SQLite keeps a (g,p,o,s) index,
   * SQLiteQuadStore.swift:100-116): a bound-predicate scan prunes to its
@@ -34,12 +44,15 @@ object StorePersist {
     * can never collide onto one catalog entry and drop each other's bucket
     * spec (a 32-bit `dir.hashCode` could). */
   def quadsTable(dir: String): String = {
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
     val san = dir.replaceAll("[^A-Za-z0-9]+", "_")
       .replaceAll("^_+|_+$", "").takeRight(40)
-    s"graft_quads_${san}_$sha"
+    s"graft_quads_${san}_${pathDigest(dir)}"
   }
+
+  /** 48-bit SHA-256 prefix of a path, in hex: a collision-safe cache key. */
+  def pathDigest(path: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(path.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
 
   /** Catalog table name for the id-bucketed terms dictionary of `dir`. */
   def termsTable(dir: String): String = quadsTable(dir) + "_terms"
@@ -102,13 +115,18 @@ object StorePersist {
     }.mkString("[", ",", "]")
     val named = store.namedGraphs
       .map(ns => ns.mkString("[", ",", "]")).getOrElse("null")
-    // characteristic sets: computed here (the ANALYZE-once point) and
-    // persisted, so open() answers star COUNTs statically with no extra
-    // pass. An over-cap (or already-disabled) store writes an EXPLICIT
-    // "charSets":null marker — distinguishable from "never computed" (key
-    // absent, pre-stat stores), so re-opening and re-saving an over-cap
-    // store never re-runs the pass just to re-discover the cap.
-    val charSets = store.charSets.map(_.map(cs =>
+    // characteristic sets: computed here (the ANALYZE-once point), from the
+    // subject-bucketed table just written so its (s, p) and subject
+    // groupings need no exchange, and persisted, so open() answers star
+    // COUNTs statically with no extra pass. An over-cap (or
+    // already-disabled) store writes an EXPLICIT "charSets":null marker —
+    // distinguishable from "never computed" (key absent, pre-stat stores),
+    // so re-opening and re-saving an over-cap store never re-runs the pass
+    // just to re-discover the cap.
+    val sets = if (store.charSetsDisabled) None
+      else store.charSetStats.map(Some(_))
+        .getOrElse(RdfStore.computeCharSets(spark.table(tbl)))
+    val charSets = sets.map(_.map(cs =>
         s"""{"preds":[${cs.preds.mkString(",")}],"subjects":${cs.subjects},""" +
           s""""occ":[${cs.occ.mkString(",")}]}""")
       .mkString("[", ",", "]"))
@@ -135,9 +153,39 @@ object StorePersist {
          |"schemaDDL":"$dataCols",
          |"termsSchemaDDL":"$termCols",
          |"charSets":${charSets.getOrElse("null")},
+         |"graphIds":${store.graphIds.mkString("[", ",", "]")},
+         |"termCount":${store.dict.terms},
+         |"maxPayload":${store.dict.maxPayload},
          |"profiles":$profiles}""".stripMargin
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "meta.json"), meta)
   }
+
+  /** Save `store` as the store at `dir`, crash-safely: write a sibling
+    * directory, then swap it in. `store`'s frames may read `dir` itself (an
+    * appended or re-analyzed store): the write reads `dir` and writes the
+    * sibling, so there is no read-write conflict and nothing to checkpoint,
+    * and a failure mid-save leaves the original store untouched. */
+  def replace(store: RdfStore, dir0: String): Unit = {
+    val spark = store.spark
+    val dir = dir0.stripSuffix("/")
+    val (tmp, old) = (dir + ".save-tmp", dir + ".save-old")
+    deleteDir(tmp); deleteDir(old)
+    save(store, tmp)
+    val p = java.nio.file.Paths.get(_: String)
+    if (java.nio.file.Files.exists(p(dir))) java.nio.file.Files.move(p(dir), p(old))
+    java.nio.file.Files.move(p(tmp), p(dir))
+    deleteDir(old)
+    // drop the session-catalog registrations that now point at moved paths
+    // (the save registered tmp's tables; dir's tables cache the PRE-swap
+    // file listing) so a later open() in this session re-registers against
+    // the swapped-in files
+    for (d <- Seq(tmp, dir); t <- Seq(quadsTable(d), termsTable(d)))
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.catalog.refreshByPath(dir)
+  }
+
+  private def deleteDir(dir: String): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
 
   /** Reopen a saved store. `cache` persists both tables in memory (right for
     * repeated-query benchmarks at small SF); pass false at cluster scale so
@@ -215,7 +263,9 @@ object StorePersist {
       namedGraphs = meta.namedGraphs,
       bucketedS = meta.buckets > 0,
       charSetStats = meta.charSets,
-      charSetsDisabled = meta.csDisabled)
+      charSetsDisabled = meta.csDisabled,
+      knownGraphIds = meta.graphIds,
+      knownDict = meta.dict)
   }
 
   // minimal hand-rolled JSON decode for the manifest (no extra dependencies)
@@ -223,7 +273,8 @@ object StorePersist {
       namedGraphs: Option[Seq[Long]], profiles: Map[Long, PredProfile],
       buckets: Int = 0, layout: String = "", schemaDDL: String = "",
       charSets: Option[Seq[CharSetStat]] = None, csDisabled: Boolean = false,
-      termsBuckets: Int = 0, termsSchemaDDL: String = "")
+      termsBuckets: Int = 0, termsSchemaDDL: String = "",
+      graphIds: Option[Seq[Long]] = None, dict: Option[DictStats] = None)
 
   private def ujsonLite(s: String): Meta = {
     def arr(name: String): Seq[Long] = {
@@ -270,8 +321,12 @@ object StorePersist {
           g.split(',').filter(_.trim.nonEmpty).map(_.trim.toLong).toSeq
         CharSetStat(longs(m.group(1)), m.group(2).toLong, longs(m.group(3)))
       }.toSeq)
+    val graphIds = if (s.contains("\"graphIds\":")) Some(arr("graphIds")) else None
+    def long(name: String) = ("\"" + name + "\":(-?\\d+)").r.findFirstMatchIn(s)
+      .map(_.group(1).toLong)
+    val dict = for (n <- long("termCount"); m <- long("maxPayload")) yield DictStats(n, m)
     Meta(arr("defaultGraphs"), s.contains("\"spgAllInline\":true"), named, profiles,
       buckets, layout, schemaDDL, charSets, csDisabled, termsBuckets,
-      termsSchemaDDL)
+      termsSchemaDDL, graphIds, dict)
   }
 }

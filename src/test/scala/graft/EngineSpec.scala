@@ -344,17 +344,21 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("compile() launches zero Spark jobs (plan construction is pure)") {
-    // warm the store's lazy driver-side statistics first — they legitimately
-    // run jobs once per store, not per compile
-    store.graphIds; store.termsBroadcastable
+    // a store reopened from its manifest knows its graph ids and dictionary
+    // size, so no warm-up: the first compile on it runs no job either
+    val dir = java.nio.file.Files.createTempDirectory("graft_pure").toString + "/store"
+    StorePersist.save(store, dir)
+    val reopened = StorePersist.open(spark, dir, cache = false)
     @volatile var jobs = 0
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs += 1
     }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
+      val comp = new Compiler(reopened, ExprEval.Ctx(nowEpochUs = 1700000000000000L))
       // BIND(EXISTS) with no shared vars previously ran isEmpty at compile
       comp.compile(AExtend(
         BGP(Seq(QuadPattern(V("c"), p("customer", "c_name"), V("n")))),
@@ -366,7 +370,8 @@ class EngineSpec extends AnyFunSuite {
           QuadPattern(V("l"), p("lineitem", "l_quantity"), V("q")))),
         Seq("rf"), Seq(AggSpec("s", "sum", Some(EVar("q"))))),
         Seq(SortKey(EVar("rf")))), 0, 5))
-      Thread.sleep(1000) // let any stray job-start events drain the bus
+      assert(reopened.graphIds.nonEmpty && reopened.termsBroadcastable)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
       assert(jobs == 0, s"compile() ran $jobs Spark jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
