@@ -20,7 +20,10 @@ import org.apache.spark.sql.SparkSession
   *    hitting one pass cannot inflate the recorded number;
   *  - the full result, including per-pass times, per-query diagnostics, and
   *    entries that stdout-tail capture may truncate, is also written to
-  *    BENCH_LOCAL.json.
+  *    BENCH_LOCAL.json;
+  *  - a query that throws, in the warm-up or a timed pass, is a failure:
+  *    it is printed to stderr and listed under "failed" with its error, its
+  *    times are left out, and the process exits with status 1.
   */
 object Bench {
   private def gcMs: Long = {
@@ -62,21 +65,34 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => only.forall(_.contains(kv._1)))
+    // query name -> its first error, prefixed by the pass it failed in. A
+    // StackOverflowError (Catalyst recursing on a deep plan) is a failed
+    // query too, not the end of the run
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def ran(name: String, pass: String)(f: => Unit): Boolean =
+      try { f; true } catch {
+        case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
+          val err = s"$pass: ${e.getClass.getName}: ${e.getMessage}"
+          System.err.println(s"FAILED $name $err")
+          failures.getOrElseUpdate(name, err)
+          false
+      }
     // pay the store load once up front so per-query numbers measure the queries
     graft.queries.Battery.compiler(spark, sfDir)
     if (doWarm && new java.io.File(warmDir).exists()) {
       graft.queries.Battery.compiler(spark, warmDir)
-      for ((_, fn) <- names) {
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      for ((name, fn) <- names) {
+        ran(name, "warm-up")(fn(spark, warmDir).count())
         graft.pipeline.ScratchCache.drain()
       }
       System.gc()
     }
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
-    def onePass(): Seq[(String, Double, Long, Long, Double)] = names.map { case (name, fn) =>
+    // one timed pass; a failed query yields no timing
+    def onePass(pass: Int) = names.map { case (name, fn) =>
       val la0 = loadAvg
       val (g0, j0, t0) = (gcMs, jitMs, System.nanoTime())
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val ok = ran(name, s"pass $pass")(fn(spark, sfDir).count())
       val sec = (System.nanoTime() - t0) / 1e9
       val (gd, jd) = (gcMs - g0, jitMs - j0)
       val la = math.max(la0, loadAvg)
@@ -85,14 +101,20 @@ object Bench {
       // now rather than during the next query's timed region
       graft.pipeline.ScratchCache.drain()
       System.gc()
-      (name, sec, gd, jd, la)
+      if (ok) Some((name, sec, gd, jd, la)) else None
     }
     val loadStart = loadAvg
-    val all: Seq[Seq[(String, Double, Long, Long, Double)]] = (1 to passes).map(_ => onePass())
+    val timed = (1 to passes).map(onePass)
     val loadEnd = loadAvg
-    // per query: the fastest pass — a transient external burst in one pass
-    // cannot inflate the recorded number
-    val results = names.indices.map(i => all.map(_(i)).minBy(_._2))
+    // per query that never failed: the fastest pass — a transient external
+    // burst in one pass cannot inflate the recorded number
+    val kept = names.indices.filterNot(i => failures.contains(names(i)._1))
+    val all = timed.map(p => kept.map(p(_).get))
+    val results = kept.indices.map(i => all.map(_(i)).minBy(_._2))
+    val failedJson = failures.map { case (k, e) =>
+      s"\"${graft.sources.SparqlResults.jsonEscape(k)}\":" +
+        s"\"${graft.sources.SparqlResults.jsonEscape(e)}\"" }
+      .mkString("{", ",", "}")
     // the driver captures only a bounded stdout tail: the printed line must
     // stay well under that budget or its head (with "metric") gets clipped
     // and the whole round's bench fails to parse (BENCH_r05.json). 3-decimal
@@ -134,7 +156,7 @@ object Bench {
     val line =
       s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":$qs,""" +
       s""""load":[${ld(loadStart)},${ld(loadEnd)}],"load_idle":${ld(loadIdle)},""" +
-      s""""run_contaminated":$runContaminated,""" +
+      s""""run_contaminated":$runContaminated,"failed":$failedJson,""" +
       s""""sf":"$sfDir"}"""
     println(line)
     // The driver captures only a bounded (2000-char) stdout TAIL: with 151
@@ -153,6 +175,7 @@ object Bench {
     val compact =
       s"""{"metric":"total","value":${ms3(total)},"unit":"sec",""" +
       s""""queries":$famTotals,"n_queries":${results.size},""" +
+      s""""n_failed":${failures.size},""" +
       s""""load":[${ld(loadStart)},${ld(loadEnd)}],"load_idle":${ld(loadIdle)},""" +
       s""""run_contaminated":$runContaminated,"cpus":$cpus,""" +
       s""""sf":"$sfDir"}"""
@@ -161,12 +184,13 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,""" +
       s""""gc_jit_load":$diag,"pass_load_milli":$perPassLoad,""" +
       s""""load":[$loadStart,$loadEnd],"load_idle":$loadIdle,""" +
-      s""""run_contaminated":$runContaminated,""" +
+      s""""run_contaminated":$runContaminated,"failed":$failedJson,""" +
       s""""passes":$perPass,"warmup":$doWarm,"cpus":$cpus,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("BENCH_LOCAL.json")
       try w.println(full) finally w.close()
     } catch { case _: Exception => () }
     spark.stop()
+    if (failures.nonEmpty) sys.exit(1)
   }
 }

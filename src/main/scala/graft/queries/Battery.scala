@@ -42,8 +42,10 @@ object Battery {
     bucketComps.computeIfAbsent(dir, d => {
       // layout-versioned cache dir, keyed by a digest of the full data path
       // (two data dirs must never share a store): a layout change must not
-      // reuse a stale on-disk store written by an earlier build
-      val out = "/tmp/graft_store_v2_" +
+      // reuse a stale on-disk store written by an earlier build. The prefix
+      // names the layout: bump it when the layout changes under an
+      // unchanged codec version (v3: bucket count derived from the quad count)
+      val out = "/tmp/graft_store_v3_" +
         graft.store.StorePersist.pathDigest(new java.io.File(d).getAbsolutePath)
       // rebuild if absent OR written by a different term-codec/mapping build
       // (a stale cached store would silently decode wrong ids)

@@ -22,7 +22,7 @@ object SparqlResults {
 
   // ---- JSON ------------------------------------------------------------------
 
-  private def jsonEscape(s: String): String = s.flatMap {
+  private[graft] def jsonEscape(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

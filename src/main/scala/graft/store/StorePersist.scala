@@ -11,19 +11,27 @@ import graft.model.IriScheme
   * {{{
   *   <dir>/quads/    parquet, directory-partitioned by p and subject-bucketed:
   *                   partitionBy("p") + bucketBy(n,"s") + sortBy("s","o")
-  *   <dir>/terms/    parquet dictionary, repartitioned+sorted by id
+  *   <dir>/terms/    parquet dictionary, id-bucketed: bucketBy(n,"id") + sortBy("id")
   *   <dir>/meta.json default graphs, per-predicate statistics, layout + schema
   * }}}
+  *
+  * Both tables have the same bucket count `n`, one file per bucket (per
+  * `p=` directory for the quads). `save` derives `n` from the store's quad
+  * count: `clamp(ceil(quads / 32768), 1, 32)` ([[bucketsFor]]), so a store
+  * of up to 32,768 quads is one file per directory and stores from about
+  * 1 M quads up keep 32 buckets. Its `buckets` argument forces a count for
+  * that one save; [[replace]] (`load`, `analyze`) derives it again.
   *
   * `meta.json` keys: `defaultGraphs`, `namedGraphs`, `spgAllInline`,
   * `profiles` (per-predicate [[PredProfile]]s), `charSets` (characteristic
   * sets; `null` = over the set cap), `graphIds` (the exact graph-id set),
   * `termCount` and `maxPayload` (dictionary rows and largest id payload, -1
-  * when empty), `buckets`, `termsBuckets`, `layout`, `schemaDDL`,
-  * `termsSchemaDDL` and `codecVersion`. With `graphIds`, `termCount` and
-  * `maxPayload` an opened store answers [[RdfStore.graphIds]],
-  * [[RdfStore.termsBroadcastable]] and `append`'s id offset with no Spark
-  * job; manifests without them fall back to a scan.
+  * when empty), `buckets` and `termsBuckets` (the bucket counts `save`
+  * wrote; `open` re-registers whatever count it finds, 0 = not bucketed),
+  * `layout`, `schemaDDL`, `termsSchemaDDL` and `codecVersion`. With
+  * `graphIds`, `termCount` and `maxPayload` an opened store answers
+  * [[RdfStore.graphIds]], [[RdfStore.termsBroadcastable]] and `append`'s id
+  * offset with no Spark job; manifests without them fall back to a scan.
   *
   * The layout is the Spark analogue of the reference's index orders
   * (`availableOrders`, QuadStore.swift:69-88; SQLite keeps a (g,p,o,s) index,
@@ -81,8 +89,22 @@ object StorePersist {
       .map(_.group(1).toInt).getOrElse(0)
   }
 
-  def save(store: RdfStore, dir: String, buckets: Int = 32): Unit = {
+  private val QuadsPerBucket = 32768L
+  private val MaxBuckets = 32L
+
+  /** The bucket count `save` derives for a store of `quads` quads:
+    * `clamp(ceil(quads / 32768), 1, 32)`. A small store writes one file per
+    * predicate directory and one dictionary file, and every write, charSets
+    * pass and bucketed scan of it runs one task per directory; a store of
+    * about 1 M quads or more gets 32 buckets. */
+  def bucketsFor(quads: Long): Int =
+    ((quads + QuadsPerBucket - 1) / QuadsPerBucket).max(1L).min(MaxBuckets).toInt
+
+  /** Write `store` at `dir`, with [[bucketsFor]] of [[RdfStore.quadCount]]
+    * (from the statistics: no Spark job) buckets, or `buckets` if positive. */
+  def save(store: RdfStore, dir: String, buckets: Int = 0): Unit = {
     val spark = store.spark
+    val n = if (buckets > 0) buckets else bucketsFor(store.quadCount)
     val tbl = quadsTable(dir)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     // p-partitioned, subject-bucketed layout: repartition by the SAME hash the
@@ -91,8 +113,8 @@ object StorePersist {
     // HashPartitioning(s, n) + per-file s-sortedness, so star joins stay
     // shuffle-free after pruning
     store.quads
-      .repartition(buckets, col("s"))
-      .write.partitionBy(PartitionCol).bucketBy(buckets, "s").sortBy("s", "o")
+      .repartition(n, col("s"))
+      .write.partitionBy(PartitionCol).bucketBy(n, "s").sortBy("s", "o")
       .option("path", s"$dir/quads")
       .mode(SaveMode.Overwrite).saveAsTable(tbl)
     // id-bucketed dictionary: every late-materialization join probes the
@@ -103,8 +125,8 @@ object StorePersist {
     val ttbl = termsTable(dir)
     spark.sql(s"DROP TABLE IF EXISTS $ttbl")
     store.terms
-      .repartition(buckets, col("id"))
-      .write.bucketBy(buckets, "id").sortBy("id")
+      .repartition(n, col("id"))
+      .write.bucketBy(n, "id").sortBy("id")
       .option("path", s"$dir/terms")
       .mode(SaveMode.Overwrite).saveAsTable(ttbl)
     val profiles = store.predProfiles.map { case (p, pr) =>
@@ -146,8 +168,8 @@ object StorePersist {
       s"""{"defaultGraphs":${store.defaultGraphs.mkString("[", ",", "]")},
          |"spgAllInline":${store.spgAllInline},
          |"namedGraphs":$named,
-         |"buckets":$buckets,
-         |"termsBuckets":$buckets,
+         |"buckets":$n,
+         |"termsBuckets":$n,
          |"codecVersion":$CodecVersion,
          |"layout":"ps",
          |"schemaDDL":"$dataCols",

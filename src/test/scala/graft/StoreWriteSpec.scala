@@ -7,8 +7,9 @@ import graft.sources.RdfIO
 import graft.store._
 
 /** The CLI write path (`create`, `load`) on generated N-Triples: the
-  * manifest's metadata stays exact across appends, and the path stays
-  * within a fixed Spark-job budget. Needs no data outside the test. */
+  * manifest's metadata stays exact across appends, the path stays within a
+  * fixed Spark job and task budget, and the bucket count follows the store's
+  * size without changing any answer. Needs no data outside the test. */
 class StoreWriteSpec extends AnyFunSuite {
   lazy val spark = SparkBase.spark
   private val ex = "http://example.org/"
@@ -41,21 +42,34 @@ class StoreWriteSpec extends AnyFunSuite {
     Console.withOut(new java.io.PrintStream(out, true, "UTF-8"))(Main.run(args.toArray, spark))
   }
 
-  /** Spark jobs started while `f` runs. */
-  private def jobs[A](f: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
+  /** Spark jobs started and tasks finished while `f` runs. */
+  private def jobs[A](f: => A): (A, Int, Int) = {
+    val (nj, nt) = (new java.util.concurrent.atomic.AtomicInteger(),
+      new java.util.concurrent.atomic.AtomicInteger())
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
+        nj.incrementAndGet()
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        nt.incrementAndGet()
     }
     org.apache.spark.TestBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try {
       val a = f
       org.apache.spark.TestBus.drain(spark.sparkContext)
-      (a, n.get)
+      (a, nj.get, nt.get)
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  private def parquetFiles(dir: String): Int =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+      .count(f => f.isFile && f.getName.endsWith(".parquet"))
+
+  private def meta(dir: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "meta.json"))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   private def quadSet(path: String, graph: String): Set[Seq[Term]] =
     RdfIO.readNTriples(spark, path, defaultGraph = graph).collect()
@@ -115,12 +129,16 @@ class StoreWriteSpec extends AnyFunSuite {
     val dir = s"$work/store"
     val f0 = ntFile(work, "create.nt", subjects(0, 40))
     val f1 = ntFile(work, "load.nt", subjects(40, 50))
-    val (c0, createJobs) = jobs(run("create", dir, f0))
+    val (c0, createJobs, createTasks) = jobs(run("create", dir, f0))
     assert(c0 == 0)
     assert(createJobs <= 15, s"create ran $createJobs Spark jobs")
-    val (c1, loadJobs) = jobs(run("load", dir, f1))
+    // one-bucket store: tasks scale with the predicate directories, not with
+    // 32 buckets
+    assert(createTasks <= 60, s"create ran $createTasks Spark tasks")
+    val (c1, loadJobs, loadTasks) = jobs(run("load", dir, f1))
     assert(c1 == 0)
     assert(loadJobs <= 15, s"load ran $loadJobs Spark jobs")
+    assert(loadTasks <= 80, s"load ran $loadTasks Spark tasks")
 
     // a freshly opened store answers graphIds / termsBroadcastable from its
     // manifest: compile runs at most one job per non-inline constant (idOf)
@@ -128,8 +146,48 @@ class StoreWriteSpec extends AnyFunSuite {
     val q = s"""SELECT ?s ?n WHERE { ?s <${ex}name> ?n ; <${ex}label> "label 3"@en }"""
     val eng = new GraftEngine(st)
     val alg = graft.engine.Rewriter.rewrite(graft.parser.SparqlParser.parse(q).algebra)
-    val (_, compileJobs) = jobs(eng.compiler.compile(alg))
+    val (_, compileJobs, _) = jobs(eng.compiler.compile(alg))
     assert(compileJobs <= 3, s"compile ran $compileJobs Spark jobs for 3 constants")
-    info(s"Spark jobs: create $createJobs, load $loadJobs, compile $compileJobs")
+    info(s"Spark jobs: create $createJobs, load $loadJobs, compile $compileJobs; " +
+      s"tasks: create $createTasks, load $loadTasks")
+  }
+
+  test("layout follows size: a small store is one bucket, 32 forced buckets answer alike") {
+    assert(Seq(0L, 1L, 32768L, 32769L, 1030110L, 1L << 40).map(StorePersist.bucketsFor) ==
+      Seq(1, 1, 1, 2, 32, 32))
+    val work = tmpDir("graft_layout")
+    val dir = s"$work/store"
+    assert(run("create", dir, ntFile(work, "create.nt", subjects(0, 30))) == 0)
+    val m = meta(dir)
+    assert(m.contains("\"buckets\":1,") && m.contains("\"termsBuckets\":1,"), m)
+    val pDirs = new java.io.File(s"$dir/quads").listFiles().filter(_.getName.startsWith("p="))
+    assert(pDirs.length == 5)
+    for (d <- pDirs) assert(parquetFiles(d.getPath) == 1, d.getName)
+    assert(parquetFiles(s"$dir/terms") == 1)
+
+    // the same store saved with the at-scale 32-bucket layout
+    val dir32 = s"$work/store32"
+    StorePersist.save(StorePersist.open(spark, dir, cache = false), dir32, buckets = 32)
+    assert(meta(dir32).contains("\"buckets\":32,") &&
+      meta(dir32).contains("\"termsBuckets\":32,"))
+    val (st, st32) = (StorePersist.open(spark, dir, cache = false),
+      StorePersist.open(spark, dir32, cache = false))
+    assert(rows(st32.quads) == rows(st.quads))
+    assert(rows(st32.terms) == rows(st.terms))
+    for ((d, out) <- Seq(dir -> s"$work/dump", dir32 -> s"$work/dump32"))
+      assert(run("dump", d, out) == 0)
+    assert(quadSet(s"$work/dump32", "urn:g:unused") == quadSet(s"$work/dump", "urn:g:unused"))
+    val queries = Seq(
+      s"SELECT ?s ?n ?a WHERE { ?s <${ex}name> ?n ; <${ex}age> ?a ; <${ex}label> ?l }",
+      s"SELECT ?a (COUNT(?s) AS ?c) WHERE { ?s <${ex}age> ?a } GROUP BY ?a",
+      s"SELECT (COUNT(*) AS ?c) WHERE { ?s <${ex}name> ?n ; <${ex}price> ?p }",
+      s"SELECT ?s ?l WHERE { ?s <${ex}knows> ?o OPTIONAL { ?o <${ex}label> ?l } }",
+      s"SELECT ?s ?p WHERE { ?s <${ex}price> ?p FILTER(?p > 10) } ORDER BY ?p")
+    val (eng, eng32) = (new GraftEngine(st), new GraftEngine(st32))
+    for (q <- queries) {
+      val want = rows(eng.query(q))
+      assert(want.nonEmpty, q)
+      assert(rows(eng32.query(q)) == want, q)
+    }
   }
 }
