@@ -688,7 +688,8 @@ class EngineSpec extends AnyFunSuite {
     // examples/geo-data/geo.ttl, run geo.rq through the full text parser, and
     // expect the documented 10 ordered rows; coords.rq must parse and return
     // one (lat,long) row per feature
-    val dir = "/root/reference/examples/geo-data"
+    ReferenceGeo.assumePresent("geo.ttl", "geo.rq", "coords.rq")
+    val dir = ReferenceGeo.dir
     def read(f: String) = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/$f")), "UTF-8")
     val geoStore = graft.sources.RdfIO.loadTurtle(spark, read("geo.ttl"), graph = "urn:g:geo")

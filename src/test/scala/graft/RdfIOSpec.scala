@@ -213,8 +213,9 @@ class RdfIOSpec extends AnyFunSuite {
   }
 
   test("turtle: parses the reference geo.ttl example in full") {
+    ReferenceGeo.assumePresent("geo.ttl")
     val doc = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/examples/geo-data/geo.ttl")), "UTF-8")
+      ReferenceGeo.dir.resolve("geo.ttl")), "UTF-8")
     val ts = RdfIO.parseTurtle(doc)
     // 764 features × (point, type, lat, long)
     assert(ts.size == 3056, s"got ${ts.size}")
@@ -223,8 +224,9 @@ class RdfIOSpec extends AnyFunSuite {
   }
 
   test("turtle writer: geo.ttl round-trips isomorphically (parse → serialize → reparse)") {
+    ReferenceGeo.assumePresent("geo.ttl")
     val doc = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/examples/geo-data/geo.ttl")), "UTF-8")
+      ReferenceGeo.dir.resolve("geo.ttl")), "UTF-8")
     val ts = RdfIO.parseTurtle(doc)
     val out = TurtleWriter.serialize(ts)
     val ts2 = RdfIO.parseTurtle(out)
