@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py). An entry
+  * that throws is printed to stderr as `FAILED <name> <error>`, the others
+  * still run, and the process exits with status 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -19,31 +21,29 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // local-iteration subset (same convention as Bench); driver sets nothing
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
+    // a StackOverflowError (Catalyst recursing on a deep plan) fails one entry
+    val failed = SparkEntry.queries.toSeq
       .filter(kv => only.forall(_.contains(kv._1)))
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
+          System.err.println(s"FAILED $name ${e.getClass.getName}: ${e.getMessage}")
+          Some(name)
+        }
       }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control character is escaped: a tab in an oracle's SQL would
+    // otherwise make the compare's json.load fail
+    def q(s: String): String = "\"" + graft.sources.SparqlResults.jsonEscape(s) + "\""
     val json = SparkEntry.oracleSql
       .filter(kv => only.forall(_.contains(kv._1)))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"verify: ${failed.size} entries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

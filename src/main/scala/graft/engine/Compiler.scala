@@ -42,61 +42,41 @@ case object TermRep extends Rep // struct column (kind, lex, dt, lang, num)
 
 /** A compiled solution mapping: one column per in-scope variable; NULL = unbound.
   *
+  *  - `reps`: each var's physical representation
   *  - `certain`: necessarily-bound vars (equi-join fast path)
   *  - `nums`: vars carrying a `__n_<var>` numeric companion column
-  *  - `inl`: vars whose ids are all inline-encoded (store type profile) — sorting
-  *    by the raw id IS the SPARQL term order and views decode without a dictionary
-  *    join
-  *  - `numAll`: vars whose companion is populated for every bound value — numeric
-  *    sorts/aggregates can use the companion alone
+  *  - `prof`: what statistics prove about the vars ([[Profile]]). It has no
+  *    default: every construction states it, `Profile.none` where nothing is
+  *    known, and operators derive it through the transfer functions that
+  *    [[Profile]] documents next to its rules.
+  *  - `sortCols`: a pending ORDER BY, as materialized hidden `__sort_*`
+  *    columns + asc flags. The result edge re-applies the sort after
+  *    late-materialization joins (which destroy row order) and after
+  *    projection (which may drop the sort variables themselves). Reset by
+  *    order-destroying operators.
   */
 final case class Sol(df: DataFrame, reps: Map[String, Rep], certain: Set[String],
-    nums: Set[String], inl: Set[String] = Set.empty, numAll: Set[String] = Set.empty,
-    /** vars whose full value set is a small compile-time constant (VALUES
-      * tables): unlocks driver-side id resolution in mixed-rep joins. */
-    consts: Map[String, Seq[Term]] = Map.empty,
-    /** numeric-family flag from predicate statistics: FAM_INT = every bound value
-      * is an inline xsd:integer (exact long aggregation from the id payload);
-      * FAM_DBL = int/float/double mix promoting to xsd:double (companion-exact).
-      * Absent = unknown → typed aggregation uses the generic view path. */
-    fam: Map[String, Int] = Map.empty,
-    /** EXACT upper bound on the row count, from per-predicate statistics
-      * (bound-predicate scans; filters/projections only shrink it). Drives
-      * statistics-based broadcast hints in joins. None = unbounded. */
-    card: Option[Long] = None,
-    /** Pending ORDER BY, as materialized hidden `__sort_*` columns + asc
-      * flags: the result edge re-applies the sort AFTER late-materialization
-      * joins (which destroy row order) and after projection (which may drop
-      * the sort variables themselves). Reset by order-destroying operators. */
-    sortCols: Seq[(String, Boolean)] = Nil,
-    /** vars carrying a `__d_<var>` exact-decimal companion (DECIMAL(38,18),
-      * the engine's xsd:decimal working precision), set only when predicate
-      * statistics prove every value is exactly representable
-      * (PredProfile.decExact). Conservatively dropped by operators that don't
-      * forward the column — downstream falls back to the generic typed path. */
-    decs: Set[String] = Set.empty,
-    /** vars carried from the SUBJECT position of a bucketed-table scan: the
-      * DataFrame is hash-partitioned (and per-partition sorted) on them, so an
-      * equi-join between two such sols on a bucketed var is co-located —
-      * shuffle-free, sort-free — and must NOT be broadcast-hinted away. */
-    bucketS: Set[String] = Set.empty,
-    /** vars bound in AT MOST ONE row per distinct value (exact, from
-      * per-predicate functional statistics — PredProfile.funcS). An equi-join
-      * on such a var cannot multiply the other side's rows, so exact `card`
-      * bounds survive joins and keep driving broadcasts: a filtered star
-      * intermediate stays provably small and is broadcast into the next big
-      * scan (the reference's cost-model join ordering, QueryPlanCost.swift,
-      * as statistics). Dropping a var from this set is always sound. */
-    multOne: Set[String] = Set.empty) {
+    nums: Set[String], prof: Profile, sortCols: Seq[(String, Boolean)] = Nil) {
   def vars: Set[String] = reps.keySet
   def numCol(v: String): String = "__n_" + v
   def decCol(v: String): String = "__d_" + v
+
+  /** The distinct tuples of `vs` (plus the raw columns `extra`), companions
+    * dropped: a row subset of a projection, so the facts of `vs` carry over. */
+  def distinctOf(vs: Seq[String], extra: Seq[String] = Nil): Sol =
+    Sol(df.select((vs ++ extra).map(c => col(s"`$c`")): _*).dropDuplicates(),
+      reps.filter(kv => vs.contains(kv._1)), certain intersect vs.toSet, Set.empty,
+      prof.restrict(vs.toSet).withoutCompanions)
 }
 
 object Sol {
   val FAM_INT = 1
   val FAM_DEC = 2
   val FAM_DBL = 3
+
+  /** Id columns `vs`, each necessarily bound, with no statistics facts. */
+  def ofIds(df: DataFrame, vs: Seq[String]): Sol =
+    Sol(df, vs.map(_ -> (IdRep: Rep)).toMap, vs.toSet, Set.empty, Profile.none)
 }
 
 /** Compiles SPARQL algebra to DataFrame transformations over an [[RdfStore]].
@@ -142,7 +122,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     case Some(IdRep) =>
       val tcol = "__t_" + v
       if (sol.df.columns.contains(tcol)) (sol, col(bt(tcol)))
-      else if (sol.inl.contains(v)) {
+      else if (sol.prof.inl.contains(v)) {
         val df = sol.df.withColumn(tcol, decodeInlineUdf(col(bt(v))))
         (sol.copy(df = df), col(bt(tcol)))
       } else {
@@ -184,7 +164,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
   private[engine] def toIdRep(sol: Sol, v: String): Sol = sol.reps(v) match {
     case IdRep => sol
     case TermRep =>
-      val converted: DataFrame = sol.consts.get(v) match {
+      val converted: DataFrame = sol.prof.consts.get(v) match {
         case Some(ts) =>
           // VALUES fast path: terms known at compile time → resolve ids
           // driver-side (store.idOf caches); no scan, no join in the plan
@@ -205,8 +185,9 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
             .withColumn(v, coalesce(col("__iid"), col("__did")))
             .drop("__iid", "__dt", "__did")
       }
-      sol.copy(df = converted, reps = sol.reps + (v -> IdRep),
-        nums = sol.nums - v, inl = sol.inl - v, numAll = sol.numAll - v)
+      // ids re-derived from terms prove no inline encoding; the companion is gone
+      sol.copy(df = converted, reps = sol.reps + (v -> IdRep), nums = sol.nums - v,
+        prof = sol.prof.copy(inl = sol.prof.inl - v, numAll = sol.prof.numAll - v))
   }
 
   private def bt(c: String) = s"`$c`"
@@ -232,7 +213,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     // bind suite); integer/decimal constants belong to fastDec instead
     val fv = Expr.freeVars(e)
     fv.nonEmpty &&
-      fv.forall(v => sol.nums.contains(v) && sol.fam.get(v).contains(Sol.FAM_DBL))
+      fv.forall(v => sol.nums.contains(v) && sol.prof.fam.get(v).contains(Sol.FAM_DBL))
   }
 
   /** Pure-column DOUBLE value of an expression when every participating var is
@@ -240,15 +221,16 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
   private def fastNumChecked(sol: Sol, e: Expr): Option[Column] =
     if (allDblFamily(sol, e)) fastNum(sol, e) else None
 
+  /** Term view of the numeric column `c`, typed `dt` (null stays unbound). */
+  private def numView(c: Column, dt: String = Term.xsdDouble): Column = when(c.isNotNull,
+    struct(lit(TermRow.KIND_LITERAL).as("kind"), c.cast(StringType).as("lex"),
+      lit(dt).as("dt"), lit(null).cast(StringType).as("lang"), c.cast(DoubleType).as("num")))
+    .otherwise(lit(null).cast(TermRow.schema))
+  private def intView(c: Column): Column = numView(c, Term.xsdInteger)
+
   private def exprColumnComputed(sol0: Sol, e: Expr): (Sol, Column) =
     fastNumChecked(sol0, e) match {
-    case Some(c) => // numeric fast path: build the view struct natively
-      (sol0, when(c.isNotNull, struct(
-        lit(TermRow.KIND_LITERAL).as("kind"),
-        c.cast(StringType).as("lex"),
-        lit(Term.xsdDouble).as("dt"),
-        lit(null).cast(StringType).as("lang"),
-        c.as("num"))).otherwise(lit(null).cast(TermRow.schema)))
+    case Some(c) => (sol0, numView(c)) // numeric fast path: the view struct natively
     case None =>
       val fv = Expr.freeVars(e).toSeq.sorted
       val (sol1, views) = withViews(sol0, fv)
@@ -408,7 +390,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     case EConst(Lit(lex, dt, _)) if dt == Term.xsdInteger || dt == Term.xsdInt =>
       scala.util.Try(lex.trim.toLong).toOption
         .map(l => (lit(l).cast(DecimalType(20, 0)), lit(false)))
-    case EVar(n) if sol.decs.contains(n) && sol.fam.get(n).contains(Sol.FAM_DEC) =>
+    case EVar(n) if sol.prof.decs.contains(n) && sol.prof.fam.get(n).contains(Sol.FAM_DEC) =>
       val isdec = sol.reps.get(n) match {
         case Some(IdRep) =>
           shiftright(col(bt(n)), TermId.PAYLOAD_BITS).bitwiseAND(0xFF) ===
@@ -417,7 +399,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       }
       Some((col(bt(sol.decCol(n))), isdec))
     case EVar(n) if sol.reps.get(n).contains(IdRep) &&
-        sol.fam.get(n).contains(Sol.FAM_INT) =>
+        sol.prof.fam.get(n).contains(Sol.FAM_INT) =>
       Some(((col(bt(n)).bitwiseAND(TermId.PAYLOAD_MASK) - TermId.BIAS)
         .cast(DecimalType(20, 0)), lit(false)))
     case ECall(op @ ("+" | "-" | "*"), Seq(a, b)) =>
@@ -445,7 +427,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     // strings — so any such var must take the general path instead.
     case ECall(op @ ("<" | "<=" | ">" | ">=" | "=" | "!="), Seq(a, b))
         if Expr.freeVars(e).forall(v =>
-          !sol.nums.contains(v) || sol.numAll.contains(v)) =>
+          !sol.nums.contains(v) || sol.prof.numAll.contains(v)) =>
       for (ca <- fastNum(sol, a); cb <- fastNum(sol, b)) yield op match {
         case "<" => ca < cb
         case "<=" => ca <= cb
@@ -546,13 +528,12 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       case T(t) => store.idOf(t).flatMap(store.predProfiles.get).map(_.count)
       case _ => None
     }
+    val subj = firstPos.collect { case (n, "s") => n }.toSet
     Sol(out, firstPos.keys.map(_ -> (IdRep: Rep)).toMap, firstPos.keySet.toSet, nums,
-      inl, numAll, fam = fam, card = card, decs = decVars,
-      bucketS = if (store.bucketedS)
-        firstPos.collect { case (n, "s") => n }.toSet else Set.empty,
-      // functional predicate → the subject var binds at most one row here
-      multOne = if (oProfile.exists(_.funcS))
-        firstPos.collect { case (n, "s") => n }.toSet else Set.empty)
+      Profile(inl, numAll, fam, decVars,
+        // functional predicate → the subject var binds at most one row here
+        multOne = if (oProfile.exists(_.funcS)) subj else Set.empty,
+        bucketS = if (store.bucketedS) subj else Set.empty, card = card))
   }
 
   /** BGP join-order heuristic: bound-position selectivity weights from the
@@ -752,7 +733,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
   private def emptyTermSol(vars: Seq[String]): Sol = {
     val schema = StructType(vars.map(v => StructField(v, TermRow.schema, nullable = true)))
     val df = store.spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    Sol(df, vars.map(_ -> (TermRep: Rep)).toMap, Set.empty, Set.empty, card = Some(0L))
+    Sol(df, vars.map(_ -> (TermRep: Rep)).toMap, Set.empty, Set.empty, Profile(card = Some(0L)))
   }
 
   /** True when compileBGP executes the DP order (explain gates its join-order
@@ -843,10 +824,10 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     // exchange and no sort — strictly cheaper than materializing a broadcast.
     // Leave such joins unhinted.
     val bucketAligned = certainShared.exists(v =>
-      l.bucketS.contains(v) && r0.bucketS.contains(v))
-    val rdfH = if (small(r.card) && !bucketAligned) broadcast(rdf) else rdf
+      l.prof.bucketS.contains(v) && r0.prof.bucketS.contains(v))
+    val rdfH = if (small(r.prof.card) && !bucketAligned) broadcast(rdf) else rdf
     val ldfH =
-      if (small(l.card) && !small(r.card) && !bucketAligned) {
+      if (small(l.prof.card) && !small(r.prof.card) && !bucketAligned) {
         if (kind == "inner") broadcast(l.df)
         // OPTIONAL cannot broadcast its left (the preserved side must stream),
         // but Spark ≥3.5 can hash-BUILD the left of a left-outer shuffled hash
@@ -864,7 +845,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
         // for small outputs. Broadcast a provably-small side (nested-loop with
         // |big| tasks); otherwise cap the partition product. A genuinely
         // huge×huge cartesian is unrunnable at any partitioning anyway.
-        if (small(r.card))
+        if (small(r.prof.card))
           (if (kind == "inner") l.df.crossJoin(broadcast(rdf))
            else l.df.join(broadcast(rdf), lit(true), kind))
         else {
@@ -872,16 +853,14 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
           // when its exact bound is known and modest. An unknown-card left
           // (join/group-derived intermediate) keeps its parallelism rather
           // than being collapsed to 8 tasks on no evidence.
-          val lc = if (l.card.exists(_ <= 1000000L)) l.df.coalesce(8) else l.df
+          val lc = if (l.prof.card.exists(_ <= 1000000L)) l.df.coalesce(8) else l.df
           if (kind == "inner") lc.crossJoin(rdf.coalesce(4))
           else lc.join(rdf.coalesce(4), lit(true), kind)
         }
       } else ldfH.join(rdfH, conds.reduce(_ && _), kind)
 
-    if (kind == "left_semi" || kind == "left_anti")
-      return Sol(joined, l.reps, l.certain, l.nums, l.inl, l.numAll,
-        fam = l.fam, card = l.card, decs = l.decs, // semi/anti output ⊆ left
-        bucketS = l.bucketS, multOne = l.multOne)
+    if (kind == "left_semi" || kind == "left_anti") // output ⊆ left rows
+      return Sol(joined, l.reps, l.certain, l.nums, l.prof)
 
     // merge shared columns, surface right-only vars — all merge columns read
     // only `joined` attributes (independent of one another), so they land in a
@@ -892,87 +871,26 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       merge(v) = coalesce(col(bt(v)), col(bt("__r_" + v)))
       if (l.nums.contains(v) && r.nums.contains(v))
         merge(l.numCol(v)) = coalesce(col(bt(l.numCol(v))), col(bt("__r_" + r.numCol(v))))
-      if (l.decs.contains(v) && r.decs.contains(v))
-        merge(l.decCol(v)) = coalesce(col(bt(l.decCol(v))), col(bt("__r___d_" + v)))
     }
     for (v <- rOnly) {
       merge(v) = col(bt("__r_" + v))
       if (r.nums.contains(v)) merge("__n_" + v) = col(bt("__r___n_" + v))
-      if (r.decs.contains(v)) merge("__d_" + v) = col(bt("__r___d_" + v))
     }
-    // certain shared vars are equal-valued on matched rows, so on an inner
-    // join the right side's decimal companion can stand in for a missing left
-    for (v <- certainShared
-         if kind == "inner" && !l.decs.contains(v) && r.decs.contains(v))
-      merge("__d_" + v) = col(bt("__r___d_" + v))
+    // the output's decimal companions are Profile.join's `decs`: the right
+    // side supplies those it carries, coalesced with a loose-shared left one
+    val prof = Profile.join(l, r0, kind, certainShared, looseShared, cartesian = conds.isEmpty)
+    for (v <- prof.decs if r.prof.decs(v) && !(l.prof.decs(v) && certainShared.contains(v)))
+      merge(l.decCol(v)) = if (l.prof.decs(v)) coalesce(col(bt(l.decCol(v))), col(bt("__r___d_" + v)))
+        else col(bt("__r___d_" + v))
     val out = (if (merge.isEmpty) joined else joined.withColumns(merge.toMap))
       .drop(rdf.columns.filter(_.startsWith("__r_")).toSeq: _*)
 
     val reps = l.reps ++ rOnly.map(v => v -> r.reps(v))
-    val certain = kind match {
-      case "inner" => l.certain ++ r0.certain
-      case _ => l.certain // left_outer
-    }
+    val certain = if (kind == "inner") l.certain ++ r0.certain else l.certain
     val nums = l.nums ++ rOnly.filter(r.nums.contains)
-    // flag propagation: equal-valued (certain) shared vars inherit either side's
-    // flag; coalesced (loose) shared vars need both; right-only vars inherit r's
-    val inl = (l.vars ++ r.vars).filter { v =>
-      if (certainShared.contains(v)) l.inl.contains(v) || r0.inl.contains(v)
-      else if (looseShared.contains(v)) l.inl.contains(v) && r0.inl.contains(v)
-      else if (rOnly.contains(v)) r0.inl.contains(v)
-      else l.inl.contains(v)
-    }
-    val numAll = (l.vars ++ r.vars).filter { v =>
-      if (rOnly.contains(v)) r0.numAll.contains(v) && r.nums.contains(v)
-      else l.numAll.contains(v) && l.nums.contains(v)
-    }
-    val fam = (l.vars ++ r.vars).flatMap { v =>
-      val f =
-        if (rOnly.contains(v)) r0.fam.get(v)
-        else if (shared.contains(v)) l.fam.get(v).filter(r0.fam.get(v).contains)
-        else l.fam.get(v)
-      f.map(v -> _)
-    }.toMap
-    // decimal companions stay valid where the value provably survives: left's
-    // own vars (minus loose-shared coalesces the right side must also cover),
-    // right-only vars, and inner-join certain-shared vars covered by either side
-    val decs: Set[String] =
-      (l.decs -- looseShared.filterNot(r.decs.contains)) ++
-        rOnly.filter(r.decs.contains) ++
-        (if (kind == "inner") certainShared.filter(r.decs.contains).toSet
-         else Set.empty[String])
-    // exact cardinality through the join (functional-property statistics):
-    // if some certain equi-key binds ≤1 row on a side, that side cannot
-    // multiply the other — the other side's exact bound survives. This is
-    // what keeps a filtered star intermediate provably small enough to
-    // broadcast into the next fact-predicate scan (bind-join with cost input).
-    val matchOneR = certainShared.exists(r0.multOne.contains)
-    val matchOneL = certainShared.exists(l.multOne.contains)
-    val cardOut: Option[Long] =
-      if (conds.isEmpty && kind == "inner") // cartesian: exact product bound
-        // overflow-safe: a*b can wrap negative exactly when the double guard
-        // rounds 2^63 up to "fits", and a negative card would then look tiny
-        for (a <- l.card; b <- r0.card; if a == 0L || b <= Long.MaxValue / a)
-          yield a * b
-      else if (kind == "inner") {
-        val bounds = (if (matchOneR) l.card else None) ++
-          (if (matchOneL) r0.card else None)
-        if (bounds.isEmpty) None else Some(bounds.min)
-      } else if (matchOneR) l.card // left_outer: preserved side not multiplied
-      else None
-    val multOneOut: Set[String] = {
-      val fromL = if (matchOneR) l.multOne else Set.empty[String]
-      val fromR = if (matchOneL && kind == "inner") r0.multOne else Set.empty[String]
-      (fromL ++ fromR) intersect certain
-    }
     Sol(out.select((reps.keySet.toSeq.sorted.map(v => col(bt(v))) ++
       nums.toSeq.sorted.map(v => col(bt("__n_" + v))) ++
-      decs.toSeq.sorted.map(v => col(bt("__d_" + v)))): _*), reps, certain, nums,
-      inl, numAll, fam = fam, decs = decs, card = cardOut,
-      // the join output keeps the left side's hash partitioning; loose-shared
-      // coalesces synthesize a new column → partitioning no longer applies
-      bucketS = (l.bucketS ++ (r.bucketS -- l.vars)) -- looseShared,
-      multOne = multOneOut)
+      prof.decs.toSeq.sorted.map(v => col(bt("__d_" + v)))): _*), reps, certain, nums, prof)
   }
 
   // ---- main compile ---------------------------------------------------------
@@ -1082,23 +1000,9 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
           // same flag-rewrite device as the general FILTER case — each
           // EXISTS becomes a boolean flag var, the expression compiles over
           // the flags, the flags are dropped after the extend
-          var s = compile(c)
-          val flags = scala.collection.mutable.ListBuffer[String]()
-          def repl(x: Expr): Expr = x match {
-            case EExists(p, neg) =>
-              val fv = "__exf_" + freshId()
-              s = existsFlag(s, p, fv, neg)
-              flags += fv
-              EVar(fv)
-            case ECall(fn, args) => ECall(fn, args.map(repl))
-            case other => other
-          }
-          val rewritten = repl(e)
+          val (s, rewritten, flags) = flagExists(compile(c), e)
           val (s2, ec) = exprColumn(s, rewritten)
-          val extended = Sol(s2.df.withColumn(v, ec), s2.reps + (v -> TermRep),
-            s2.certain, s2.nums, s2.inl, s2.numAll, fam = s2.fam, card = s2.card,
-            decs = s2.decs, bucketS = s2.bucketS, multOne = s2.multOne)
-          stripVars(extended, flags.toSeq)
+          stripVars(bind(s2, v, Map(v -> ec)), flags)
         case _ =>
           val sol = compile(c)
           fastNumChecked(sol, e) match {
@@ -1107,17 +1011,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
               // to the view so downstream aggregation/filtering stays columnar
               // (a typed SUM over this var is one sum(__n_v), not the generic
               // 6-aggregate struct path with a per-row lexical parse)
-              val view = when(nc.isNotNull, struct(
-                lit(TermRow.KIND_LITERAL).as("kind"),
-                nc.cast(StringType).as("lex"),
-                lit(Term.xsdDouble).as("dt"),
-                lit(null).cast(StringType).as("lang"),
-                nc.as("num"))).otherwise(lit(null).cast(TermRow.schema))
-              Sol(sol.df.withColumns(Map(v -> view, ("__n_" + v) -> nc)),
-                sol.reps + (v -> TermRep), sol.certain, sol.nums + v,
-                sol.inl, sol.numAll + v, fam = sol.fam + (v -> Sol.FAM_DBL),
-                card = sol.card, decs = sol.decs, bucketS = sol.bucketS,
-                multOne = sol.multOne)
+              bind(sol, v, Map(v -> numView(nc), sol.numCol(v) -> nc), Some(Sol.FAM_DBL))
             case _ => fastDec(sol, e) match {
               case Some((dc, isdec)) if !e.isInstanceOf[EVar] =>
                 // exact-family computed value: the term view (decimal or
@@ -1128,18 +1022,11 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
                   .when(isdec, graft.engine.NativeExpr.decTerm(dc))
                   .otherwise(graft.engine.NativeExpr.intTerm(dc.try_cast(LongType)))
                 val base = Map(v -> view, ("__n_" + v) -> dc.cast(DoubleType))
-                val cols = if (decNeeded(v)) base + (("__d_" + v) -> dc) else base
-                Sol(sol.df.withColumns(cols),
-                  sol.reps + (v -> TermRep), sol.certain, sol.nums + v,
-                  sol.inl, sol.numAll + v, fam = sol.fam + (v -> Sol.FAM_DEC),
-                  card = sol.card,
-                  decs = if (decNeeded(v)) sol.decs + v else sol.decs,
-                  bucketS = sol.bucketS, multOne = sol.multOne)
+                val cols = if (decNeeded(v)) base + (sol.decCol(v) -> dc) else base
+                bind(sol, v, cols, Some(Sol.FAM_DEC))
               case _ =>
                 val (s2, ec) = exprColumn(sol, e)
-                Sol(s2.df.withColumn(v, ec), s2.reps + (v -> TermRep), s2.certain,
-                  s2.nums, s2.inl, s2.numAll, fam = s2.fam, card = s2.card,
-                  decs = s2.decs, bucketS = s2.bucketS, multOne = s2.multOne)
+                bind(s2, v, Map(v -> ec))
             }
           }
       }
@@ -1148,16 +1035,12 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       val sol = compile(c)
       val keep = vs.filter(sol.reps.contains)
       val cols = keep.map(v => col(bt(v))) ++
-        keep.filter(sol.nums.contains).map(v => col(bt("__n_" + v))) ++
-        keep.filter(sol.decs.contains).map(v => col(bt("__d_" + v))) ++
+        keep.filter(sol.nums.contains).map(v => col(bt(sol.numCol(v)))) ++
+        keep.filter(sol.prof.decs.contains).map(v => col(bt(sol.decCol(v)))) ++
         sol.sortCols.map { case (n, _) => col(bt(n)) } // projection keeps the order
       Sol(sol.df.select(cols: _*), sol.reps.filter(kv => keep.contains(kv._1)),
         sol.certain intersect vs.toSet, sol.nums intersect keep.toSet,
-        sol.inl intersect keep.toSet, sol.numAll intersect keep.toSet,
-        fam = sol.fam.filter(kv => keep.contains(kv._1)), card = sol.card,
-        sortCols = sol.sortCols, decs = sol.decs intersect keep.toSet,
-        bucketS = sol.bucketS intersect keep.toSet,
-        multOne = sol.multOne intersect keep.toSet)
+        sol.prof.restrict(keep.toSet), sol.sortCols)
 
     case ADistinct(c) => compileDistinct(dropCompanions(compile(c)))
 
@@ -1174,7 +1057,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     //    distinct sets — the scale-correct REDUCED at 100 TB.
     case AReduced(c) =>
       val sol = dropCompanions(compile(c))
-      if (sol.sortCols.nonEmpty || !sol.card.exists(_ <= Compiler.ReducedLocalCap))
+      if (sol.sortCols.nonEmpty || !sol.prof.card.exists(_ <= Compiler.ReducedLocalCap))
         compileDistinct(sol)
       else {
         val enc = org.apache.spark.sql.Encoders.row(sol.df.schema)
@@ -1250,16 +1133,10 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       // keys + aggregate outputs only.
       val aggs2 = aggs.map { a =>
         a.e match {
-          case Some(e) if hasExists(e) =>
-            def repl(x: Expr): Expr = x match {
-              case EExists(p, neg) =>
-                val fv = "__exf_" + freshId()
-                sol = existsFlag(sol, p, fv, neg)
-                EVar(fv)
-              case ECall(fn, args) => ECall(fn, args.map(repl))
-              case other => other
-            }
-            a.copy(e = Some(repl(e)))
+          case Some(e) if Expr.hasExists(e) =>
+            val (s2, rewritten, _) = flagExists(sol, e)
+            sol = s2
+            a.copy(e = Some(rewritten))
           case _ => a
         }
       }
@@ -1285,9 +1162,8 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
         else vs.zipWithIndex.map { case (v, i) =>
           v -> rows.flatMap(r => r.lift(i).flatten).distinct
         }.toMap
-      Sol(df, vs.map(_ -> (TermRep: Rep)).toMap,
-        Algebra.certain(ATable(vs, rows)), Set.empty, consts = consts,
-        card = Some(rows.size.toLong))
+      Sol(df, vs.map(_ -> (TermRep: Rep)).toMap, Algebra.certain(ATable(vs, rows)),
+        Set.empty, Profile(consts = consts, card = Some(rows.size.toLong)))
 
     case AService(endpoint, child, silent) =>
       val ep = endpoint match {
@@ -1469,8 +1345,8 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     val scratch = sol.df.columns.filter(c =>
       c.startsWith("__ne_") || c.startsWith("__rownonce")).toSeq
     sol.copy(df = sol.df.drop(sol.nums.toSeq.map("__n_" + _) ++
-        sol.decs.toSeq.map("__d_" + _) ++ scratch: _*),
-      nums = Set.empty, numAll = Set.empty, decs = Set.empty)
+        sol.prof.decs.toSeq.map("__d_" + _) ++ scratch: _*),
+      nums = Set.empty, prof = sol.prof.withoutCompanions)
   }
 
   // ---- filter (incl. EXISTS rewrite) ---------------------------------------
@@ -1489,32 +1365,45 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       // row to false). Materialize each EXISTS node as a boolean flag var
       // (the BIND(EXISTS) device, substitution semantics included), rewrite
       // the expression over the flags, filter, then drop the flags.
-      var s = sol
-      val flags = scala.collection.mutable.ListBuffer[String]()
-      def repl(x: Expr): Expr = x match {
-        case EExists(p, neg) =>
-          val fv = "__exf_" + freshId()
-          s = existsFlag(s, p, fv, neg)
-          flags += fv
-          EVar(fv)
-        case ECall(fn, args) => ECall(fn, args.map(repl))
-        case other => other
-      }
-      val rewritten = repl(e)
-      stripVars(compileFilter(rewritten, s), flags.toSeq)
+      val (s, rewritten, flags) = flagExists(sol, e)
+      stripVars(compileFilter(rewritten, s), flags)
     case _ =>
       val (s2, c) = ebvColumn(sol, e)
       s2.copy(df = s2.df.filter(c === true))
   }
 
+  /** Rewrite each EXISTS node of `e` to a boolean flag var bound on `sol`
+    * (the BIND(EXISTS) device, substitution semantics included): the flagged
+    * sol, the expression over the flags, and the flag vars. */
+  private def flagExists(sol: Sol, e: Expr): (Sol, Expr, Seq[String]) = {
+    var s = sol
+    val flags = scala.collection.mutable.ListBuffer[String]()
+    def repl(x: Expr): Expr = x match {
+      case EExists(p, neg) =>
+        val fv = "__exf_" + freshId()
+        s = existsFlag(s, p, fv, neg)
+        flags += fv
+        EVar(fv)
+      case ECall(fn, args) => ECall(fn, args.map(repl))
+      case other => other
+    }
+    val rewritten = repl(e)
+    (s, rewritten, flags.toSeq)
+  }
+
   /** Remove hidden helper vars (EXISTS flags) from a Sol entirely. */
   private def stripVars(sol: Sol, vs: Seq[String]): Sol =
-    vs.foldLeft(sol)((acc, v) => acc.copy(
-      df = acc.df.drop(v, "__n_" + v, "__d_" + v, "__t_" + v),
-      reps = acc.reps - v, certain = acc.certain - v, inl = acc.inl - v,
-      numAll = acc.numAll - v, fam = acc.fam - v, multOne = acc.multOne - v,
-      nums = acc.nums - v, decs = acc.decs - v, consts = acc.consts - v,
-      bucketS = acc.bucketS - v))
+    sol.copy(df = sol.df.drop(vs.flatMap(v => Seq(v, "__n_" + v, "__d_" + v, "__t_" + v)): _*),
+      reps = sol.reps -- vs, certain = sol.certain -- vs, nums = sol.nums -- vs,
+      prof = sol.prof.without(vs))
+
+  /** Bind the new TermRep var `v` from `cols`: its view, plus its companions
+    * when it is numeric of family `fam`. Added columns: every fact holds. */
+  private def bind(sol: Sol, v: String, cols: Map[String, Column],
+      fam: Option[Int] = None): Sol =
+    Sol(sol.df.withColumns(cols), sol.reps + (v -> TermRep), sol.certain,
+      if (fam.isDefined) sol.nums + v else sol.nums,
+      fam.fold(sol.prof)(f => sol.prof.numeric(v, f, dec = cols.contains(sol.decCol(v)))))
 
   /** Compile an EXISTS pattern with SUBSTITUTION semantics (SPARQL 1.1
     * §18.6). The semi/anti join correlates the outer solution with the
@@ -1537,12 +1426,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     if (corrOnly.isEmpty) compile(p)
     else {
       val corrVars = (deep intersect outer.vars.toSet).toSeq.sorted
-      val base = dropCompanions(outer)
-      val corr = Sol(
-        base.df.select(corrVars.map(v => col(bt(v))): _*).dropDuplicates(),
-        base.reps.filter(kv => corrVars.contains(kv._1)),
-        base.certain intersect corrVars.toSet, Set.empty,
-        base.inl intersect corrVars.toSet)
+      val corr = outer.distinctOf(corrVars)
       val key = freshId()
       envRegistry(key) = corr
       try compile(injectEnv(p,
@@ -1590,8 +1474,8 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       injectEnv(r, env)
     else r
 
-  /** Pin a frame whose rows carry a `monotonically_increasing_id` tag so
-    * the tag is computed exactly ONCE — a branch recompute after a shuffle
+  /** Tag each row with a `monotonically_increasing_id` var `idc` and pin the
+    * frame so the tag is computed exactly ONCE — a branch recompute after a shuffle
     * may renumber, and the tagged-row devices (OPTIONAL+EXISTS-filter,
     * BIND(EXISTS)) join two branches of the same tagged frame. Lazy
     * `localCheckpoint` truncates lineage into executor-local blocks
@@ -1601,10 +1485,15 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     * recomputing. That trade (fail > silently-renumbered wrong answer) is
     * right for interactive use; for long cluster runs, configure a RELIABLE
     * checkpoint dir (`sc.setCheckpointDir`) and these frames checkpoint to
-    * that filesystem instead, surviving executor loss. */
-  private def pinTagged(df: DataFrame): DataFrame =
-    if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint(false)
-    else df.localCheckpoint(false)
+    * that filesystem instead, surviving executor loss. The tag is an IdRep
+    * var (a long column IS an id-space column): joinSols's output projection
+    * keeps only rep/companion columns, so a bare extra column would be pruned
+    * at the first join. */
+  private def tagRows(sol: Sol, idc: String): Sol = {
+    val df = sol.df.withColumn(idc, monotonically_increasing_id())
+    sol.copy(df = if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint(false)
+      else df.localCheckpoint(false), reps = sol.reps + (idc -> IdRep), certain = sol.certain + idc)
+  }
 
   /** OPTIONAL with filter: LeftJoin(Ω1, Ω2, expr). The SPARQL definition
     * Filter(expr, Join(L,R)) ∪ Diff(L,R,expr) (reference
@@ -1618,7 +1507,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     * decomposition: only [[compileFilter]] owns the semi-join machinery,
     * and a join condition can't host it. */
   private def compileLeftJoinFilter(l: Sol, r: Sol, e: Expr): Sol =
-    if (hasExists(e)) {
+    if (Expr.hasExists(e)) {
       // EXISTS can't evaluate inside a join condition (it IS a join), so the
       // Diff side keys on ROW IDENTITY instead: tag each L row, find the rows
       // with a passing partner (compileFilter turns the EXISTS into semi/anti
@@ -1629,32 +1518,18 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       // bound vars made the filter pass (r11: opt-exists-filter-01 caught the
       // old condOverJoined Diff erroring EXISTS to null → every L row kept).
       val idc = "__ljid_" + freshId()
-      // registered as an IdRep var (a long column IS an id-space column):
-      // joinSols's output projection keeps only rep/companion columns, so a
-      // bare extra column would be pruned at the first join
-      val lt = l.copy(
-        df = pinTagged(l.df.withColumn(idc, monotonically_increasing_id())),
-        reps = l.reps + (idc -> IdRep), certain = l.certain + idc)
+      val lt = tagRows(l, idc)
       val joined = joinSols(lt, r, "inner")
       val matched = compileFilter(e, joined)
       val diffDf = lt.df
         .join(matched.df.select(col(bt(idc))), Seq(idc), "left_anti")
         .drop(idc)
-      val matchedClean = matched.copy(df = matched.df.drop(idc),
-        reps = matched.reps - idc, certain = matched.certain - idc,
-        inl = matched.inl - idc, numAll = matched.numAll - idc,
-        fam = matched.fam - idc, multOne = matched.multOne - idc)
-      unionSols(matchedClean, l.copy(df = diffDf))
+      // the anti join on the row tag re-keys the preserved rows
+      unionSols(stripVars(matched, Seq(idc)), l.copy(df = diffDf, prof = l.prof.rekeyed))
     } else
       joinSols(l, r, "left_outer", extraFilter = Some { (ls, rs) =>
         condOverJoined(ls, rs, e)
       })
-
-  private def hasExists(e: Expr): Boolean = e match {
-    case _: EExists => true
-    case ECall(_, args) => args.exists(hasExists)
-    case _ => false
-  }
 
   /** Build an EBV condition usable inside a join condition, where right-side
     * columns are prefixed __r_. Falls back to a UDF over both sides' views.
@@ -1724,15 +1599,17 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     if (allCertain) joinSols(l, r, "left_anti")
     else {
       var ll = l; var rr = r
-      for (v <- shared if ll.reps(v) != rr.reps(v)) { ll = toTermRep(ll, v); rr = toTermRep(rr, v) }
+      val converted = shared.filter(v => ll.reps(v) != rr.reps(v))
+      for (v <- converted) { ll = toTermRep(ll, v); rr = toTermRep(rr, v) }
       val rdf = rr.df.toDF(rr.df.columns.map("__r_" + _).toIndexedSeq: _*)
       val compat = shared.map(v =>
         (col(bt(v)) <=> col(bt("__r_" + v))) || col(bt(v)).isNull || col(bt("__r_" + v)).isNull)
         .reduce(_ && _)
       val overlap = shared.map(v => col(bt(v)).isNotNull && col(bt("__r_" + v)).isNotNull)
         .reduce(_ || _)
+      // a subset of the left rows, no longer laid out by a converted var's id
       Sol(ll.df.join(rdf, compat && overlap, "left_anti"), ll.reps, ll.certain,
-        ll.nums, ll.inl, ll.numAll)
+        ll.nums, ll.prof.subset.copy(bucketS = ll.prof.bucketS -- converted))
     }
   }
 
@@ -1750,6 +1627,8 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     * multiplicity is exact via the tagged-row device: semi-join the tagged
     * outer against the pattern, then flag membership of the tag set. */
   private def existsFlag(l: Sol, pat: Algebra, outVar: String, negated: Boolean): Sol = {
+    // the flag is there to select rows (a FILTER on it is a row subset), so
+    // the output carries the facts of a subset of `l`
     val flag = "__ex_" + outVar
     if ((Algebra.deepVars(pat) intersect l.vars.toSet).isEmpty) {
       // fully uncorrelated: the flag is the pattern's (non-)emptiness.
@@ -1758,20 +1637,21 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       val marker = broadcast(compile(pat).df.select(lit(true).as(flag)).limit(1))
       val base = l.df.join(marker, lit(true), "left_outer")
         .withColumns(Map(flag -> coalesce(col(bt(flag)), lit(false))))
-      return boolVarFromFlag(Sol(base, l.reps, l.certain, l.nums, l.inl, l.numAll),
+      // the marker has at most one row: no left row is multiplied
+      return boolVarFromFlag(Sol(base, l.reps, l.certain, l.nums, l.prof.subset),
         flag, outVar, negated)
     }
     val idc = "__exid_" + freshId()
-    val lt = l.copy(
-      df = pinTagged(l.df.withColumn(idc, monotonically_increasing_id())),
-      reps = l.reps + (idc -> IdRep), certain = l.certain + idc)
+    val lt = tagRows(l, idc)
     val matched = joinSols(lt, compileExistsPattern(lt, pat), "left_semi")
     val joined = lt.df.join(
         matched.df.select(col(bt(idc)).as("__exm")).dropDuplicates(),
         col(bt(idc)) === col("__exm"), "left_outer")
       .withColumn(flag, col("__exm").isNotNull)
       .drop("__exm", idc)
-    boolVarFromFlag(Sol(joined, l.reps, l.certain, l.nums, l.inl, l.numAll),
+    // one flag per tag (the matches are distinct): rows are not multiplied,
+    // but the join on the tag re-keys the frame
+    boolVarFromFlag(Sol(joined, l.reps, l.certain, l.nums, l.prof.subset.rekeyed),
       flag, outVar, negated)
   }
 
@@ -1783,8 +1663,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       lit(Term.xsdBoolean).as("dt"),
       lit(null).cast(StringType).as("lang"),
       lit(null).cast(DoubleType).as("num"))).drop(flag)
-    Sol(df, sol.reps + (outVar -> TermRep), sol.certain + outVar, sol.nums,
-      sol.inl, sol.numAll)
+    Sol(df, sol.reps + (outVar -> TermRep), sol.certain + outVar, sol.nums, sol.prof)
   }
 
   // ---- union ---------------------------------------------------------------
@@ -1808,23 +1687,8 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       s.df.select(cols: _*)
     }
     val reps = allVars.map(v => v -> l.reps.getOrElse(v, r.reps(v))).toMap
-    val inl = allVars.filter(v =>
-      (!l.vars.contains(v) || l.inl.contains(v)) &&
-      (!r.vars.contains(v) || r.inl.contains(v))).toSet
-    val numAll = sharedNums.toSet.filter(v =>
-      (!l.vars.contains(v) || l.numAll.contains(v)) &&
-      (!r.vars.contains(v) || r.numAll.contains(v)))
-    val fam = allVars.flatMap { v =>
-      (l.fam.get(v), r.fam.get(v)) match {
-        case (Some(a), Some(b)) if a == b => Some(v -> a)
-        case (Some(a), None) if !r.vars.contains(v) => Some(v -> a)
-        case (None, Some(b)) if !l.vars.contains(v) => Some(v -> b)
-        case _ => None
-      }
-    }.toMap
     Sol(pad(l).unionByName(pad(r)), reps, l.certain intersect r.certain,
-      sharedNums.toSet, inl, numAll, fam = fam,
-      card = for (a <- l.card; b <- r.card) yield a + b)
+      sharedNums.toSet, Profile.union(l, r, sharedNums.toSet))
   }
 
   // ---- order by -------------------------------------------------------------
@@ -1838,9 +1702,9 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     * [[graft.model.TermId]]); an all-numeric variable sorts by its companion.
     */
   private def sortComponents(sol0: Sol, e: Expr): (Sol, Seq[Column]) = e match {
-    case EVar(n) if sol0.inl.contains(n) && sol0.reps.get(n).contains(IdRep) =>
+    case EVar(n) if sol0.prof.inl.contains(n) && sol0.reps.get(n).contains(IdRep) =>
       (sol0, Seq(col(bt(n))))
-    case EVar(n) if sol0.numAll.contains(n) && sol0.nums.contains(n) =>
+    case EVar(n) if sol0.prof.numAll.contains(n) && sol0.nums.contains(n) =>
       (sol0, Seq(col(bt(sol0.numCol(n)))))
     case _ =>
       val (sol, v) = exprColumn(sol0, e)
@@ -1863,26 +1727,26 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     val inputs: Seq[(AggSpec, Option[(Column, String)])] = aggs.map { a =>
       a.e match {
         case None => (a, None)
-        case Some(EVar(n)) if sol.reps.get(n).contains(IdRep) && sol.inl.contains(n) &&
+        case Some(EVar(n)) if sol.reps.get(n).contains(IdRep) && sol.prof.inl.contains(n) &&
             Seq("min", "max", "sample").contains(a.fn) =>
           (a, Some((col(bt(n)), "id")))
         case Some(EVar(n)) if sol.reps.get(n).contains(IdRep) &&
-            sol.fam.get(n).contains(Sol.FAM_INT) && Seq("sum", "avg").contains(a.fn) =>
+            sol.prof.fam.get(n).contains(Sol.FAM_INT) && Seq("sum", "avg").contains(a.fn) =>
           (a, Some((col(bt(n)).bitwiseAND(TermId.PAYLOAD_MASK) - TermId.BIAS, "int")))
-        case Some(EVar(n)) if sol.nums.contains(n) && sol.numAll.contains(n) &&
-            sol.fam.get(n).contains(Sol.FAM_DBL) && Seq("sum", "avg").contains(a.fn) =>
+        case Some(EVar(n)) if sol.nums.contains(n) && sol.prof.numAll.contains(n) &&
+            sol.prof.fam.get(n).contains(Sol.FAM_DBL) && Seq("sum", "avg").contains(a.fn) =>
           (a, Some((col(bt(sol.numCol(n))), "num")))
-        case Some(EVar(n)) if sol.decs.contains(n) &&
+        case Some(EVar(n)) if sol.prof.decs.contains(n) &&
             sol.reps.get(n).contains(IdRep) &&
-            sol.fam.get(n).contains(Sol.FAM_DEC) && Seq("sum", "avg").contains(a.fn) =>
+            sol.prof.fam.get(n).contains(Sol.FAM_DEC) && Seq("sum", "avg").contains(a.fn) =>
           // exact decimal value from the scan companion; the id's type tag
           // distinguishes xsd:integer from xsd:decimal for per-group promotion
           (a, Some((struct(col(bt(sol.decCol(n))).as("d"),
             (shiftright(col(bt(n)), TermId.PAYLOAD_BITS).bitwiseAND(0xFF) ===
               TermId.TAG_DECIMAL).as("isdec")), "dec")))
-        case Some(EVar(n)) if sol.decs.contains(n) &&
+        case Some(EVar(n)) if sol.prof.decs.contains(n) &&
             sol.reps.get(n).contains(TermRep) &&
-            sol.fam.get(n).contains(Sol.FAM_DEC) && Seq("sum", "avg").contains(a.fn) =>
+            sol.prof.fam.get(n).contains(Sol.FAM_DEC) && Seq("sum", "avg").contains(a.fn) =>
           // extend-bound exact value (fastDec companion); the view's datatype
           // field distinguishes xsd:integer from xsd:decimal for promotion
           (a, Some((struct(col(bt(sol.decCol(n))).as("d"),
@@ -2033,7 +1897,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     // salted plan's extra exchange is bounded overhead, an un-salted hot
     // group is an unbounded single-reducer collect — defense wins at scale
     val salted = keys.nonEmpty && aggs.exists(_.fn == "group_concat") &&
-      twoPhaseSafe && sol.card.forall(_ > hotGroupCap)
+      twoPhaseSafe && sol.prof.card.forall(_ > hotGroupCap)
     val gks0 = keys.filter(sol.reps.contains).map(v => col(bt(v)))
     // keys declared but none materialized (all provably unbound): keep the
     // grouping KEYED via a constant — empty input must yield zero groups
@@ -2112,10 +1976,6 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       if (grouped.columns.contains("__gk_const")) grouped.drop("__gk_const")
       else grouped
     val wraps = scala.collection.mutable.LinkedHashMap.empty[String, Column]
-    val numView: (Column, String) => Column = (c, dt) => when(c.isNotNull, struct(
-      lit(TermRow.KIND_LITERAL).as("kind"), c.cast(StringType).as("lex"),
-      lit(dt).as("dt"), lit(null).cast(StringType).as("lang"),
-      c.cast(DoubleType).as("num"))).otherwise(lit(null).cast(TermRow.schema))
     val strView: Column => Column = c => when(c.isNotNull, struct(
       lit(TermRow.KIND_LITERAL).as("kind"), c.as("lex"),
       lit(Term.xsdString).as("dt"), lit(null).cast(StringType).as("lang"),
@@ -2172,6 +2032,11 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       .withColumns(wraps.toMap)
       .drop(inputs.indices.flatMap(i => (0 until 6).map(j => s"__agg_out_${i}_$j")): _*)
     val keptKeys = keys.filter(sol.reps.contains)
+    // the keys keep their value facts (each output row is one input key
+    // tuple) but not their companions, which `pre` did not select; the
+    // aggregate exchange re-keys the frame; a keyed grouping has at most as
+    // many groups as input rows, a key-less one exactly one row
+    val prof = sol.prof.restrict(keptKeys.toSet).withoutCompanions.rekeyed
     Sol(out,
       keptKeys.map(v => v -> sol.reps(v)).toMap ++
         aggs.map(a => a.out -> (if (idOuts.contains(a.out)) IdRep else TermRep: Rep)),
@@ -2180,10 +2045,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       (sol.certain intersect keptKeys.toSet) ++
         aggs.filter(a => a.fn == "count" || a.fn == "group_concat").map(_.out),
       Set.empty,
-      (sol.inl intersect keptKeys.toSet) ++ idOuts,
-      Set.empty,
-      fam = sol.fam.filter(kv => keptKeys.contains(kv._1)),
-      card = sol.card) // group count ≤ input rows
+      prof.copy(inl = prof.inl ++ idOuts, card = if (keys.isEmpty) Some(1L) else prof.card))
   }
 
   // ---- windows --------------------------------------------------------------
@@ -2224,7 +2086,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
         Compiler.DefaultHotGroupCap.toString).toLong
       val saltedWhole = spec.fn == "group_concat" && spec.e.isDefined &&
         spec.frame.forall(_ == (Long.MinValue, Long.MaxValue)) && !spec.range &&
-        ordComps.forall(_._2) && sol.card.forall(_ > hotGroupCap)
+        ordComps.forall(_._2) && sol.prof.card.forall(_ > hotGroupCap)
       if (saltedWhole) {
         sol = saltedWindowConcat(sol, spec, ordComps)
       } else {
@@ -2232,8 +2094,8 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       // num fast path: double-family vars aggregate their companion directly
       // (COUNT is type-agnostic; SUM/AVG need FAM_DBL for correct typing)
       val numFast: Option[Column] = spec.e match {
-        case Some(EVar(n)) if sol.nums.contains(n) && sol.numAll.contains(n) &&
-            (spec.fn == "count" || sol.fam.get(n).contains(Sol.FAM_DBL)) &&
+        case Some(EVar(n)) if sol.nums.contains(n) && sol.prof.numAll.contains(n) &&
+            (spec.fn == "count" || sol.prof.fam.get(n).contains(Sol.FAM_DBL)) &&
             Seq("sum", "avg", "count").contains(spec.fn) =>
           Some(col(bt(sol.numCol(n))))
         case _ => None
@@ -2241,8 +2103,8 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       // exact-family fast path: decimal companion + per-row decimal flag
       // (same promotion logic as compileGroup's "dec" aggregation mode)
       val decFast: Option[(Column, Column)] = spec.e match {
-        case Some(EVar(n)) if numFast.isEmpty && sol.decs.contains(n) &&
-            sol.fam.get(n).contains(Sol.FAM_DEC) &&
+        case Some(EVar(n)) if numFast.isEmpty && sol.prof.decs.contains(n) &&
+            sol.prof.fam.get(n).contains(Sol.FAM_DEC) &&
             Seq("sum", "avg").contains(spec.fn) =>
           val isdec = sol.reps.get(n) match {
             case Some(IdRep) =>
@@ -2258,14 +2120,6 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
         else spec.e.map { expr =>
           val (s2, c) = exprColumn(sol, expr); sol = s2; c
         }
-      val numView: Column => Column = c => when(c.isNotNull, struct(
-        lit(TermRow.KIND_LITERAL).as("kind"), c.cast(StringType).as("lex"),
-        lit(Term.xsdDouble).as("dt"), lit(null).cast(StringType).as("lang"),
-        c.cast(DoubleType).as("num"))).otherwise(lit(null).cast(TermRow.schema))
-      val intView: Column => Column = c => when(c.isNotNull, struct(
-        lit(TermRow.KIND_LITERAL).as("kind"), c.cast(StringType).as("lex"),
-        lit(Term.xsdInteger).as("dt"), lit(null).cast(StringType).as("lang"),
-        c.cast(DoubleType).as("num"))).otherwise(lit(null).cast(TermRow.schema))
 
       val frame = spec.frame
       val framed =
@@ -2371,18 +2225,14 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
             lit(null).cast(DoubleType).as("num")))
         case other => throw new IllegalArgumentException(s"window fn: $other")
       }
-      // Preserve the store type-profile knowledge (inl/numAll/fam/decs/card)
-      // across the window: a withColumn changes no existing var, so every
-      // fast path stays live. Losing it here forced the NEXT window's order
-      // keys and the final projection onto the generic view path — a
-      // dictionary decode JOIN between two same-partition-key windows, which
-      // re-keys the frame and makes the second window pay a fresh Exchange
-      // (the q_sparql_window "second window exchange"). bucketS is dropped —
-      // the window's own exchange replaced the bucketed layout — and
-      // sortCols reset as before (a window is order-destroying).
+      // a window adds a column and changes no existing var, so the value
+      // facts and card survive (losing them forced the NEXT window's order
+      // keys and the final projection onto a dictionary decode join, which
+      // re-keyed the frame into a fresh Exchange for the second window of
+      // q_sparql_window); the window's own exchange replaced the layout, and
+      // it destroys the order
       sol = sol.copy(df = sol.df.withColumn(spec.out, outCol),
-        reps = sol.reps + (spec.out -> TermRep),
-        sortCols = Nil, bucketS = Set.empty)
+        reps = sol.reps + (spec.out -> TermRep), prof = sol.prof.rekeyed, sortCols = Nil)
       }
     }
     sol
@@ -2433,11 +2283,10 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
         base.join(aggDf, cond, "left")
           .drop(partVars.indices.map(i => s"__wk_$i"): _*)
       }
-    // keep the type-profile sets (inl/numAll/fam/decs) — the join adds a
-    // column and changes no existing var, so downstream decode fast paths
-    // stay live (same rationale as the non-salted branch in compileWindow)
+    // the join back adds a column and matches each row at most once (one
+    // aggregate row per key): as in the non-salted branch of compileWindow
     sol.copy(df = joined, reps = sol.reps + (spec.out -> TermRep),
-      sortCols = Nil, bucketS = Set.empty)
+      prof = sol.prof.rekeyed, sortCols = Nil)
   }
 
   // ---- property paths -------------------------------------------------------
@@ -2453,9 +2302,8 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     case PInv(p) => compilePath(o, p, s, g)
     case PSeq(a, b) =>
       val mid = V("__pathmid_" + freshId())
-      // stripVars (not a bare Sol(...)) so the endpoints' type-profile
-      // knowledge (inl/numAll/fam) survives the sequence step — losing it
-      // forced dictionary decode joins at the result edge of q_path_seq
+      // stripVars keeps the endpoints' facts: losing them forced dictionary
+      // decode joins at the result edge of q_path_seq
       stripVars(
         joinSols(compilePath(s, a, mid, g), compilePath(mid, b, o, g), "inner"),
         Seq(mid.name))
@@ -2500,9 +2348,8 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     case PZeroOne(p) =>
       def zoLeg(gn: Node): Sol = {
         val one = compilePath(s, p, o, gn)
-        unionSols(zeroLength(s, o, gn), one) match { case u =>
-          Sol(u.df.dropDuplicates(), u.reps, u.certain, Set.empty)
-        }
+        val u = unionSols(zeroLength(s, o, gn), one)
+        u.copy(df = u.df.dropDuplicates()) // a row subset: every fact holds
       }
       g match {
         case V(gv) => perNamedGraph(gv, zoLeg)
@@ -2524,7 +2371,7 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     val a = V("__pa"); val b = V("__pb")
     val sol = compilePath(a, p, b, g)
     (sol.df.select(col("__pa").as("__ca"), col("__pb").as("__cb")).dropDuplicates(),
-      sol.card)
+      sol.prof.card)
   }
 
   /** All graph terms (for zero-length path over unbound endpoints — reference
@@ -2593,28 +2440,26 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     * space (TermRep) — mixed-rep joins/unions convert as needed. */
   private def constRow(v: String, t: Term): Sol = store.idOf(t) match {
     case Some(id) =>
-      Sol(spark.range(1).select(lit(id).as(v)), Map(v -> IdRep), Set(v), Set.empty)
+      Sol.ofIds(spark.range(1).select(lit(id).as(v)), Seq(v))
     case None =>
       val schema = StructType(Seq(StructField(v, TermRow.schema, nullable = true)))
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(Seq(Row(TermRow.toRow(t))), 1), schema)
-      Sol(df, Map(v -> TermRep), Set(v), Set.empty, consts = Map(v -> Seq(t)),
-        card = Some(1L))
+      Sol(df, Map(v -> TermRep), Set(v), Set.empty,
+        Profile(consts = Map(v -> Seq(t)), card = Some(1L)))
   }
 
   private def zeroLength(s: Node, o: Node, g: Node): Sol = (s, o) match {
     case (V(sn), V(on)) =>
       val t = graphTerms(g)
-      Sol(t.select(col("t").as(sn), col("t").as(on)),
-        Map(sn -> IdRep, on -> IdRep), Set(sn, on), Set.empty)
+      Sol.ofIds(t.select(col("t").as(sn), col("t").as(on)), Seq(sn, on))
     case (V(sn), T(t)) => constRow(sn, t)
     case (T(t), V(on)) => constRow(on, t)
     case (T(t1), T(t2)) =>
       // term equality decides the zero-length match; graph membership is
       // irrelevant (ALP includes the start node before any step)
       val df = spark.range(1).select(lit(1).as("__one"))
-      Sol(if (t1 == t2) df.select() else df.select().filter(lit(false)),
-        Map.empty, Set.empty, Set.empty)
+      Sol.ofIds(if (t1 == t2) df.select() else df.select().filter(lit(false)), Nil)
   }
 
   /** Iterative fixpoint for p+ / p*. Seeds from a bound subject/object when
@@ -2758,23 +2603,22 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
     (s, o) match {
       case (V(sn), V(on)) if sn == on =>
         // same var on both ends (?x p+ ?x): only cyclic pairs survive
-        Sol(withZero.filter(col("__ca") === col("__cb"))
-            .select(col("__ca").as(sn)),
-          Map(sn -> IdRep), Set(sn), Set.empty)
+        Sol.ofIds(withZero.filter(col("__ca") === col("__cb")).select(col("__ca").as(sn)),
+          Seq(sn))
       case _ =>
         var df = withZero
-        var reps = Map.empty[String, Rep]
+        var vars = Seq.empty[String]
         s match {
           case T(t) => df = df.filter(col("__ca") === store.idOf(t).getOrElse(Long.MinValue)).drop("__ca")
-          case V(n) => df = df.withColumnRenamed("__ca", n); reps += n -> IdRep
+          case V(n) => df = df.withColumnRenamed("__ca", n); vars :+= n
           case DefaultGraph => ()
         }
         o match {
           case T(t) => df = df.filter(col("__cb") === store.idOf(t).getOrElse(Long.MinValue)).drop("__cb")
-          case V(n) => df = df.withColumnRenamed("__cb", n); reps += n -> IdRep
+          case V(n) => df = df.withColumnRenamed("__cb", n); vars :+= n
           case DefaultGraph => ()
         }
-        Sol(df, reps, reps.keySet, Set.empty)
+        Sol.ofIds(df, vars)
     }
   }
 }

@@ -104,23 +104,21 @@ object Results {
     case _ => false
   }
 
+  /** The distinct bindings one template instantiates: its vars, plus the
+    * `__cbrow` row id when it mints blank nodes. */
+  private def templateRows(sol: Sol, s: Node, p: Node, o: Node): Sol =
+    sol.distinctOf(Seq(s, p, o).collect { case V(v) if sol.reps.contains(v) => v }.distinct,
+      if (Seq(s, p, o).exists(templateBNode)) Seq("__cbrow") else Nil)
+
   def construct(c: Compiler, sol0a: Sol, templates: Seq[(Node, Node, Node)]): DataFrame = {
     val anyB = templates.exists { case (s, p, o) => Seq(s, p, o).exists(templateBNode) }
     val sol0 = if (!anyB) sol0a
       else sol0a.copy(df = sol0a.df.withColumn("__cbrow", monotonically_increasing_id()))
     val dfs = templates.map { case (s, p, o) =>
-      val tvars = Seq(s, p, o).collect { case V(v) if sol0.reps.contains(v) => v }.distinct
-      val hasB = Seq(s, p, o).exists(templateBNode)
-      val cols = tvars.map(v => col(s"`$v`")) ++ (if (hasB) Seq(col("__cbrow")) else Nil)
       // dedup in native rep first (id-space when the var came from a scan);
       // a bnode template carries the rowid, so every solution row survives
       // (each must mint its own bnodes)
-      val deduped = Sol(
-        sol0.df.select(cols: _*).dropDuplicates(),
-        sol0.reps.filter(kv => tvars.contains(kv._1)),
-        sol0.certain intersect tvars.toSet, Set.empty,
-        sol0.inl intersect tvars.toSet, Set.empty)
-      var sol = deduped
+      var sol = templateRows(sol0, s, p, o)
       // (lexical form, term kind): the kind drives RDF triple validity —
       // a literal subject or non-IRI predicate instantiation is dropped,
       // not emitted (SPARQL 1.1 §16.2: invalid RDF triples are excluded)
@@ -160,15 +158,7 @@ object Results {
     val sol0 = if (!anyB) sol0a
       else sol0a.copy(df = sol0a.df.withColumn("__cbrow", monotonically_increasing_id()))
     val dfs = templates.map { case (s, p, o) =>
-      val tvars = Seq(s, p, o).collect { case V(v) if sol0.reps.contains(v) => v }.distinct
-      val hasB = Seq(s, p, o).exists(templateBNode)
-      val cols = tvars.map(v => col(s"`$v`")) ++ (if (hasB) Seq(col("__cbrow")) else Nil)
-      val deduped = Sol(
-        sol0.df.select(cols: _*).dropDuplicates(),
-        sol0.reps.filter(kv => tvars.contains(kv._1)),
-        sol0.certain intersect tvars.toSet, Set.empty,
-        sol0.inl intersect tvars.toSet, Set.empty)
-      var sol = deduped
+      var sol = templateRows(sol0, s, p, o)
       def colOf(n: Node): Column = n match {
         case T(BNode(b)) => struct(
           lit(TermRow.KIND_BLANK).as("kind"),
@@ -221,14 +211,12 @@ object Results {
         // semi-join sort-merge-shuffles the ENTIRE store to probe a handful
         // of ids — a full-dataset shuffle at 100 TB. Unbounded targets keep
         // the shuffle path (broadcasting them could OOM the driver).
-        val ids = if (sol.card.exists(_ * vs.size <= 1000000L)) broadcast(ids0)
+        val ids = if (sol.prof.card.exists(_ * vs.size <= 1000000L)) broadcast(ids0)
           else ids0
         c.store.quads.join(ids, c.store.quads("s") === ids("__tid"), "left_semi")
       }
-    val dsol = Sol(
-      q.select(col("s").as("ds"), col("p").as("dp"), col("o").as("dobj")),
-      Map("ds" -> IdRep, "dp" -> IdRep, "dobj" -> IdRep),
-      Set("ds", "dp", "dobj"), Set.empty)
+    val dsol = Sol.ofIds(q.select(col("s").as("ds"), col("p").as("dp"), col("o").as("dobj")),
+      Seq("ds", "dp", "dobj"))
     materialize(c, dsol).select(
       col("ds").getField("lex").as("subject"),
       col("dp").getField("lex").as("predicate"),

@@ -58,13 +58,6 @@ object Battery {
         ExprEval.Ctx(nowEpochUs = 1766188800000000L))
     })
 
-  /** Like [[run]] but over the persisted bucketed store. */
-  def runBucketed(spark: SparkSession, dir: String, a: Algebra,
-      casts: (String, String)*): DataFrame = {
-    val c = bucketedCompiler(spark, dir)
-    Results.native(c, c.compile(Rewriter.rewrite(a)), casts)
-  }
-
   def p(table: String, c: String): T = N.iri(s"urn:p:$table:$c")
   def fk(t: String): T = N.iri(s"urn:fk:$t")
   def qp(s: Node, pr: Node, o: Node): QuadPattern = QuadPattern(s, pr, o)
@@ -243,6 +236,24 @@ object Battery {
     "AND x.lenb = y.lenb AND x.gr = y.gr AND x.doc_id < y.doc_id), " +
     "i AS (SELECT a, b, count(*) AS inter FROM pairs GROUP BY 1, 2) "
 
+  /** The customer star of q_bgp_star, q_bgp_star_bucketed and q_bgp_star_mem. */
+  private val star = BGP(Seq(
+    qp(V("c"), p("customer", "c_name"), V("c_name")),
+    qp(V("c"), p("customer", "c_acctbal"), V("c_acctbal")),
+    qp(V("c"), p("customer", "c_mktsegment"), V("c_mktsegment"))))
+  private val starCasts =
+    Seq("c_name" -> "string", "c_acctbal" -> "double", "c_mktsegment" -> "string")
+  private val starSql = Some("SELECT c_name, c_acctbal, c_mktsegment FROM customer")
+
+  /** The lineitem → orders join of q_fk_join and q_fk_join_persisted. */
+  private val fkJoin = BGP(Seq(
+    qp(V("l"), fk("orders"), V("o")),
+    qp(V("l"), p("lineitem", "l_quantity"), V("qty")),
+    qp(V("o"), p("orders", "o_orderstatus"), V("status"))))
+  private val fkCasts = Seq("status" -> "string", "qty" -> "double")
+  private val fkSql = Some("SELECT o.o_orderstatus AS status, l.l_quantity AS qty " +
+    "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey")
+
   val entries: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // ---- scans / BGP / joins ----
@@ -252,61 +263,29 @@ object Battery {
         "c_name" -> "string"),
       Some("SELECT c_name FROM customer")),
 
-    ("q_bgp_star",
-      (s: SparkSession, d: String) => run(s, d,
-        BGP(Seq(
-          qp(V("c"), p("customer", "c_name"), V("c_name")),
-          qp(V("c"), p("customer", "c_acctbal"), V("c_acctbal")),
-          qp(V("c"), p("customer", "c_mktsegment"), V("c_mktsegment")))),
-        "c_name" -> "string", "c_acctbal" -> "double", "c_mktsegment" -> "string"),
-      Some("SELECT c_name, c_acctbal, c_mktsegment FROM customer")),
+    ("q_bgp_star", (s: SparkSession, d: String) => run(s, d, star, starCasts: _*), starSql),
 
     ("q_bgp_star_mem", // same star, over the IN-MEMORY dictionary-encoded
       // store (the non-persisted path: ad-hoc loads, tests, REPL sessions)
       (s: SparkSession, d: String) => {
         val c = memCompiler(s, d)
-        Results.native(c, c.compile(Rewriter.rewrite(BGP(Seq(
-          qp(V("c"), p("customer", "c_name"), V("c_name")),
-          qp(V("c"), p("customer", "c_acctbal"), V("c_acctbal")),
-          qp(V("c"), p("customer", "c_mktsegment"), V("c_mktsegment")))))),
-          Seq("c_name" -> "string", "c_acctbal" -> "double",
-            "c_mktsegment" -> "string"))
-      },
-      Some("SELECT c_name, c_acctbal, c_mktsegment FROM customer")),
+        Results.native(c, c.compile(Rewriter.rewrite(star)), starCasts)
+      }, starSql),
 
-    ("q_bgp_star_bucketed", // same star, but over the persisted subject-
-      // bucketed layout: the three same-subject scans are co-partitioned and
-      // co-sorted, so the star joins plan with no shuffle exchange
-      (s: SparkSession, d: String) => runBucketed(s, d,
-        BGP(Seq(
-          qp(V("c"), p("customer", "c_name"), V("c_name")),
-          qp(V("c"), p("customer", "c_acctbal"), V("c_acctbal")),
-          qp(V("c"), p("customer", "c_mktsegment"), V("c_mktsegment")))),
-        "c_name" -> "string", "c_acctbal" -> "double", "c_mktsegment" -> "string"),
-      Some("SELECT c_name, c_acctbal, c_mktsegment FROM customer")),
+    // the persisted subject-bucketed layout: the three same-subject scans
+    // are co-partitioned and co-sorted, so the star joins plan with no
+    // shuffle exchange (the same query as q_bgp_star: [[run]] is bucketed)
+    ("q_bgp_star_bucketed", (s: SparkSession, d: String) => run(s, d, star, starCasts: _*),
+      starSql),
 
-    ("q_fk_join",
-      (s: SparkSession, d: String) => run(s, d,
-        BGP(Seq(
-          qp(V("l"), fk("orders"), V("o")),
-          qp(V("l"), p("lineitem", "l_quantity"), V("qty")),
-          qp(V("o"), p("orders", "o_orderstatus"), V("status")))),
-        "status" -> "string", "qty" -> "double"),
-      Some("SELECT o.o_orderstatus AS status, l.l_quantity AS qty " +
-        "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey")),
+    ("q_fk_join", (s: SparkSession, d: String) => run(s, d, fkJoin, fkCasts: _*), fkSql),
 
-    ("q_fk_join_persisted", // same fk join over the PERSISTED store layout:
-      // scans hit the predicate-partitioned parquet (each pattern reads only
-      // its predicate's partition — the on-disk analogue of a (p,…) index),
-      // star-side scans stay co-bucketed on s
-      (s: SparkSession, d: String) => runBucketed(s, d,
-        BGP(Seq(
-          qp(V("l"), fk("orders"), V("o")),
-          qp(V("l"), p("lineitem", "l_quantity"), V("qty")),
-          qp(V("o"), p("orders", "o_orderstatus"), V("status")))),
-        "status" -> "string", "qty" -> "double"),
-      Some("SELECT o.o_orderstatus AS status, l.l_quantity AS qty " +
-        "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey")),
+    // the PERSISTED store layout: scans hit the predicate-partitioned parquet
+    // (each pattern reads only its predicate's partition — the on-disk
+    // analogue of a (p,…) index), star-side scans stay co-bucketed on s
+    // (the same query as q_fk_join: [[run]] is bucketed)
+    ("q_fk_join_persisted", (s: SparkSession, d: String) => run(s, d, fkJoin, fkCasts: _*),
+      fkSql),
 
     ("q_cross_join", // join with no shared vars = cartesian (NestedLoopJoinPlan)
       (s: SparkSession, d: String) => run(s, d,

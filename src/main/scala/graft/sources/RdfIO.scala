@@ -137,12 +137,8 @@ object RdfIO {
   /** Dump an encoded store back to N-Quads (late-materializing the dictionary). */
   def dumpNQuads(store: RdfStore, path: String): Unit = {
     val c = new graft.engine.Compiler(store, graft.engine.ExprEval.Ctx(0L))
-    val sol = graft.engine.Sol(
-      store.quads.select(col("s").as("qs"), col("p").as("qp"),
-        col("o").as("qo"), col("g").as("qg")),
-      Map("qs" -> graft.engine.IdRep, "qp" -> graft.engine.IdRep,
-        "qo" -> graft.engine.IdRep, "qg" -> graft.engine.IdRep),
-      Set("qs", "qp", "qo", "qg"), Set.empty)
+    val sol = graft.engine.Sol.ofIds(store.quads.select(col("s").as("qs"), col("p").as("qp"),
+      col("o").as("qo"), col("g").as("qg")), Seq("qs", "qp", "qo", "qg"))
     val m = graft.engine.Results.materialize(c, sol)
     toNQuadLines(m.select(col("qs"), col("qp"), col("qo"), col("qg")))
       .write.mode("overwrite").text(path)

@@ -120,11 +120,9 @@ object TurtleWriter {
       prefixes: Map[String, String] = wellKnown): Unit = {
     import org.apache.spark.sql.functions.col
     val c = new graft.engine.Compiler(store, graft.engine.ExprEval.Ctx(0L))
-    val sol = graft.engine.Sol(
+    val sol = graft.engine.Sol.ofIds(
       store.quads.select(col("s").as("ts"), col("p").as("tp"), col("o").as("tobj")),
-      Map("ts" -> graft.engine.IdRep, "tp" -> graft.engine.IdRep,
-        "tobj" -> graft.engine.IdRep),
-      Set("ts", "tp", "tobj"), Set.empty)
+      Seq("ts", "tp", "tobj"))
     val m = graft.engine.Results.materialize(c, sol)
     val doc = fromTermFrame(m.select(col("ts").as("s"), col("tp").as("p"),
       col("tobj").as("o")), prefixes)

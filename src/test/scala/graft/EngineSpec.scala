@@ -403,8 +403,8 @@ class EngineSpec extends AnyFunSuite {
     // compile() prunes it unless some downstream aggregate/arithmetic consumes
     // it (per-query decNeeds analysis)
     val scan = c.compilePattern(QuadPattern(V("x"), T(iri("price")), V("v")))
-    assert(scan.fam.get("v").contains(Sol.FAM_DEC), "price scan must be FAM_DEC")
-    assert(scan.decs.contains("v") && scan.df.columns.contains("__d_v"))
+    assert(scan.prof.fam.get("v").contains(Sol.FAM_DEC), "price scan must be FAM_DEC")
+    assert(scan.prof.decs.contains("v") && scan.df.columns.contains("__d_v"))
     val bare = c.compile(BGP(Seq(QuadPattern(V("x"), T(iri("price")), V("v")))))
     assert(!bare.df.columns.contains("__d_v"),
       "no aggregate/arithmetic consumes ?v — the companion must be pruned")
@@ -457,7 +457,7 @@ class EngineSpec extends AnyFunSuite {
     val c = new Compiler(st, ExprEval.Ctx(nowEpochUs = 0L))
     // the scan must have taken the FAM_INT path for the test to mean anything
     assert(c.compile(BGP(Seq(QuadPattern(V("x"), T(iri("huge")), V("v")))))
-      .fam.get("v").contains(Sol.FAM_INT))
+      .prof.fam.get("v").contains(Sol.FAM_INT))
     for (distinct <- Seq(false, true)) {
       val a = AGroup(BGP(Seq(QuadPattern(V("x"), T(iri("huge")), V("v")))),
         Seq.empty, Seq(AggSpec("s", "sum", Some(EVar("v")), distinct = distinct)))
@@ -495,8 +495,8 @@ class EngineSpec extends AnyFunSuite {
     // aggregation mode rather than the generic typed path (the companion
     // itself is pruned on a bare BGP with no aggregate consumer — by design)
     val scanned = c.compile(BGP(Seq(QuadPattern(V("x"), T(iri("amt")), V("v")))))
-    assert(scanned.fam.get("v").contains(Sol.FAM_DEC),
-      s"expected decimal family on ?v (fam=${scanned.fam})")
+    assert(scanned.prof.fam.get("v").contains(Sol.FAM_DEC),
+      s"expected decimal family on ?v (fam=${scanned.prof.fam})")
     for (distinct <- Seq(false, true)) {
       val a = AGroup(BGP(Seq(QuadPattern(V("x"), T(iri("amt")), V("v")))),
         Seq.empty, Seq(AggSpec("s", "sum", Some(EVar("v")), distinct = distinct)))
@@ -528,13 +528,13 @@ class EngineSpec extends AnyFunSuite {
     val star = comp.compile(BGP(Seq(
       QuadPattern(V("c"), p("customer", "c_mktsegment"), V("seg")),
       QuadPattern(V("c"), fk("nation"), V("n")))))
-    assert(star.card.contains(150L), s"star card bound: ${star.card}")
-    assert(star.multOne.contains("c"), s"subject multiplicity: ${star.multOne}")
+    assert(star.prof.card.contains(150L), s"star card bound: ${star.prof.card}")
+    assert(star.prof.multOne.contains("c"), s"subject multiplicity: ${star.prof.multOne}")
     // chaining into the orders fan-out keeps a bound too: each order row
     // matches at most one customer-star row (c is multOne on the star side)
     val chained = comp.joinSols(star,
       comp.compilePattern(QuadPattern(V("o"), fk("customer"), V("c"))), "inner")
-    assert(chained.card.contains(1500L), s"chained card bound: ${chained.card}")
+    assert(chained.prof.card.contains(1500L), s"chained card bound: ${chained.prof.card}")
     // the provably-small star intermediate is therefore broadcast into the
     // next join — the bind-join decision made from statistics, not AQE luck
     val plan = chained.df.queryExecution.sparkPlan.toString
@@ -669,10 +669,12 @@ class EngineSpec extends AnyFunSuite {
     // preserved side, but with a provably-small left and a huge right the
     // compiler hints SHUFFLE_HASH so Spark builds the hash table on the LEFT
     // (SPARK-36612) instead of sort-merging both sides
-    val small = comp.compile(BGP(Seq(QuadPattern(V("s"), p("region", "r_name"), V("rn")))))
-      .copy(card = Some(5L))
-    val huge = comp.compile(BGP(Seq(QuadPattern(V("s"), p("lineitem", "l_quantity"), V("q")))))
-      .copy(card = Some(500000000L)) // pretend 100 TB-scale fact side
+    def withCard(sol: Sol, card: Option[Long]) = sol.copy(prof = sol.prof.copy(card = card))
+    val small = withCard(
+      comp.compile(BGP(Seq(QuadPattern(V("s"), p("region", "r_name"), V("rn"))))), Some(5L))
+    val huge = withCard( // pretend 100 TB-scale fact side
+      comp.compile(BGP(Seq(QuadPattern(V("s"), p("lineitem", "l_quantity"), V("q"))))),
+      Some(500000000L))
     val joined = comp.joinSols(small, huge, "left_outer")
     val phys = joined.df.queryExecution.executedPlan.toString
     assert(phys.contains("ShuffledHashJoin") && phys.contains("BuildLeft"),
@@ -680,7 +682,7 @@ class EngineSpec extends AnyFunSuite {
     // and the default (no stats skew) keeps whatever Catalyst picks — sanity:
     // results are unaffected by the hint
     assert(joined.df.count() ==
-      comp.joinSols(small.copy(card = None), huge.copy(card = None), "left_outer").df.count())
+      comp.joinSols(withCard(small, None), withCard(huge, None), "left_outer").df.count())
   }
 
   test("reference geo example end-to-end: geo.ttl + geo.rq reproduce the README result") {
@@ -744,7 +746,7 @@ class EngineSpec extends AnyFunSuite {
     var claimed = 0
     for (a <- audited) {
       val sol = comp.compile(a)
-      for (c <- sol.card) {
+      for (c <- sol.prof.card) {
         claimed += 1
         assert(sol.df.count() <= c, s"card bound $c violated for $a")
       }
@@ -1172,4 +1174,112 @@ class EngineSpec extends AnyFunSuite {
         "salted two-phase windowed GROUP_CONCAT must equal the single-phase window")
     } finally spark.conf.unset(Compiler.HotGroupCapKey)
   }
+
+  // ---- Profile transfer rules, and plan pins of the entries whose
+  // statistics facts used to be dropped on the way to the result edge ----
+
+  lazy val bucketed = graft.queries.Battery.compiler(spark, sf) // persisted, subject-bucketed
+  def scan(pr: T, o: String) = bucketed.compile(BGP(Seq(QuadPattern(V("c"), pr, V(o)))))
+
+  /** A sol binding `vars` as ids; only its vars and facts matter to the rules. */
+  def idSol(vars: Seq[String], prof: Profile) =
+    Sol.ofIds(spark.emptyDataFrame, vars).copy(prof = prof)
+
+  test("profile: the layout fact is cleared where an exchange re-keys the frame") {
+    val s = scan(p("customer", "c_acctbal"), "bal")
+    assert(s.prof.bucketS == Set("c") && s.prof.inl.nonEmpty && s.prof.card.isDefined)
+    val rekeyed = s.prof.rekeyed
+    assert(rekeyed.bucketS.isEmpty)
+    assert(rekeyed == s.prof.copy(bucketS = Set.empty), "only the layout fact goes")
+    val windowed = bucketed.compile(AWindow(BGP(Seq(QuadPattern(V("c"), p("customer", "c_acctbal"),
+      V("bal")))), Seq(WinSpec("rk", "rank", None, Seq("c"), Seq(SortKey(EVar("bal"), true))))))
+    assert(windowed.prof.bucketS.isEmpty, "a window re-keys the frame")
+    assert(windowed.prof.inl == s.prof.inl && windowed.prof.card == s.prof.card,
+      "a window adds a column: value facts and card survive")
+    val grouped = bucketed.compile(AGroup(BGP(Seq(QuadPattern(V("c"), p("customer", "c_acctbal"),
+      V("bal")))), Seq("c"), Seq(AggSpec("n", "count"))))
+    assert(grouped.prof.bucketS.isEmpty, "a group re-keys the frame")
+  }
+
+  test("profile: semi and anti joins keep the left side's card and facts") {
+    val left = scan(p("customer", "c_acctbal"), "bal")
+    val right = scan(p("customer", "c_name"), "name")
+    for (kind <- Seq("left_semi", "left_anti")) {
+      val out = bucketed.joinSols(left, right, kind)
+      assert(out.prof == left.prof, s"$kind: ${out.prof} vs ${left.prof}")
+      assert(out.prof.card == left.prof.card && left.prof.card.isDefined)
+    }
+    // an inner join on a functional subject keeps the other side's bound
+    val inner = bucketed.joinSols(left, right, "inner")
+    assert(inner.prof.card.isDefined && inner.prof.card.get <= left.prof.card.get)
+  }
+
+  test("profile: a union keeps a value fact where every binding branch has it") {
+    val l = idSol(Seq("x", "y", "w"), Profile(inl = Set("x", "y"), fam = Map("x" -> Sol.FAM_INT,
+      "w" -> Sol.FAM_DBL), multOne = Set("x"), bucketS = Set("x"), card = Some(3L)))
+    val r = idSol(Seq("x", "z", "w"), Profile(inl = Set("z"), fam = Map("x" -> Sol.FAM_INT,
+      "w" -> Sol.FAM_DEC), multOne = Set("x"), bucketS = Set("x"), card = Some(4L)))
+    val u = Profile.union(l, r, Set.empty)
+    assert(u.inl == Set("y", "z"), "x is not inline on the right branch")
+    assert(u.fam == Map("x" -> Sol.FAM_INT), "families must agree across branches")
+    assert(u.multOne.isEmpty, "a union can repeat a value")
+    assert(u.bucketS.isEmpty, "a union has no one layout")
+    assert(u.card.contains(7L))
+  }
+
+  test("profile: restrict and without keep only the named vars' facts") {
+    val f = Profile(inl = Set("a", "b"), numAll = Set("a"), fam = Map("b" -> Sol.FAM_INT),
+      decs = Set("a"), consts = Map("b" -> Nil), multOne = Set("a", "b"), bucketS = Set("a"),
+      card = Some(9L))
+    assert(f.restrict(Set("b")) == Profile(inl = Set("b"), fam = Map("b" -> Sol.FAM_INT),
+      consts = Map("b" -> Nil), multOne = Set("b"), card = Some(9L)))
+    assert(f.without(Seq("a")) == f.restrict(Set("b")))
+  }
+
+  test("profile: MINUS and EXISTS flags drop a double family, so an integer SUM stays xsd:integer") {
+    val ex = "http://example.org/"
+    def iri(s: String) = Iri(ex + s)
+    assert(Profile(fam = Map("d" -> Sol.FAM_DBL, "i" -> Sol.FAM_INT)).subset.fam ==
+      Map("i" -> Sol.FAM_INT))
+    // :p mixes an integer and a double, so its scan is FAM_DBL; each pattern
+    // below keeps only :a's integer row, whose SUM is 1 typed xsd:integer
+    val quads = Seq((iri("a"), iri("p"), Term.int(1)), (iri("b"), iri("p"), Term.dbl(2.5)),
+      (iri("a"), iri("q"), iri("z")), (iri("b"), iri("q"), iri("w")),
+      (iri("k"), iri("t"), iri("w")))
+    val schema = StructType(Seq("s", "p", "o", "g").map(n =>
+      StructField(n, TermRow.schema, nullable = true)))
+    val rows = quads.map { case (s, pp, o) =>
+      Row(TermRow.toRow(s), TermRow.toRow(pp), TermRow.toRow(o), TermRow.toRow(iri("g")))
+    }
+    val st = StoreEncoder.encode(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema), IriScheme.default)
+    val c = new Compiler(st, ExprEval.Ctx(nowEpochUs = 0L))
+    assert(c.compile(BGP(Seq(QuadPattern(V("x"), T(iri("p")), V("v")))))
+      .prof.fam.get("v").contains(Sol.FAM_DBL))
+    for (where <- Seq(
+        "?x :p ?v FILTER(EXISTS { ?x :q :z } || ?x = :none)", // correlated flag
+        "?x :p ?v FILTER(EXISTS { :k :t :none } || ?x = :a)", // uncorrelated flag
+        "?x :p ?v BIND(EXISTS { ?x :q :z } AS ?e) FILTER(?e)",
+        "?x :p ?v OPTIONAL { ?x :q ?z } MINUS { ?k :t ?z }")) { // ?z possibly unbound
+      val q = graft.parser.SparqlParser.parse(
+        s"PREFIX : <$ex> SELECT (SUM(?v) AS ?s) WHERE { $where }")
+      val r = Results.materialize(c, c.compile(q.algebra)).collect().head
+      val s = r.getStruct(r.fieldIndex("s"))
+      assert((s.getString(1), s.getString(2)) == ("1", Term.xsdInteger), where)
+    }
+  }
+
+  // Pins of the executed plan's dictionary-decode joins and Exchanges for the
+  // entries whose facts were dropped before: the window chain and the
+  // sequence and negated-set paths. Each count is the value the entry had
+  // before the facts became one Profile value; a rise means a fact is lost
+  // on the way to the result edge again.
+  for ((name, decodeJoins, exchanges) <- Seq(
+      ("q_sparql_window", 0, 3), ("q_path_seq", 1, 3), ("q_path_nps", 1, 1)))
+    test(s"$name plan pin: $decodeJoins decode joins, $exchanges exchanges") {
+      val df = graft.SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(PlanCounts.of(plan) == PlanCounts.Counts(decodeJoins, exchanges), s"\n$plan")
+    }
 }
