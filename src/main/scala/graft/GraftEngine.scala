@@ -82,14 +82,15 @@ final class GraftEngine(val store: RdfStore,
   /** Explain-analyze: execute the query, then render the physical plan with
     * per-operator runtime metrics (rows, spill, build sizes) — the Spark
     * analogue of the reference's metrics-wrapped plan nodes
-    * (SPARQL/QueryPlan.swift:11-111). */
+    * (SPARQL/QueryPlan.swift:11-111) — and end with its [[PlanShape]]. */
   def explainAnalyze(sparql: String): String = {
     val pq = SparqlParser.parse(sparql)
     val alg = Rewriter.rewrite(pq.algebra)
     val sol = compilerFor(pq).compile(alg)
     // execute THIS plan instance (df.count() would build a separate one and
     // leave these operators' metrics empty)
-    val n = sol.df.queryExecution.executedPlan.execute().count()
+    val plan = sol.df.queryExecution.executedPlan
+    val n = plan.execute().count()
     val sb = new StringBuilder
     sb.append(s"== SPARQL algebra (rewritten) ==\n")
     sb.append(graft.algebra.AlgebraPrint.pretty(alg))
@@ -101,15 +102,10 @@ final class GraftEngine(val store: RdfStore,
       sb.append("  " * depth).append(p.nodeName)
       if (ms.nonEmpty) sb.append(ms.mkString(" [", ", ", "]"))
       sb.append('\n')
-      val kids = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          Seq(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-        case o => o.children
-      }
-      kids.foreach(walk(_, depth + 1))
+      PlanShape.children(p).foreach(walk(_, depth + 1))
     }
-    walk(sol.df.queryExecution.executedPlan, 0)
+    walk(plan, 0)
+    sb.append(s"plan shape: ${PlanShape.of(plan).json}\n")
     sb.toString
   }
 

@@ -31,7 +31,7 @@ object Main {
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // repeated REPL queries reuse generated classes (see Bench scaladoc)
+      // repeated REPL queries reuse generated classes
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

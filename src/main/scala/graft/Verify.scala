@@ -8,18 +8,20 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // see Bench: the battery exceeds the default 100-entry codegen cache
+      // the battery exceeds the default 100-entry codegen cache, which would
+      // recompile most entries' generated classes
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration subset (same convention as Bench); driver sets nothing
+    // local-iteration subset: SPARK_GRAFT_ONLY=q_a,q_b writes only those entries
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // a StackOverflowError (Catalyst recursing on a deep plan) fails one entry
     val failed = SparkEntry.queries.toSeq

@@ -5,8 +5,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** Registry for short-lived persisted intermediates (LSH buckets, shingle tables…).
   * Long-lived store caches (quads/terms) do NOT go through here. Harnesses that run
-  * many queries in one session (graft.Bench) drain between queries so scratch
-  * blocks don't accumulate into GC pressure.
+  * many queries in one session drain between queries so scratch blocks don't
+  * accumulate into GC pressure.
   */
 object ScratchCache {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()

@@ -1280,6 +1280,7 @@ class EngineSpec extends AnyFunSuite {
       val df = graft.SparkEntry.queries(name)(spark, sf)
       df.collect()
       val plan = df.queryExecution.executedPlan
-      assert(PlanCounts.of(plan) == PlanCounts.Counts(decodeJoins, exchanges), s"\n$plan")
+      val shape = PlanShape.of(plan)
+      assert((shape.decodeJoins, shape.exchanges) == (decodeJoins, exchanges), s"\n$plan")
     }
 }

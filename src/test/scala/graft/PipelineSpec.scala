@@ -554,23 +554,14 @@ class PipelineSpec extends AnyFunSuite {
     // exchanges. Walk the executed TREE (cache scans are leaves there, so
     // the cache-build subtree is naturally excluded — its text rendering
     // repeats per scan and cannot be string-counted):
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case other => other +: other.children.flatMap(walk)
-    }
-    val outer = walk(df.queryExecution.executedPlan)
+    val outer = PlanShape.nodes(df.queryExecution.executedPlan)
     val outerRange = outer.collect { case e: ShuffleExchangeExec
       if e.outputPartitioning.toString.contains("range") => e }
     assert(outerRange.isEmpty,
       s"data/offsets branches must read the cached sharded frame, not re-run " +
         s"the range exchange; found $outerRange:\n${plan.take(3000)}")
-    val cacheScans = outer.collect { case c: InMemoryTableScanExec => c }
-    assert(cacheScans.nonEmpty,
+    assert(PlanShape.of(df.queryExecution.executedPlan).cachedScans > 0,
       s"sharded frame must be read through the scratch cache:\n${plan.take(3000)}")
     // semantics: every chunk_hash appears once; pack offsets are consistent
     // (each source stream's cumulative token count reproduces pack_id/pack_off)

@@ -16,7 +16,7 @@ object ReferenceGeo {
   /** The repository root: the nearest directory holding `build.sbt` above the
     * compiled test classes, so the lookup does not depend on the JVM's working
     * directory (falls back to it where the classes are not under the root). */
-  private val repoRoot: Path = {
+  val repoRoot: Path = {
     val classes = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
     Iterator.iterate(classes.toAbsolutePath)(_.getParent).takeWhile(_ != null)
       .find(d => Files.isRegularFile(d.resolve("build.sbt")))

@@ -266,10 +266,15 @@ class StoreSpec extends AnyFunSuite {
 
   test("explainAnalyze reports per-operator runtime metrics") {
     val eng = new GraftEngine(store)
-    val out = eng.explainAnalyze(
-      "SELECT ?nm WHERE { ?c <urn:p:customer:c_name> ?nm }")
+    val q = "SELECT ?nm WHERE { ?c <urn:p:customer:c_name> ?nm }"
+    val out = eng.explainAnalyze(q)
     assert(out.contains("result rows: 150"))
     assert(out.contains("numOutputRows="), s"metrics missing:\n${out.take(1500)}")
+    // the last line is the plan's shape, the same counts the plan ledger keeps
+    val df = eng.solutions(q).df
+    df.collect()
+    assert(out.linesIterator.toSeq.last ==
+      s"plan shape: ${PlanShape.of(df.queryExecution.executedPlan).json}", out)
   }
 
   test("explain renders the algebra tree and the Catalyst physical plan") {
