@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.{ExternalRDDScanExec, FileSourceScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.storage.StorageLevel
 
 /** Operator counts of an executed physical plan, walked as a tree rather than
   * read from `explain` text.
@@ -13,10 +16,13 @@ import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec
   * `QueryStageExec` (its stage plan), follows subquery plans, and stops at
   * reused exchanges, which do not run again. A cached relation is a leaf: an
   * `InMemoryTableScanExec` is one scan (and one cached scan) and the plan that
-  * filled the cache is not counted. A decode join is a join with a side that
-  * scans the terms (dictionary) table, recognised by its columns, without
-  * passing through another join. `udfs` counts Scala UDF expressions and
-  * typed lambda operators (`mapPartitions` and the like).
+  * filled the cache is not counted. An RDD-backed leaf (`ExternalRDDScanExec`,
+  * `RDDScanExec`) counts the `ShuffleDependency`s in its RDD's lineage as
+  * shuffles, stopping at persisted RDDs the way it stops at cached relations.
+  * A decode join is a join with a side that scans the terms (dictionary)
+  * table, recognised by its columns, without passing through another join.
+  * `udfs` counts Scala UDF expressions and typed lambda operators
+  * (`mapPartitions` and the like).
   *
   * Count a plan after its action has run: until then AQE has not picked its
   * final plan.
@@ -78,12 +84,30 @@ object PlanShape {
 
   private def one(b: Boolean): Int = if (b) 1 else 0
 
+  /** Shuffle dependencies in an RDD's lineage, each counted once, not
+    * looking past a persisted RDD. */
+  private def lineageShuffles(root: RDD[_]): Int = {
+    val seen = collection.mutable.Set[Int]()
+    def go(r: RDD[_]): Int =
+      if (r.getStorageLevel != StorageLevel.NONE || !seen.add(r.id)) 0
+      else r.dependencies.map { d =>
+        one(d.isInstanceOf[ShuffleDependency[_, _, _]]) + go(d.rdd)
+      }.sum
+    go(root)
+  }
+
+  private def rddShuffles(p: SparkPlan): Int = p match {
+    case e: ExternalRDDScanExec[_] => lineageShuffles(e.rdd)
+    case r: RDDScanExec => lineageShuffles(r.rdd)
+    case _ => 0
+  }
+
   private def ofNode(p: SparkPlan): PlanShape = p match {
     case _: AdaptiveSparkPlanExec | _: QueryStageExec | _: ReusedExchangeExec => PlanShape()
     case _ =>
       val name = p.getClass.getSimpleName
       PlanShape(
-        shuffles = one(p.isInstanceOf[ShuffleExchangeLike]),
+        shuffles = one(p.isInstanceOf[ShuffleExchangeLike]) + rddShuffles(p),
         broadcasts = one(p.isInstanceOf[BroadcastExchangeLike]),
         smj = one(p.isInstanceOf[SortMergeJoinExec]),
         bhj = one(p.isInstanceOf[BroadcastHashJoinExec]),

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
 object Curation {
 
   def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.read(spark, s"$dir/documents.parquet")
 
   /** Exact distributed exclusive prefix sum of `valueCol` over the total
     * order (source, orderCols) — the shard-parallel replacement for a

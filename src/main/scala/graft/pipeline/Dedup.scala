@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
 object Dedup {
 
   def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.read(spark, s"$dir/documents.parquet")
 
   /** The DEFAULT near-duplicate path: MinHash+LSH — bucketed candidate
     * generation, never O(n²). The blocked n-gram Jaccard below is a

@@ -24,7 +24,7 @@ object EventsOps {
   /** events.parquet with `ts` normalized to TimestampType (layout-adaptive). */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
+    normalizeTs(Tables.read(spark, s"$dir/events.parquet"))
   }
 
   /** Tumbling 5-minute windows per event type (Spark-idiomatic window() fn). */

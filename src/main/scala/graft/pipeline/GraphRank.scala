@@ -1,5 +1,8 @@
 package graft.pipeline
 
+import scala.reflect.ClassTag
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,18 +20,23 @@ import org.apache.spark.sql.functions._
   * bit-identical ranks (same scheme as the IVF/PQ integer Lloyd training).
   * Float PageRank would differ in the last ulp by partition-summation order.
   *
-  * Scale shape: the textbook distributed PageRank — per iteration one
-  * src-keyed equi-join (rank ⋈ edges, both pre-partitionable on src) and one
-  * dst-keyed groupBy; nothing driver-side, no adjacency materialization
-  * beyond the edge list. Dangling nodes (regions) simply leak rank, stated
-  * and replicated in the oracle. `iters` is fixed (5) — a bounded lineage
-  * chain, no checkpoint needed.
+  * Scale shape: [[pagerank]] and [[labelProp]] share one vertex-centric
+  * superstep loop, the co-partitioned plan of Pregelix (VLDB 2014). One
+  * record per vertex holds its out-neighbours, hash-partitioned once on the
+  * vertex and scratch-persisted. A superstep (1) zips the vertex state with
+  * it and emits messages, (2) combines them per target vertex in ONE
+  * map-side-combined shuffle on the same partitioner, and (3) zips the result
+  * back onto the vertices to apply the update: no edge reshuffle, nothing
+  * driver-side. The loop is RDD code, so no iteration is re-analyzed and AQE
+  * starts no job per stage: a run is one Spark job of iters + 2 stages, and
+  * becomes a DataFrame once, at the end. Dangling nodes (regions) simply
+  * leak rank, stated and replicated in the oracle.
   */
 object GraphRank {
 
   /** (src, dst) string-keyed edge list of the entity reference graph. */
   def edges(spark: SparkSession, dir: String): DataFrame = {
-    def t(n: String) = spark.read.parquet(s"$dir/$n.parquet")
+    def t(n: String) = Tables.read(spark, s"$dir/$n.parquet")
     def e(df: DataFrame, sPfx: String, s: String, dPfx: String, d: String) =
       df.select(concat(lit(sPfx), col(s).cast("string")).as("src"),
         concat(lit(dPfx), col(d).cast("string")).as("dst"))
@@ -38,32 +46,49 @@ object GraphRank {
       .unionByName(e(t("nation"), "n", "n_nationkey", "r", "n_regionkey"))
   }
 
+  /** One record per vertex of the (src, dst) edge list `es` with its
+    * out-neighbours, hash-partitioned on the vertex with the session's
+    * shuffle-partition count and scratch-persisted. Directed, the neighbours
+    * are a multiset (a repeated edge sends twice); `undirected`, each edge
+    * links both ways and a neighbour appears once. */
+  private def adjacency(spark: SparkSession, es: DataFrame,
+      undirected: Boolean): RDD[(String, Array[String])] = {
+    val arcs = es.rdd.flatMap { r =>
+      val (s, d) = (r.getString(0), r.getString(1))
+      Iterator(s -> Some(d), d -> (if (undirected) Some(s) else None))
+    }
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    ScratchCache.persist(arcs.groupByKey(part).mapValues { ns =>
+      if (undirected) ns.flatten.toArray.distinct else ns.flatten.toArray })
+  }
+
+  /** `iters` synchronous supersteps over `adj` from `init(v)`: `send` along
+    * the out-neighbours, `merge` per target on `adj`'s partitioner, and
+    * `update` each vertex from what it heard (`None`: nothing). */
+  private def supersteps[S, M: ClassTag](adj: RDD[(String, Array[String])], iters: Int)(
+      init: String => S, send: (S, Array[String]) => Iterator[(String, M)],
+      merge: (M, M) => M, update: (String, Option[M]) => S): RDD[(String, S)] = {
+    var state = adj.map { case (v, _) => (v, init(v)) }
+    for (_ <- 0 until iters) {
+      val in = state.zipPartitions(adj) { (ss, as) =>
+        ss.zip(as).flatMap { case ((_, s), (_, out)) => send(s, out) }
+      }.reduceByKey(adj.partitioner.get, merge)
+      state = adj.zipPartitions(in, preservesPartitioning = true) { (as, ms) =>
+        val m = ms.toMap
+        as.map { case (v, _) => (v, update(v, m.get(v))) }
+      }
+    }
+    state
+  }
+
   /** Integer fixed-point PageRank; output (node, pr) with pr in micro-units
     * (initial rank 1,000,000 per node, damping 0.85). */
   def pagerank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
-    val n = spark.sessionState.conf.numShufflePartitions
-    val es = ScratchCache.persist(edges(spark, dir))
-    // nodes and the degree-attached edge list persist PRE-PARTITIONED on
-    // their per-iteration join keys (node / src): each round's two joins
-    // then line up against the dst-keyed contribution aggregate with no
-    // exchange beyond that one groupBy — one shuffle per iteration
-    val nodes = ScratchCache.persist(
-      es.select(col("src").as("node"))
-        .union(es.select(col("dst").as("node"))).distinct()
-        .repartition(n, col("node")))
-    val deg = es.groupBy("src").agg(count(lit(1)).as("d"))
-    val ed = ScratchCache.persist(
-      es.join(deg, "src").repartition(n, col("src")))
-    var ranks = nodes.withColumn("r", lit(1000000L))
-    for (_ <- 0 until iters) {
-      val sums = ed.join(ranks, col("src") === col("node"))
-        .select(col("dst"), expr("r DIV d").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      ranks = nodes.join(sums, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(150000L) + expr("(85 * coalesce(s, 0L)) DIV 100")).as("r"))
-    }
-    ranks.select(col("node"), col("r").as("pr"))
+    val adj = adjacency(spark, edges(spark, dir), undirected = false)
+    val ranks = supersteps[Long, Long](adj, iters)(_ => 1000000L,
+      (r, out) => out.iterator.map(_ -> r / out.length), _ + _,
+      (_, s) => 150000L + 85L * s.getOrElse(0L) / 100)
+    spark.createDataFrame(ranks).toDF("node", "pr")
   }
 
   /** Deterministic synchronous label propagation (community detection for
@@ -76,42 +101,16 @@ object GraphRank {
     * them bit-identically — no RNG, no update-order dependence (the
     * asynchronous-LPA nemesis).
     *
-    * Scale shape: per round one dst-keyed equi-join (labels ⋈ symmetrized
-    * edge list) and ONE groupBy(src) running Spark 4's deterministic
-    * `mode(lab, true)` (ties → lowest label — exactly the
-    * min_by((-cnt, lab)) total order) with map-side partial maps; one keyed
-    * exchange per round.
-    * Edges symmetrized + DISTINCT once up front (each neighbor votes once).
-    * `iters` is a PARAMETER: each round stacks join+2×groupBy onto the
-    * lineage, so every 4th round `localCheckpoint`s the label frame (the
-    * same cadence as the path-closure fixpoint, Compiler.fix) — without it
-    * a deep run re-plans and AQE-replays a 15·iters-operator chain at every
-    * round boundary. */
+    * Scale shape: the superstep loop over the undirected adjacency; a vertex
+    * sends its label to each neighbor once, the votes are counted per label
+    * in the map-side message combine, and the update takes the argmax. */
   def labelProp(spark: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    val e0 = edges(spark, dir)
-    val n = spark.sessionState.conf.numShufflePartitions
-    // persist the symmetrized edge list ALREADY partitioned on the per-round
-    // join key (dst): the cached partitioning is reused by every round's
-    // join, so no round re-shuffles the edge side
-    val ed = ScratchCache.persist(
-      e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-        .repartition(n, col("dst")))
-    ed.count()
-    var labels = ed.select(col("src").as("node")).distinct()
-      .withColumn("lab", col("node"))
-    for (i <- 1 to iters) {
-      // one exchange per round: the (count desc, label asc) argmax runs as
-      // Spark's deterministic MODE aggregate (ties -> lowest value — exactly
-      // the min_by((-cnt, lab)) total order) directly under groupBy(src),
-      // with map-side partial maps; the old two-groupBy shape paid a second
-      // (src, lab)-keyed exchange for the same counts
-      labels = ed.join(labels, col("node") === col("dst"))
-        .groupBy(col("src"))
-        .agg(expr("mode(lab, true)").as("lab"))
-        .withColumnRenamed("src", "node")
-      if (i % 4 == 0 && i < iters) labels = labels.localCheckpoint()
-    }
-    labels.select(col("node"), col("lab").as("community"))
+    val adj = adjacency(spark, edges(spark, dir), undirected = true)
+    val labels = supersteps[String, Map[String, Int]](adj, iters)(v => v,
+      (lab, out) => out.iterator.map(_ -> Map(lab -> 1)),
+      (a, b) => b.foldLeft(a) { case (m, (l, c)) => m.updated(l, m.getOrElse(l, 0) + c) },
+      (v, votes) => votes.fold(v)(_.minBy { case (l, c) => (-c, l) }._1))
+    spark.createDataFrame(labels).toDF("node", "community")
   }
 
   /** Per-node triangle count + local clustering coefficient over the part
@@ -138,7 +137,7 @@ object GraphRank {
     * scale it drops. Shared by [[triangles]], [[jaccardNeighbors]] and
     * [[components]]. */
   private def copurchase(spark: SparkSession, dir: String): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.read(spark, s"$dir/lineitem.parquet")
       .filter(col("l_orderkey") % 10 === 0)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")).distinct()
     ScratchCache.persist(
@@ -239,7 +238,7 @@ object GraphRank {
     * subset; the singleton side is one anti join against the cluster
     * output, no extra shuffle shape. */
   def components(spark: SparkSession, dir: String): DataFrame = {
-    val nodes = spark.read.parquet(s"$dir/lineitem.parquet")
+    val nodes = Tables.read(spark, s"$dir/lineitem.parquet")
       .filter(col("l_orderkey") % 10 === 0)
       .select(col("l_partkey").as("node")).distinct()
     val comp = Dedup.clustersOf(copurchase(spark, dir))

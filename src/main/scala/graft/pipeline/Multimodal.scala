@@ -33,7 +33,7 @@ object Multimodal {
     * media bytes; schema/partitioning identical to a real media table). */
   def records(spark: SparkSession, dir: String): Dataset[MMRecord] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    TextStats.docs(spark, dir)
       .select(col("doc_id"), lit("application/octet-stream").as("mime"),
         encode(col("text"), "UTF-8").as("payload"))
       .as[MMRecord]
@@ -80,7 +80,7 @@ object Multimodal {
       val body = Array.tabulate(w * h * 3)(i => tb(i % tb.length))
       header ++ body
     }
-    spark.read.parquet(s"$dir/documents.parquet")
+    TextStats.docs(spark, dir)
       .select(col("doc_id"), lit("image/x-portable-pixmap").as("mime"),
         gen(col("doc_id"), col("text")).as("payload"))
       .as[MMRecord]
@@ -141,7 +141,7 @@ object Multimodal {
         .put(data)
       bb.array()
     }
-    spark.read.parquet(s"$dir/documents.parquet")
+    TextStats.docs(spark, dir)
       .select(col("doc_id"), lit("audio/wav").as("mime"),
         gen(col("doc_id"), col("text")).as("payload"))
       .as[MMRecord]
@@ -270,7 +270,7 @@ object Multimodal {
       javax.imageio.ImageIO.write(img, fmt, bos)
       bos.toByteArray
     }
-    spark.read.parquet(s"$dir/documents.parquet")
+    TextStats.docs(spark, dir)
       .select(col("doc_id"), lit(mime).as("mime"),
         gen(col("doc_id"), col("text")).as("payload"))
       .as[MMRecord]
@@ -350,7 +350,7 @@ object Multimodal {
       val mdat = box("mdat", Array.tabulate(total)(i => tb(i % tb.length)))
       ftyp ++ moov ++ mdat
     }
-    spark.read.parquet(s"$dir/documents.parquet")
+    TextStats.docs(spark, dir)
       .select(col("doc_id"), lit("video/mp4").as("mime"),
         gen(col("doc_id"), col("text")).as("payload"))
       .as[MMRecord]

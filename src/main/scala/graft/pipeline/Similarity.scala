@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   def emb(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    Tables.read(spark, s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("label"))
 

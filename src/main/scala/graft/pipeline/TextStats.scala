@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 object TextStats {
 
   def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.read(spark, s"$dir/documents.parquet")
 
   /** Whitespace tokenization + a BPE-ish subword proxy (4-char pieces). */
   def tokens(spark: SparkSession, dir: String): DataFrame =

@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.pipeline._
 
 /** Mechanism tests for the pipeline operators: planted near-duplicates must be
@@ -11,6 +14,21 @@ import graft.pipeline._
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = SparkBase.spark
   val sf = "/root/testdata/sf0.001"
+
+  /** The Spark jobs and submitted stages that `f` starts. */
+  private def jobsAndStages(f: => Any): (Int, Int) = {
+    val (jobs, stages) = (new AtomicInteger, new AtomicInteger)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.TestBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    (jobs.get, stages.get)
+  }
 
   /** Synthetic documents dir with planted near-dups (ids 9001~9002, 9003~9004)
     * and an exact dup (9005==9006). */
@@ -1129,7 +1147,7 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("labelProp: deep run (iters=10) matches brute-force synchronous LPA; checkpoint cadence bounds plan depth") {
+  test("labelProp: deep run (iters=10) matches brute-force synchronous LPA; one job, stages bounded by rounds") {
     val e0 = GraphRank.edges(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1)))
     val sym = (e0 ++ e0.map(_.swap)).distinct
@@ -1142,15 +1160,83 @@ class PipelineSpec extends AnyFunSuite {
         n -> votes.toSeq.minBy { case (l, c) => (-c, l) }._1
       }.toMap
     }
-    val deep = GraphRank.labelProp(spark, sf, iters = 10)
-    val got = deep.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    var got = Map.empty[String, String]
+    // the superstep loop is one job of one stage per round plus the
+    // adjacency and result stages: a per-round job or a re-plan would break
+    // the bound as the rounds grow
+    val (jobs, stages) = jobsAndStages {
+      got = GraphRank.labelProp(spark, sf, iters = 10).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+    }
     assert(got == lab, "iters=10 labels match the brute-force replay")
-    // the 4-round localCheckpoint cadence truncates lineage: the deep run's
-    // final plan must be no larger than an uncheckpointed 3-round plan
-    def planSize(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.collect { case p => p }.size
-    assert(planSize(deep) <= planSize(GraphRank.labelProp(spark, sf, iters = 3)),
-      "checkpoint cadence keeps the deep plan bounded")
+    assert(jobs <= 2 && stages <= 10 + 3, s"$jobs jobs, $stages stages")
+  }
+
+  test("pagerank: matches a brute-force driver replay at iters 0, 1, 5 and 12") {
+    val es = GraphRank.edges(spark, sf).collect().map(r => (r.getString(0), r.getString(1)))
+    val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
+    val out = es.groupMap(_._1)(_._2)
+    for (iters <- Seq(0, 1, 5, 12)) {
+      var rank = nodes.map(_ -> 1000000L).toMap
+      for (_ <- 0 until iters) {
+        val in = out.toSeq.flatMap { case (v, ds) => ds.map(_ -> rank(v) / ds.length) }
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        rank = nodes.map(n => n -> (150000L + 85L * in.getOrElse(n, 0L) / 100)).toMap
+      }
+      val got = GraphRank.pagerank(spark, sf, iters).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got == rank, s"iters=$iters")
+    }
+  }
+
+  test("pagerank: after a warm call, an iters=5 run is one job of at most iters + 3 stages") {
+    GraphRank.pagerank(spark, sf).collect()
+    ScratchCache.drain()
+    val (jobs, stages) = jobsAndStages(GraphRank.pagerank(spark, sf, iters = 5).collect())
+    assert(jobs <= 2 && stages <= 5 + 3, s"$jobs jobs, $stages stages")
+  }
+
+  test("ScratchCache.drain unpersists the graph loop's RDDs") {
+    ScratchCache.drain()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    GraphRank.pagerank(spark, sf).collect()
+    GraphRank.labelProp(spark, sf).collect()
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
+    ScratchCache.drain()
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("Tables.read: a remembered path starts no job; an overwrite or a parquet setting re-infers") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tables").toString
+    val p = s"$dir/t.parquet"
+    Seq((1L, "a")).toDF("x", "y").write.parquet(p)
+    assert(Tables.read(spark, p).columns.toSeq == Seq("x", "y"))
+    val (jobs, _) = jobsAndStages(Tables.read(spark, p))
+    assert(jobs == 0, s"a remembered path ran $jobs jobs")
+    Seq((1.5, true)).toDF("u", "v").write.mode("overwrite").parquet(p)
+    assert(Tables.read(spark, p).schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("u" -> "double", "v" -> "boolean"))
+    assert(Tables.read(spark, p).as[(Double, Boolean)].collect().toSeq == Seq((1.5, true)))
+    // a TIMESTAMP(NANOS) column reads as LongType only under nanosAsLong
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val n = s"$dir/nanos.parquet"
+    val ms = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$n/part-0.parquet"))
+      .withType(ms).build()
+    try w.write(new SimpleGroupFactory(ms).newGroup().append("ts", 1000L)) finally w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val was = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      assert(Tables.read(spark, n).schema("ts").dataType == LongType)
+      spark.conf.set(key, "false")
+      val off = scala.util.Try(Tables.read(spark, n).schema("ts").dataType)
+      assert(!off.toOption.contains(LongType), s"nanosAsLong=false read $off")
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("attribution: binned interval join equals the naive pair predicate, incl. bucket-crossing lags") {
