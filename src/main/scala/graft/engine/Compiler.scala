@@ -1713,331 +1713,219 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
         v.getField("lang")))
   }
 
-  // ---- grouping / aggregation ----------------------------------------------
+  // ---- aggregates: one definition for GROUP BY and window frames ------------
+
+  import Compiler.{AggDef, AggIn}
+
+  /** The input of aggregate `a` in the cheapest mode the [[Profile]] proves
+    * correct:
+    *  - "id": the raw id, for MIN/MAX/SAMPLE of an all-inline var (id order
+    *    is term order) and for COUNT of any id var (the id is non-null
+    *    exactly when the var is bound, and ids are term identity)
+    *  - "int": a FAM_INT var's id payload Long, for exact xsd:integer SUM/AVG
+    *  - "num": a FAM_DBL var's numeric companion, or a computed value of
+    *    double-family vars ([[fastNumChecked]]), for SUM/AVG of doubles
+    *  - "dec": an exact DECIMAL(38,18) value, a FAM_DEC var's companion or a
+    *    computed one ([[fastDec]]), with a per-row flag for integer/decimal
+    *    promotion
+    *  - "view": the term struct, for the generic typed aggregation
+    * COUNT(*) counts a literal. COUNT(DISTINCT *) counts the distinct
+    * solutions of the group (§18.5.1.2): a struct of every visible var, term
+    * identity per column, and never NULL because a struct is non-null even
+    * when every field is. */
+  private def aggInput(sol: Sol, a: AggSpec): (Sol, AggIn) = {
+    val sumAvg = a.fn == "sum" || a.fn == "avg"
+    def isId(n: String) = sol.reps.get(n).contains(IdRep)
+    def fam(n: String) = sol.prof.fam.get(n)
+    a.e match {
+      case None =>
+        val vs = sol.vars.toSeq.sorted.map(v => col(bt(v)))
+        (sol, AggIn(if (!a.distinct) lit(1)
+          else struct((if (vs.isEmpty) Seq(lit(1)) else vs): _*), "id"))
+      case Some(EVar(n)) if isId(n) && (a.fn == "count" ||
+          sol.prof.inl.contains(n) && Seq("min", "max", "sample").contains(a.fn)) =>
+        (sol, AggIn(col(bt(n)), "id"))
+      case Some(EVar(n)) if sumAvg && isId(n) && fam(n).contains(Sol.FAM_INT) =>
+        (sol, AggIn(col(bt(n)).bitwiseAND(TermId.PAYLOAD_MASK) - TermId.BIAS, "int"))
+      case Some(EVar(n)) if sumAvg && sol.nums.contains(n) &&
+          sol.prof.numAll.contains(n) && fam(n).contains(Sol.FAM_DBL) =>
+        (sol, AggIn(col(bt(sol.numCol(n))), "num"))
+      case Some(e) =>
+        val num = if (sumAvg && !e.isInstanceOf[EVar]) fastNumChecked(sol, e) else None
+        (num, if (sumAvg) fastDec(sol, e) else None) match {
+          case (Some(c), _) => (sol, AggIn(c, "num"))
+          // no term structs, no dictionary join (reference exact
+          // accumulators, MaterializedQueryPlan.swift:2303-2354)
+          case (_, Some((d, isdec))) =>
+            (sol, AggIn(struct(d.as("d"), isdec.as("isdec")), "dec"))
+          case _ => val (s2, c) = exprColumn(sol, e); (s2, AggIn(c, "view"))
+        }
+    }
+  }
+
+  /** The Spark aggregate functions and result term of aggregate `a` over an
+    * input in `mode` (see [[aggInput]]). Exact accumulators run in TRY mode:
+    * a Long or DECIMAL(38,18) overflow is a SPARQL error, so the value goes
+    * unbound instead of aborting the query. SUM and AVG of no numeric value
+    * are `"0"^^xsd:integer` in every mode (§18.5.1.3).
+    *
+    * SAMPLE and GROUP_CONCAT are defined here for GROUP BY: the least input,
+    * and the lexically sorted concat. A window keeps its own two, in frame
+    * order: `first(ignoreNulls)`, and the concat without a sort. */
+  private def aggDef(a: AggSpec, mode: String): AggDef = {
+    import graft.engine.{NativeExpr => NE}
+    val avg = a.fn == "avg"
+    val zero = intView(lit(0L))
+    def cnt(c: Column) = if (a.distinct) count_distinct(c) else count(c)
+    def trySum(c: Column) = if (a.distinct) trySumDistinct(c) else try_sum(c)
+    def termSort(v: Column) = when(v.isNotNull, struct(v.getField("kind"),
+      v.getField("num"), v.getField("lex"), v.getField("dt"), v.getField("lang")))
+    // one aggregate function whose partials merge by applying it again
+    def again(f: Column => Column, id: Boolean) =
+      AggDef(in => Seq(f(in)), _.head, Some(f), idOut = id)
+    (a.fn, mode) match {
+      case ("count", _) => AggDef(in => Seq(cnt(in)), v => intView(v(0)),
+        if (a.distinct) None else Some((p: Column) => sum(p))) // count_distinct partials don't merge
+      case ("sum" | "avg", "int") =>
+        // a distinct sum accumulates in DECIMAL(38,0), so a total outside
+        // Long range is caught by the try_cast
+        AggDef(in => Seq(trySum(if (a.distinct) in.cast(DecimalType(38, 0)) else in),
+          cnt(in)),
+          v => when(v(1) === 0, zero).otherwise(
+            if (avg) NE.decTerm(decDiv(v(0), v(1))) else intView(v(0).try_cast(LongType))))
+      case ("sum" | "avg", "num") =>
+        AggDef(in => Seq(if (a.distinct) sum_distinct(in) else sum(in), cnt(in)),
+          v => when(v(1) === 0, zero).otherwise(numView(if (avg) v(0) / v(1) else v(0))))
+      case ("sum" | "avg", "dec") =>
+        // an all-integer input stays xsd:integer (a total outside Long range
+        // is an error); any decimal promotes to exact xsd:decimal
+        AggDef(in => Seq(trySum(in.getField("d")), cnt(in.getField("d")),
+          max(in.getField("isdec").cast(IntegerType))),
+          v => when(v(1) === 0, zero).otherwise(
+            if (avg) NE.decTerm(decDiv(v(0), v(1)))
+            else when(v(2) === 0, intView(v(0).try_cast(LongType))).otherwise(NE.decTerm(v(0)))))
+      case ("sum" | "avg", _) =>
+        // generic typed aggregation over term structs: per-family partial
+        // sums, the promoted family and a non-numeric poison flag (reference
+        // typed accumulators, MaterializedQueryPlan.swift:2303-2354)
+        AggDef(in => {
+          val rank = NE.famRank(in)
+          val dblV = when(rank.isNotNull, in.getField("num"))
+          Seq(
+            trySum(when(rank === 0, NE.longVal(in))), // exact integer sum
+            trySum(when(rank <= 1, NE.decVal(in))), // exact decimal sum
+            if (a.distinct) sum_distinct(dblV) else sum(dblV), // double sum
+            // numeric count: AVG(DISTINCT) divides by the distinct values
+            if (a.distinct) count_distinct(dblV) else count(when(rank.isNotNull, lit(1))),
+            max(rank),
+            max(when(in.isNotNull && rank.isNull, 1).otherwise(0)))
+        }, v => {
+          def per(x: Column) = if (avg) decDiv(x, v(3)) else x
+          def dbl = if (avg) v(2) / v(3) else v(2)
+          when(v(5) === 1, lit(null).cast(TermRow.schema))
+            .when(v(3) === 0, zero)
+            .when(v(4) === 0, if (avg) NE.decTerm(per(v(0))) else intView(v(0)))
+            .when(v(4) === 1, NE.decTerm(per(v(1))))
+            .when(v(4) === 2, NE.fltTerm(dbl.cast(FloatType)))
+            .otherwise(numView(dbl))
+        })
+      case ("min" | "sample", "id") => again(v => min(v), id = true)
+      case ("max", "id") => again(v => max(v), id = true)
+      // min_by/max_by skip null-ordering rows, so an all-null salt partial
+      // cannot shadow a bound one
+      case ("min" | "sample", _) => again(v => min_by(v, termSort(v)), id = false)
+      case ("max", _) => again(v => max_by(v, termSort(v)), id = false)
+      case ("group_concat", _) =>
+        // the one sort runs after the merge, where the single-phase plan has it
+        AggDef(in => Seq(if (a.distinct) collect_set(in.getField("lex"))
+            else collect_list(in.getField("lex"))),
+          v => strTerm(concat_ws(a.sep, array_sort(v(0)))),
+          Some { p =>
+            val merged = flatten(collect_list(p))
+            if (a.distinct) array_distinct(merged) else merged
+          })
+      case (other, _) => throw new IllegalArgumentException(s"aggregate: $other")
+    }
+  }
+
+  /** The xsd:string term with lexical form `c` (non-null). */
+  private def strTerm(c: Column): Column = struct(lit(TermRow.KIND_LITERAL).as("kind"),
+    c.as("lex"), lit(Term.xsdString).as("dt"), lit(null).cast(StringType).as("lang"),
+    lit(null).cast(DoubleType).as("num"))
+
+  /** Hot-group gate for holistic aggregates: a GROUP_CONCAT's collect state
+    * holds a group's every row on one reducer, which Spark's partial
+    * (map-side) aggregation cannot absorb. When statistics do not bound the
+    * input at or below the hot-group cap ([[Compiler.HotGroupCapKey]]), a
+    * single group could own that many elements, so the caller takes
+    * [[saltedAgg]]. Unknown cardinality counts as above the cap: the salted
+    * plan's extra exchange is a bounded cost, an unsalted hot group an
+    * unbounded single-reducer collect. */
+  private def hotGroup(sol: Sol): Boolean = {
+    val cap = spark.conf.get(Compiler.HotGroupCapKey, Compiler.DefaultHotGroupCap.toString)
+    sol.prof.card.forall(_ > cap.toLong)
+  }
+
+  /** The two-phase salted aggregation ([[graft.pipeline.Skew]]'s device):
+    * phase 1 aggregates each part per (keys, salt), bounding any reducer's
+    * collect state to about 1/salts of the hottest group; phase 2 merges the
+    * per-salt partials per key into `__agg_out_<i>_0`. The result does not
+    * depend on the salt because every merge is exact. The salt is
+    * `spreadSalt`, not `saltOf`: a duplicate-producing BGP makes a hot group
+    * of byte-identical rows, which a content salt would put back on one
+    * reducer (see the Skew scaladoc for the retry argument). */
+  private def saltedAgg(pre: DataFrame, keys: Seq[Column],
+      parts: Seq[(Column, Column => Column)]): DataFrame = {
+    val salt = "__graft_salt"
+    val phase1 = parts.zipWithIndex.map { case ((c, _), i) => c.as(s"__agg_p_$i") }
+    val merged = parts.zipWithIndex.map { case ((_, m), i) =>
+      m(col(s"__agg_p_$i")).as(s"__agg_out_${i}_0") }
+    pre.withColumn(salt, graft.pipeline.Skew.spreadSalt(pre, Compiler.HotGroupSalts))
+      .groupBy((keys :+ col(salt)): _*).agg(phase1.head, phase1.tail: _*)
+      .groupBy(keys: _*).agg(merged.head, merged.tail: _*)
+  }
+
+  // ---- grouping -------------------------------------------------------------
 
   private def compileGroup(sol0: Sol, keys: Seq[String], aggs: Seq[AggSpec]): Sol = {
-    import graft.engine.{NativeExpr => NE}
     var sol = sol0
-    // pre-compute aggregate input columns; store type profiles unlock cheaper
-    // input modes:
-    //  - "id"  (all-inline var: min/max/sample on the raw id — id order == term order)
-    //  - "int" (FAM_INT var: exact xsd:integer SUM/AVG on the id payload Long)
-    //  - "num" (FAM_DBL var: double-family SUM/AVG on the numeric companion)
-    //  - "view" (materialized term struct; generic typed aggregation)
-    val inputs: Seq[(AggSpec, Option[(Column, String)])] = aggs.map { a =>
-      a.e match {
-        case None => (a, None)
-        case Some(EVar(n)) if sol.reps.get(n).contains(IdRep) && sol.prof.inl.contains(n) &&
-            Seq("min", "max", "sample").contains(a.fn) =>
-          (a, Some((col(bt(n)), "id")))
-        case Some(EVar(n)) if sol.reps.get(n).contains(IdRep) &&
-            sol.prof.fam.get(n).contains(Sol.FAM_INT) && Seq("sum", "avg").contains(a.fn) =>
-          (a, Some((col(bt(n)).bitwiseAND(TermId.PAYLOAD_MASK) - TermId.BIAS, "int")))
-        case Some(EVar(n)) if sol.nums.contains(n) && sol.prof.numAll.contains(n) &&
-            sol.prof.fam.get(n).contains(Sol.FAM_DBL) && Seq("sum", "avg").contains(a.fn) =>
-          (a, Some((col(bt(sol.numCol(n))), "num")))
-        case Some(EVar(n)) if sol.prof.decs.contains(n) &&
-            sol.reps.get(n).contains(IdRep) &&
-            sol.prof.fam.get(n).contains(Sol.FAM_DEC) && Seq("sum", "avg").contains(a.fn) =>
-          // exact decimal value from the scan companion; the id's type tag
-          // distinguishes xsd:integer from xsd:decimal for per-group promotion
-          (a, Some((struct(col(bt(sol.decCol(n))).as("d"),
-            (shiftright(col(bt(n)), TermId.PAYLOAD_BITS).bitwiseAND(0xFF) ===
-              TermId.TAG_DECIMAL).as("isdec")), "dec")))
-        case Some(EVar(n)) if sol.prof.decs.contains(n) &&
-            sol.reps.get(n).contains(TermRep) &&
-            sol.prof.fam.get(n).contains(Sol.FAM_DEC) && Seq("sum", "avg").contains(a.fn) =>
-          // extend-bound exact value (fastDec companion); the view's datatype
-          // field distinguishes xsd:integer from xsd:decimal for promotion
-          (a, Some((struct(col(bt(sol.decCol(n))).as("d"),
-            (col(bt(n)).getField("dt") === Term.xsdDecimal).as("isdec")), "dec")))
-        case Some(EVar(n)) if sol.reps.get(n).contains(IdRep) =>
-          val (s2, vc) = withView(sol, n); sol = s2
-          (a, Some((vc, "view")))
-        case Some(expr) =>
-          // double-family computed input to SUM/AVG: aggregate the raw numeric
-          // value directly — no term struct, no per-row lexical round-trip
-          fastNumChecked(sol, expr) match {
-            case Some(nc) if !expr.isInstanceOf[EVar] &&
-                Seq("sum", "avg").contains(a.fn) =>
-              (a, Some((nc, "num")))
-            case _ => fastDec(sol, expr) match {
-              // exact-family computed input to SUM/AVG: one decimal column,
-              // no term structs, no dictionary join
-              case Some((dc, isdec)) if !expr.isInstanceOf[EVar] &&
-                  Seq("sum", "avg").contains(a.fn) =>
-                (a, Some((struct(dc.as("d"), isdec.as("isdec")), "dec")))
-              case _ =>
-                val (s2, c) = exprColumn(sol, expr); sol = s2
-                (a, Some((c, "view")))
-            }
-          }
-      }
-    }
-    val inCols = inputs.zipWithIndex.map { case ((a, c), i) =>
-      c.map(_._1.as(s"__agg_in_$i"))
-    }
-    val keyCols = keys.filter(sol.reps.contains).map(v => col(bt(v)))
-    // COUNT(DISTINCT *) counts DISTINCT SOLUTIONS of the group (§18.5.1.2:
-    // Count over Distinct(Ωg)) — distinctness over the full visible var
-    // tuple, term-identity per column (id/TermRep columns ARE term identity;
-    // companions excluded). One map-side struct; count_distinct never sees a
-    // NULL because a struct literal is non-null even when every field is.
-    val needStar = aggs.exists(a =>
-      a.fn == "count" && a.e.isEmpty && a.distinct)
-    val starCol: Seq[Column] =
-      if (!needStar) Nil
-      else {
-        val vs = sol.vars.toSeq.sorted.map(v => col(bt(v)))
-        Seq(struct((if (vs.isEmpty) Seq(lit(1)) else vs): _*).as("__agg_star"))
-      }
-    val pre = sol.df.select((keyCols ++ starCol ++ inCols.flatten): _*)
-
-    val sortStruct: Int => Column = i => {
-      val v = col(s"__agg_in_$i")
-      struct(v.getField("kind"), v.getField("num"), v.getField("lex"),
-        v.getField("dt"), v.getField("lang"))
-    }
-    // each AggSpec compiles to one or more physical aggregates, suffixed _0.._k
-    val aggCols: Seq[Column] = inputs.zipWithIndex.flatMap { case ((a, cOpt), i) =>
-      val in = col(s"__agg_in_$i")
-      val mode = cOpt.map(_._2).getOrElse("view")
-      def out(j: Int, c: Column): Column = c.as(s"__agg_out_${i}_$j")
-      val cs: Seq[Column] = (a.fn, mode) match {
-        case ("count", _) if cOpt.isEmpty && a.distinct =>
-          Seq(count_distinct(col("__agg_star"))) // COUNT(DISTINCT *)
-        case ("count", _) if cOpt.isEmpty => Seq(count(lit(1)))
-        case ("count", _) if a.distinct => Seq(count_distinct(in))
-        case ("count", _) => Seq(count(in))
-        case ("sum" | "avg", "int") =>
-          // distinct sums accumulate in DECIMAL(38,0) (Long-range overflow is
-          // detected by the wrap step's try_cast); TRY mode so a >38-digit
-          // total NULLs out instead of raising ANSI ARITHMETIC_OVERFLOW
-          val v = if (a.distinct) trySumDistinct(in.cast(DecimalType(38, 0)))
-            else try_sum(in)
-          Seq(v, if (a.distinct) count_distinct(in) else count(in))
-        case ("sum" | "avg", "num") =>
-          val v = if (a.distinct) sum_distinct(in) else sum(in)
-          Seq(v, if (a.distinct) count_distinct(in) else count(in))
-        case ("sum" | "avg", "dec") =>
-          // one columnar exact-decimal aggregate — no dictionary join, no
-          // per-row lexical parse (reference exact accumulators,
-          // MaterializedQueryPlan.swift:2303-2354)
-          val d = in.getField("d")
-          // TRY mode throughout: DECIMAL(38,18) accumulator overflow is a
-          // SPARQL error (group value unbound), not a query abort
-          Seq(if (a.distinct) trySumDistinct(d) else try_sum(d),
-            if (a.distinct) count_distinct(d) else count(d),
-            max(in.getField("isdec").cast(IntegerType)))
-        case ("sum" | "avg", _) =>
-          // generic typed aggregation over term structs: per-family partial sums
-          // + family promotion rank + non-numeric poison flag (reference typed
-          // accumulators, MaterializedQueryPlan.swift:2303-2354)
-          val rank = NE.famRank(in)
-          val longV = when(rank === 0, NE.longVal(in))
-          val decV = when(rank <= 1, NE.decVal(in))
-          val dblV = when(rank.isNotNull, in.getField("num"))
-          // exact accumulators run in TRY mode: Long/DECIMAL overflow is a
-          // SPARQL error (→ unbound), not an ANSI abort; double never throws
-          def distinctable(c: Column) =
-            if (a.distinct) trySumDistinct(c) else try_sum(c)
-          Seq(
-            if (a.distinct) trySumDistinct(longV)
-            else try_sum(longV), // _0: exact integer sum
-            distinctable(decV), // _1: exact decimal sum (ints contribute)
-            if (a.distinct) sum_distinct(dblV) else sum(dblV), // _2: double sum (all numerics)
-            // _3: numeric count — AVG(DISTINCT)'s divisor is the DISTINCT
-            // value count (distinct-by-double: full numeric coverage)
-            (if (a.distinct) count_distinct(dblV)
-             else count(when(rank.isNotNull, lit(1)))),
-            max(rank), // _4: promoted family
-            max(when(in.isNotNull && rank.isNull, 1).otherwise(0))) // _5: poison
-        case ("min", "id") => Seq(min(in))
-        case ("max", "id") => Seq(max(in))
-        case ("sample", "id") => Seq(min(in))
-        case ("min", _) => Seq(min_by(in, when(in.isNotNull, sortStruct(i))))
-        case ("max", _) => Seq(max_by(in, when(in.isNotNull, sortStruct(i))))
-        case ("sample", _) => Seq(min_by(in, when(in.isNotNull, sortStruct(i))))
-        case ("group_concat", _) =>
-          val lst = if (a.distinct) collect_set(in.getField("lex"))
-            else collect_list(in.getField("lex"))
-          Seq(concat_ws(a.sep, array_sort(lst)))
-        case (other, _) => throw new IllegalArgumentException(s"aggregate: $other")
-      }
-      cs.zipWithIndex.map { case (c, j) => out(j, c) }
-    }
-
-    // ---- hot-group mitigation for holistic aggregates ------------------------
-    // GROUP_CONCAT's collect_list state concentrates one group's EVERY row on
-    // one reducer — the one aggregate shape Spark's partial (map-side)
-    // aggregation can't absorb (count/min/max partials already combine before
-    // the shuffle; sum/avg likewise). When statistics bound the aggregation
-    // input ABOVE the hot-group cap (Compiler.HotGroupCapKey conf, default
-    // Compiler.DefaultHotGroupCap) rows, a single group could own that
-    // many elements, so compile the whole GROUP BY as the two-phase salted
-    // plan ([[graft.pipeline.Skew]]'s device): phase 1 aggregates per
-    // (keys, salt) — bounding any reducer's collect state to ~1/salts of the
-    // hottest group — phase 2 merges the per-salt partials per key. The
-    // result is salt-invariant because every aggregate admitted by the gate
-    // has an exact merge: count→sum, min/max/sample→again over partials,
-    // collected arrays→flatten, with the ONE global array_sort applied after
-    // the merge exactly where the single-phase plan applies it.
-    val twoPhaseSafe = inputs.forall { case (a, _) =>
-      a.fn match {
-        case "count" => !a.distinct // count_distinct partials don't merge
-        case "min" | "max" | "sample" => true
-        case "group_concat" => true // distinct handled merge-side
-        case _ => false // sum/avg: algebraic (partial agg absorbs hot keys),
-                        // and their try_sum/poison accumulators don't merge
-      }
-    }
-    val hotGroupCap = spark.conf.get(Compiler.HotGroupCapKey,
-      Compiler.DefaultHotGroupCap.toString).toLong
-    // card = None (no statistics) deliberately counts as above-cap: the
-    // salted plan's extra exchange is bounded overhead, an un-salted hot
-    // group is an unbounded single-reducer collect — defense wins at scale
-    val salted = keys.nonEmpty && aggs.exists(_.fn == "group_concat") &&
-      twoPhaseSafe && sol.prof.card.forall(_ > hotGroupCap)
-    val gks0 = keys.filter(sol.reps.contains).map(v => col(bt(v)))
-    // keys declared but none materialized (all provably unbound): keep the
-    // grouping KEYED via a constant — empty input must yield zero groups
-    val gks = if (keys.nonEmpty && gks0.isEmpty)
-      Seq(lit(1).as("__gk_const")) else gks0
-
-    val grouped = if (salted) {
-      val saltCol = "__graft_salt"
-      val termSort: Column => Column = v => struct(v.getField("kind"),
-        v.getField("num"), v.getField("lex"), v.getField("dt"), v.getField("lang"))
-      val p1Cols: Seq[Column] = inputs.zipWithIndex.map { case ((a, cOpt), i) =>
-        val in = col(s"__agg_in_$i")
-        val mode = cOpt.map(_._2).getOrElse("view")
-        val c: Column = (a.fn, mode) match {
-          case ("count", _) if cOpt.isEmpty => count(lit(1))
-          case ("count", _) => count(in)
-          case ("min", "id") => min(in)
-          case ("max", "id") => max(in)
-          case ("sample", "id") => min(in)
-          case ("min", _) => min_by(in, when(in.isNotNull, sortStruct(i)))
-          case ("max", _) => max_by(in, when(in.isNotNull, sortStruct(i)))
-          case ("sample", _) => min_by(in, when(in.isNotNull, sortStruct(i)))
-          case ("group_concat", _) =>
-            if (a.distinct) collect_set(in.getField("lex"))
-            else collect_list(in.getField("lex"))
-          case (other, _) =>
-            throw new IllegalStateException(s"unsaltable aggregate: $other")
-        }
-        c.as(s"__agg_p_$i")
-      }
-      val phase1 = pre
-        // spreadSalt, not saltOf: a duplicate-producing BGP under
-        // GROUP_CONCAT makes the hot group byte-identical rows, which a pure
-        // content salt would re-concentrate on one reducer (see Skew scaladoc
-        // for the salt-invariance + indeterminate-stage retry argument)
-        .withColumn(saltCol, graft.pipeline.Skew.spreadSalt(pre, Compiler.HotGroupSalts))
-        .groupBy((gks :+ col(saltCol)): _*)
-        .agg(p1Cols.head, p1Cols.tail: _*)
-      val mergeCols: Seq[Column] = inputs.zipWithIndex.map { case ((a, cOpt), i) =>
-        val p = col(s"__agg_p_$i")
-        val mode = cOpt.map(_._2).getOrElse("view")
-        val c: Column = (a.fn, mode) match {
-          case ("count", _) => sum(p)
-          case ("min", "id") => min(p)
-          case ("max", "id") => max(p)
-          case ("sample", "id") => min(p)
-          // min_by/max_by skip null-ordering rows, so an all-null salt
-          // partial can't shadow a bound one
-          case ("min", _) => min_by(p, when(p.isNotNull, termSort(p)))
-          case ("max", _) => max_by(p, when(p.isNotNull, termSort(p)))
-          case ("sample", _) => min_by(p, when(p.isNotNull, termSort(p)))
-          case ("group_concat", _) =>
-            val merged = flatten(collect_list(p))
-            concat_ws(a.sep,
-              array_sort(if (a.distinct) array_distinct(merged) else merged))
-          case (other, _) =>
-            throw new IllegalStateException(s"unsaltable aggregate: $other")
-        }
-        c.as(s"__agg_out_${i}_0")
-      }
-      phase1.groupBy(gks: _*).agg(mergeCols.head, mergeCols.tail: _*)
-    } else if (aggCols.isEmpty)
-      // GROUP BY with no aggregates (SELECT of group keys only): one row per
-      // distinct key tuple — Dataset.agg demands ≥1 aggregate, dropDuplicates
-      // IS the group-keys projection (nulls group together, like groupBy)
-      pre.dropDuplicates()
-    else if (keys.isEmpty) pre.groupBy().agg(aggCols.head, aggCols.tail: _*)
-    // keys.nonEmpty: a KEYED grouping even when no key column materialized
-    // (gks falls back to a constant) — empty input yields ZERO groups, not
-    // the global aggregation's one row (r11 fuzzer caught that fallthrough)
-    else pre.groupBy(gks: _*).agg(aggCols.head, aggCols.tail: _*)
-
-    // wrap raw aggregate outputs into term views — batched into one
-    // withColumns projection (one analysis pass, not one per aggregate)
-    var out =
-      if (grouped.columns.contains("__gk_const")) grouped.drop("__gk_const")
-      else grouped
-    val wraps = scala.collection.mutable.LinkedHashMap.empty[String, Column]
-    val strView: Column => Column = c => when(c.isNotNull, struct(
-      lit(TermRow.KIND_LITERAL).as("kind"), c.as("lex"),
-      lit(Term.xsdString).as("dt"), lit(null).cast(StringType).as("lang"),
-      lit(null).cast(DoubleType).as("num"))).otherwise(lit(null).cast(TermRow.schema))
-    val idOuts = inputs.collect { case ((a, Some((_, "id")))) => a.out }.toSet
-    inputs.zipWithIndex.foreach { case ((a, cOpt), i) =>
-      def raw(j: Int) = col(s"__agg_out_${i}_$j")
-      val mode = cOpt.map(_._2).getOrElse("view")
-      val v = (a.fn, mode) match {
-        case ("count", _) => numView(raw(0), Term.xsdInteger)
-        case ("sum", "int") =>
-          // empty group → 0; overflow (try_sum NULL, or a distinct total
-          // outside Long range) → SPARQL error → unbound, NOT 0
-          when(raw(1) === 0, numView(lit(0L), Term.xsdInteger))
-            .otherwise(numView(raw(0).try_cast(LongType), Term.xsdInteger))
-        case ("avg", "int") =>
-          // integer AVG → exact decimal (op:numeric-divide); empty group → 0
-          when(raw(1) === 0, numView(lit(0), Term.xsdInteger))
-            .otherwise(NE.decTerm(decDiv(raw(0), raw(1))))
-        case ("sum", "num") => numView(coalesce(raw(0), lit(0.0)), Term.xsdDouble)
-        case ("avg", "num") =>
-          when(raw(1) === 0, numView(lit(0), Term.xsdInteger))
-            .otherwise(numView(raw(0) / raw(1), Term.xsdDouble))
-        case ("sum", "dec") =>
-          // all-integer group stays xsd:integer (out-of-Long total → error);
-          // any decimal input promotes the group to exact xsd:decimal
-          when(raw(1) === 0, numView(lit(0L), Term.xsdInteger))
-            .when(raw(2) === 0, numView(raw(0).try_cast(LongType), Term.xsdInteger))
-            .otherwise(NE.decTerm(raw(0)))
-        case ("avg", "dec") =>
-          when(raw(1) === 0, numView(lit(0L), Term.xsdInteger))
-            .otherwise(NE.decTerm(decDiv(raw(0), raw(1))))
-        case ("sum", _) =>
-          when(raw(5) === 1, lit(null).cast(TermRow.schema)) // poisoned group
-            .when(raw(3) === 0, numView(lit(0), Term.xsdInteger)) // SUM({}) = 0
-            .when(raw(4) === 0, numView(raw(0), Term.xsdInteger))
-            .when(raw(4) === 1, NE.decTerm(raw(1)))
-            .when(raw(4) === 2, NE.fltTerm(raw(2).cast(FloatType)))
-            .otherwise(numView(raw(2), Term.xsdDouble))
-        case ("avg", _) =>
-          when(raw(5) === 1, lit(null).cast(TermRow.schema))
-            .when(raw(3) === 0, numView(lit(0), Term.xsdInteger))
-            .when(raw(4) === 0, NE.decTerm(decDiv(raw(0), raw(3))))
-            .when(raw(4) === 1, NE.decTerm(decDiv(raw(1), raw(3))))
-            .when(raw(4) === 2, NE.fltTerm((raw(2) / raw(3)).cast(FloatType)))
-            .otherwise(numView(raw(2) / raw(3), Term.xsdDouble))
-        case ("min" | "max" | "sample", "id") => raw(0) // stays an id column
-        case ("min" | "max" | "sample", _) => raw(0)
-        case ("group_concat", _) => strView(raw(0))
-      }
-      wraps(a.out) = v
-    }
-    out = out
-      .withColumns(wraps.toMap)
-      .drop(inputs.indices.flatMap(i => (0 until 6).map(j => s"__agg_out_${i}_$j")): _*)
+    val ins = aggs.map { a => val (s2, in) = aggInput(sol, a); sol = s2; in }
+    val defs = aggs.zip(ins).map { case (a, in) => aggDef(a, in.mode) }
+    val parts = defs.zipWithIndex.map { case (d, i) => d.parts(col(s"__agg_in_$i")) }
     val keptKeys = keys.filter(sol.reps.contains)
+    val keyCols = keptKeys.map(v => col(bt(v)))
+    val pre = sol.df.select((keyCols ++
+      ins.zipWithIndex.map { case (in, i) => in.col.as(s"__agg_in_$i") }): _*)
+    // keys declared but none materialized (all provably unbound): keep the
+    // grouping KEYED via a constant, so that empty input yields zero groups,
+    // not the global aggregation's one row (r11 fuzzer caught that)
+    val gks = if (keys.nonEmpty && keyCols.isEmpty) Seq(lit(1).as("__gk_const")) else keyCols
+    // a hot GROUP_CONCAT compiles the whole GROUP BY as the salted plan, when
+    // every aggregate has an exact merge (sum/avg are algebraic: their
+    // partial aggregation already absorbs hot keys)
+    val salted = keys.nonEmpty && aggs.exists(_.fn == "group_concat") &&
+      defs.forall(_.merge.isDefined) && hotGroup(sol)
+    val grouped =
+      if (salted) saltedAgg(pre, gks, parts.zip(defs).map { case (p, d) => (p.head, d.merge.get) })
+      // GROUP BY with no aggregates (SELECT of group keys only): one row per
+      // distinct key tuple; Dataset.agg demands an aggregate, and
+      // dropDuplicates IS the group-keys projection (nulls group together)
+      else if (aggs.isEmpty) pre.dropDuplicates()
+      else {
+        val aggCols = parts.zipWithIndex.flatMap { case (ps, i) =>
+          ps.zipWithIndex.map { case (c, j) => c.as(s"__agg_out_${i}_$j") } }
+        pre.groupBy(gks: _*).agg(aggCols.head, aggCols.tail: _*)
+      }
+    // the result terms, in one projection (one analysis pass)
+    val results = aggs.zip(defs).zipWithIndex.map { case ((a, d), i) =>
+      d.result(parts(i).indices.map(j => col(s"__agg_out_${i}_$j"))).as(a.out) }
+    val idOuts = aggs.zip(defs).collect { case (a, d) if d.idOut => a.out }.toSet
     // the keys keep their value facts (each output row is one input key
     // tuple) but not their companions, which `pre` did not select; the
     // aggregate exchange re-keys the frame; a keyed grouping has at most as
     // many groups as input rows, a key-less one exactly one row
     val prof = sol.prof.restrict(keptKeys.toSet).withoutCompanions.rekeyed
-    Sol(out,
+    Sol(grouped.select((keyCols ++ results): _*),
       keptKeys.map(v => v -> sol.reps(v)).toMap ++
         aggs.map(a => a.out -> (if (idOuts.contains(a.out)) IdRep else TermRep: Rep)),
       // sum/avg can poison (non-numeric input → unbound result), so only
@@ -2068,60 +1956,17 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       val wBase = if (partCols.isEmpty) Window.partitionBy(lit(1)) else Window.partitionBy(partCols: _*)
       val w = if (ordCols.isEmpty) wBase else wBase.orderBy(ordCols: _*)
 
-      // Whole-partition GROUP_CONCAT at scale: a window operator puts the
-      // hot partition's EVERY row and its collect state on ONE task — the
-      // same holistic-aggregate shape compileGroup's salted two-phase plan
-      // exists for. A whole-partition frame makes the window expressible as
-      // a per-key aggregate joined back to the rows, which unlocks that
-      // exact device (phase 1 per (keys, salt), merge per key, join back).
-      // Gated like compileGroup: salted when statistics bound the input
-      // above the hot-group cap OR cardinality is UNKNOWN (card = None) —
-      // unknown is deliberately treated as above-cap, because the defensive
-      // plan costs one bounded extra shuffle while an un-salted hot group
-      // is a single-task OOM at scale; all-ASC order keys only (the merge
-      // re-sorts by the
-      // key components + lex, which is the asc_nulls_first frame order; a
-      // DESC key has no struct-sort equivalent).
-      val hotGroupCap = spark.conf.get(Compiler.HotGroupCapKey,
-        Compiler.DefaultHotGroupCap.toString).toLong
-      val saltedWhole = spec.fn == "group_concat" && spec.e.isDefined &&
-        spec.frame.forall(_ == (Long.MinValue, Long.MaxValue)) && !spec.range &&
-        ordComps.forall(_._2) && sol.prof.card.forall(_ > hotGroupCap)
-      if (saltedWhole) {
+      // Whole-partition GROUP_CONCAT past the hot-group gate: a window
+      // operator puts the hot partition's every row and its collect state on
+      // one task. A whole-partition frame is a per-key aggregate joined back
+      // to the rows, so it takes GROUP BY's salted plan. All-ASC order keys
+      // only: the merge sorts by the key components, which is the
+      // asc_nulls_first frame order; a DESC key has no struct-sort equivalent.
+      if (spec.fn == "group_concat" && spec.e.isDefined &&
+          spec.frame.forall(_ == (Long.MinValue, Long.MaxValue)) && !spec.range &&
+          ordComps.forall(_._2) && hotGroup(sol)) {
         sol = saltedWindowConcat(sol, spec, ordComps)
       } else {
-
-      // num fast path: double-family vars aggregate their companion directly
-      // (COUNT is type-agnostic; SUM/AVG need FAM_DBL for correct typing)
-      val numFast: Option[Column] = spec.e match {
-        case Some(EVar(n)) if sol.nums.contains(n) && sol.prof.numAll.contains(n) &&
-            (spec.fn == "count" || sol.prof.fam.get(n).contains(Sol.FAM_DBL)) &&
-            Seq("sum", "avg", "count").contains(spec.fn) =>
-          Some(col(bt(sol.numCol(n))))
-        case _ => None
-      }
-      // exact-family fast path: decimal companion + per-row decimal flag
-      // (same promotion logic as compileGroup's "dec" aggregation mode)
-      val decFast: Option[(Column, Column)] = spec.e match {
-        case Some(EVar(n)) if numFast.isEmpty && sol.prof.decs.contains(n) &&
-            sol.prof.fam.get(n).contains(Sol.FAM_DEC) &&
-            Seq("sum", "avg").contains(spec.fn) =>
-          val isdec = sol.reps.get(n) match {
-            case Some(IdRep) =>
-              shiftright(col(bt(n)), TermId.PAYLOAD_BITS).bitwiseAND(0xFF) ===
-                TermId.TAG_DECIMAL
-            case _ => col(bt(n)).getField("dt") === Term.xsdDecimal
-          }
-          Some((col(bt(sol.decCol(n))), isdec))
-        case _ => None
-      }
-      val inOpt: Option[Column] =
-        if (numFast.isDefined || decFast.isDefined) None
-        else spec.e.map { expr =>
-          val (s2, c) = exprColumn(sol, expr); sol = s2; c
-        }
-
-      val frame = spec.frame
       val framed =
         if (spec.range) {
           // RANGE frame (Spark-native extension; the reference throws,
@@ -2138,91 +1983,39 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
           }
           val wr = wBase.orderBy(if (k.asc) numOrd.asc_nulls_first
             else numOrd.desc_nulls_last)
-          frame match {
+          spec.frame match {
             case Some((lo, hi)) => wr.rangeBetween(lo, hi)
             case None =>
               wr.rangeBetween(Window.unboundedPreceding, Window.unboundedFollowing)
           }
-        } else frame match {
+        } else spec.frame match {
         case Some((lo, hi)) => w.rowsBetween(lo, hi)
         case None => w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       }
-      val outCol: Column = spec.fn match {
-        case "rank" => intView(rank().over(w))
-        case "dense_rank" => intView(dense_rank().over(w))
-        case "row_number" => intView(row_number().over(w))
+      def view(): Column = { val (s2, c) = exprColumn(sol, spec.e.get); sol = s2; c }
+      val (outCol, idOut): (Column, Boolean) = spec.fn match {
+        case "rank" => (intView(rank().over(w)), false)
+        case "dense_rank" => (intView(dense_rank().over(w)), false)
+        case "row_number" => (intView(row_number().over(w)), false)
         case "ntile" =>
           // peer-group NTILE (reference MaterializedQueryPlan.swift:892-926):
           // tiles are assigned over *distinct* sort keys (all peers share a tile),
           // earlier tiles larger by at most one — floor((d-1)·n/D)+1
           val d = dense_rank().over(w).cast(LongType)
-          val wAll = if (partCols.isEmpty) Window.partitionBy(lit(1)) else Window.partitionBy(partCols: _*)
-          val dMax = max(d).over(wAll)
+          val dMax = max(d).over(wBase)
           val n = lit(spec.arg.toLong)
-          val bucket = (floor((d - 1) * n / dMax) + 1).cast(LongType)
-          intView(bucket)
-        case "count" =>
-          intView(numFast.orElse(inOpt).map(c => count(c).over(framed))
-            .getOrElse(count(lit(1)).over(framed)))
-        case "sum" | "avg" if numFast.isDefined => // double-family fast path
-          val c = numFast.get
-          if (spec.fn == "sum") numView(sum(c).over(framed))
-          else numView(avg(c).over(framed))
-        case "sum" | "avg" if decFast.isDefined => // exact-decimal fast path
-          val (d, isdec) = decFast.get
-          val sumD = try_sum(d).over(framed)
-          val n = count(d).over(framed)
-          val anyDec = max(isdec.cast(IntegerType)).over(framed)
-          if (spec.fn == "sum")
-            when(n === 0, intView(lit(0L)))
-              .when(anyDec === 0, intView(sumD.try_cast(LongType)))
-              .otherwise(graft.engine.NativeExpr.decTerm(sumD))
-          else
-            when(n === 0, intView(lit(0L)))
-              .otherwise(graft.engine.NativeExpr.decTerm(decDiv(sumD, n)))
-        case "sum" | "avg" =>
-          // typed frame aggregate: family promotion + poison, like compileGroup
-          val in = inOpt.get
-          val rank = graft.engine.NativeExpr.famRank(in)
-          val sumL = try_sum(when(rank === 0, graft.engine.NativeExpr.longVal(in))).over(framed)
-          val sumDec = sum(when(rank <= 1, graft.engine.NativeExpr.decVal(in))).over(framed)
-          val sumD = sum(when(rank.isNotNull, in.getField("num"))).over(framed)
-          val n = count(when(rank.isNotNull, lit(1))).over(framed)
-          val poison = max(when(in.isNotNull && rank.isNull, 1).otherwise(0)).over(framed)
-          val maxRank = max(rank).over(framed)
-          def decDivW(x: Column, y: Column): Column =
-            coalesce(
-              try_divide(x.try_cast(DecimalType(20, 10)), y.try_cast(DecimalType(20, 10)))
-                .cast(DecimalType(38, 18)),
-              try_divide(x.cast(DecimalType(38, 18)), y.cast(DecimalType(38, 18)))
-                .cast(DecimalType(38, 18)))
-          if (spec.fn == "sum")
-            when(poison === 1, lit(null).cast(TermRow.schema))
-              .when(n === 0, intView(lit(0)))
-              .when(maxRank === 0, intView(sumL))
-              .when(maxRank === 1, graft.engine.NativeExpr.decTerm(sumDec))
-              .when(maxRank === 2, graft.engine.NativeExpr.fltTerm(sumD.cast(FloatType)))
-              .otherwise(numView(sumD))
-          else
-            when(poison === 1, lit(null).cast(TermRow.schema))
-              .when(n === 0, intView(lit(0)))
-              .when(maxRank === 0, graft.engine.NativeExpr.decTerm(decDivW(sumL, n)))
-              .when(maxRank === 1, graft.engine.NativeExpr.decTerm(decDivW(sumDec, n)))
-              .when(maxRank === 2, graft.engine.NativeExpr.fltTerm((sumD / n).cast(FloatType)))
-              .otherwise(numView(sumD / n))
-        case "min" => min_by(inOpt.get, when(inOpt.get.isNotNull, struct(
-          inOpt.get.getField("kind"), inOpt.get.getField("num"), inOpt.get.getField("lex"),
-          inOpt.get.getField("dt"), inOpt.get.getField("lang")))).over(framed)
-        case "max" => max_by(inOpt.get, when(inOpt.get.isNotNull, struct(
-          inOpt.get.getField("kind"), inOpt.get.getField("num"), inOpt.get.getField("lex"),
-          inOpt.get.getField("dt"), inOpt.get.getField("lang")))).over(framed)
-        case "sample" => first(inOpt.get, ignoreNulls = true).over(framed)
+          (intView((floor((d - 1) * n / dMax) + 1).cast(LongType)), false)
+        case "sample" => (first(view(), ignoreNulls = true).over(framed), false)
         case "group_concat" =>
-          val lst = collect_list(inOpt.get.getField("lex")).over(framed)
-          when(lst.isNotNull, struct(
-            lit(TermRow.KIND_LITERAL).as("kind"), concat_ws(spec.sep, lst).as("lex"),
-            lit(Term.xsdString).as("dt"), lit(null).cast(StringType).as("lang"),
-            lit(null).cast(DoubleType).as("num")))
+          (strTerm(concat_ws(spec.sep, collect_list(view().getField("lex")).over(framed))),
+            false)
+        case "count" | "sum" | "avg" | "min" | "max" =>
+          // GROUP BY's definition, applied over the frame
+          val a = AggSpec(spec.out, spec.fn, spec.e)
+          val (s2, in) = aggInput(sol, a)
+          sol = s2
+          val d = aggDef(a, in.mode)
+          (d.result(d.parts(in.col).map(_.over(framed))), d.idOut)
         case other => throw new IllegalArgumentException(s"window fn: $other")
       }
       // a window adds a column and changes no existing var, so the value
@@ -2231,50 +2024,35 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       // re-keyed the frame into a fresh Exchange for the second window of
       // q_sparql_window); the window's own exchange replaced the layout, and
       // it destroys the order
+      val prof = sol.prof.rekeyed
       sol = sol.copy(df = sol.df.withColumn(spec.out, outCol),
-        reps = sol.reps + (spec.out -> TermRep), prof = sol.prof.rekeyed, sortCols = Nil)
+        reps = sol.reps + (spec.out -> (if (idOut) IdRep else TermRep)),
+        prof = if (idOut) prof.copy(inl = prof.inl + spec.out) else prof, sortCols = Nil)
       }
     }
     sol
   }
 
-  /** Two-phase salted whole-partition windowed GROUP_CONCAT (see the gate in
-    * [[compileWindow]]): phase 1 collects (sort-components, lex) structs per
-    * (partition keys, spread salt) — bounding any task's collect state to
-    * ~1/salts of the hottest partition — the merge flattens per key, sorts
-    * by the asc_nulls_first struct order (key components, then lex as the
-    * determinism tie-break: under a total order ties are identical elements,
-    * so this IS the frame order), concats, and the result joins back to the
-    * row frame null-safely on the partition keys (broadcast single row for
-    * the unpartitioned window). */
+  /** Whole-partition windowed GROUP_CONCAT as [[saltedAgg]] over the
+    * partition keys (see the gate in [[compileWindow]]). Each element is a
+    * struct of the order key components and then the lex, so the merge's
+    * array_sort is the frame order (under a total order, ties are identical
+    * elements); the result joins back to the rows null-safely on the
+    * partition keys (a broadcast single row for an unpartitioned window). */
   private def saltedWindowConcat(sol0: Sol, spec: WinSpec,
       ordComps: Seq[(Seq[Column], Boolean)]): Sol = {
-    var sol = sol0
-    val (s2, inCol) = exprColumn(sol, spec.e.get)
-    sol = s2
+    val (sol, in) = exprColumn(sol0, spec.e.get)
     val partVars = spec.partBy.filter(sol.reps.contains)
-    val sortFields = ordComps.flatMap(_._1).zipWithIndex.map { case (c, i) =>
-      c.as(s"__wo_$i") }
-    val elem = struct((sortFields :+ inCol.getField("lex").as("__lex")): _*)
+    val keys = partVars.indices.map(i => col(s"__wk_$i"))
+    val elem = struct((ordComps.flatMap(_._1).zipWithIndex.map { case (c, i) =>
+      c.as(s"__wo_$i") } :+ in.getField("lex").as("__lex")): _*)
     val base = sol.df
-    val keyed = base.select(
-      partVars.zipWithIndex.map { case (v, i) => col(bt(v)).as(s"__wk_$i") } :+
-        when(inCol.getField("lex").isNotNull, elem).as("__we"): _*)
-    val salt = "__graft_wsalt"
-    val keyRefs = partVars.indices.map(i => col(s"__wk_$i"))
-    val p1 = keyed
-      .withColumn(salt, graft.pipeline.Skew.spreadSalt(keyed, Compiler.HotGroupSalts))
-      .groupBy(keyRefs :+ col(salt): _*)
-      .agg(collect_list(col("__we")).as("__wp"))
-    val outCol = struct(
-      lit(TermRow.KIND_LITERAL).as("kind"),
-      concat_ws(spec.sep,
-        transform(array_sort(flatten(collect_list(col("__wp")))),
-          x => x.getField("__lex"))).as("lex"),
-      lit(Term.xsdString).as("dt"),
-      lit(null).cast(StringType).as("lang"),
-      lit(null).cast(DoubleType).as("num"))
-    val aggDf = p1.groupBy(keyRefs: _*).agg(outCol.as(spec.out))
+    val keyed = base.select(partVars.zipWithIndex.map { case (v, i) =>
+      col(bt(v)).as(s"__wk_$i") } :+ when(in.getField("lex").isNotNull, elem).as("__we"): _*)
+    val aggDf = saltedAgg(keyed, keys, Seq((collect_list(col("__we")),
+        (p: Column) => flatten(collect_list(p)))))
+      .select(keys :+ strTerm(concat_ws(spec.sep, transform(
+        array_sort(col("__agg_out_0_0")), x => x.getField("__lex")))).as(spec.out): _*)
     val joined =
       if (partVars.isEmpty) base.crossJoin(broadcast(aggDf))
       else {
@@ -2644,6 +2422,19 @@ object Compiler {
   /** Salt fan-out of the two-phase hot-group plan (≈ executor-core count:
     * the hottest group's collect state splits over this many reducers). */
   val HotGroupSalts: Int = 32
+
+  /** An aggregate's input column and its input mode (`Compiler.aggInput`). */
+  private final case class AggIn(col: Column, mode: String)
+
+  /** One SPARQL aggregate as Spark aggregate functions (`Compiler.aggDef`),
+    * written once for both callers: `compileGroup` applies `parts(in)` in
+    * `.agg`, `compileWindow` applies the same columns `.over(frame)`, and
+    * `result` turns their values into the result term. `merge` merges a
+    * one-part aggregate's per-salt partials in `saltedAgg` where that merge is
+    * exact; `idOut`: the result is an id column, not a term struct. */
+  private final case class AggDef(parts: Column => Seq[Column],
+      result: Seq[Column] => Column, merge: Option[Column => Column] = None,
+      idOut: Boolean = false)
 
   /** Cap on distinct endpoint values for SERVICE ?ep dispatch: each endpoint
     * is one driver-side HTTP round-trip, so the planner refuses unbounded

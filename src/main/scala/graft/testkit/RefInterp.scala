@@ -338,9 +338,9 @@ object RefInterp {
   // ---- window functions ---------------------------------------------------
 
   /** One window application over a solution sequence, mirroring the COMPILED
-    * semantics (Compiler.compileWindow) operation for operation: partition by
-    * the partBy values (an out-of-scope or unbound var is one null group,
-    * like the engine's filtered partition columns), order each partition
+    * semantics (Compiler.compileWindow): partition by the partBy values (an
+    * out-of-scope or unbound var is one null group, like the engine's
+    * filtered partition columns), order each partition
     * under the engine term total order ([[cmpTerms]], unbound first asc),
     * then per row:
     *  - rank/dense_rank/row_number over the ordered partition;
@@ -352,8 +352,8 @@ object RefInterp {
     *  - SAMPLE = first non-null input in frame order (the compiled
     *    `first(ignoreNulls)`), GROUP_CONCAT = frame-order lex concat (always
     *    bound, empty string for an empty frame); SUM/AVG/COUNT/MIN/MAX reuse
-    *    [[aggValue]], whose numeric-tower fold is the compiled aggregation
-    *    semantics (already pinned by the grouped-aggregate differential). */
+    *    [[aggValue]], as the compiled window applies GROUP BY's aggregate
+    *    definition (`Compiler.aggDef`) over the frame. */
   private def windowPass(spec: WinSpec, rows: Seq[Binding], env: Env,
       scope: ExprEval.BnodeScope): Seq[Binding] = {
     rows.groupBy(r => spec.partBy.map(r.get)).values.toSeq.flatMap { part0 =>

@@ -634,17 +634,66 @@ class EngineSpec extends AnyFunSuite {
     assert(sol.df.count() == 150)
   }
 
-  test("typed window SUM over integers stays xsd:integer") {
+  test("GROUP BY and a whole-partition window agree on COUNT, SUM, AVG, MIN and MAX over every :p family") {
+    // one aggregate definition serves both, so `… GROUP BY ?x` and
+    // `… OVER (PARTITION BY ?x)` give the same term for each ?x. :u has no :p,
+    // so its ?v is an unbound OPTIONAL value: SUM and AVG of no value are
+    // "0"^^xsd:integer in every family (§18.5.1.3), as is an empty leading frame
     val ex = "http://example.org/"
-    val w = AWindow(
-      BGP(Seq(QuadPattern(V("s"), T(Iri(ex + "age")), V("a")))),
-      Seq(WinSpec("running", "sum", Some(EVar("a")), Seq.empty,
-        Seq(SortKey(EVar("a"))), frame = Some((Long.MinValue, 0L)))))
-    val rows = Results.materialize(tcomp, tcomp.compile(w))
-      .select(col("running.lex"), col("running.dt")).collect()
-      .map(r => (r.getString(0), r.getString(1))).sortBy(_._1)
-    assert(rows.forall(_._2 == Term.xsdInteger), rows.mkString(","))
-    assert(rows.map(_._1).toSet == Set("25", "55")) // 25, then 25+30
+    def iri(s: String) = Iri(ex + s)
+    def dec(s: String) = Term.dec(BigDecimal(s))
+    val int0 = Some(("0", Term.xsdInteger))
+    val families: Seq[(String, Seq[(String, Term)])] = Seq(
+      "integers" -> Seq("a" -> Term.int(30), "a" -> Term.int(25), "b" -> Term.int(7)),
+      "decimals" -> Seq("a" -> dec("1.5"), "a" -> Term.int(2), "b" -> dec("0.25")),
+      "integer+double" -> Seq("a" -> Term.int(1), "b" -> Term.dbl(2.5), "c" -> Term.int(4)),
+      "numbers+string" -> Seq("a" -> Term.int(1), "a" -> Term.str("x"), "b" -> Term.dbl(2.5),
+        "c" -> dec("3.5")),
+      // two values overflow DECIMAL(38,18); the string keeps :p out of FAM_DEC
+      "overflowing decimals" -> Seq("a" -> dec("90000000000000000000.5"),
+        "a" -> dec("90000000000000000000.25"), "b" -> Term.str("s")))
+    val fns = Seq("count", "sum", "avg", "min", "max")
+    val schema = StructType(Seq("s", "p", "o", "g").map(n =>
+      StructField(n, TermRow.schema, nullable = true)))
+    for ((family, values) <- families) {
+      val quads = values.map { case (s, o) => (iri(s), iri("p"), o) } ++
+        (values.map(_._1) :+ "u").distinct.map(s => (iri(s), iri("q"), iri("z")))
+      val rows = quads.map { case (s, pp, o) =>
+        Row(TermRow.toRow(s), TermRow.toRow(pp), TermRow.toRow(o), TermRow.toRow(iri("g")))
+      }
+      val st = StoreEncoder.encode(
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema), IriScheme.default)
+      val c = new Compiler(st, ExprEval.Ctx(nowEpochUs = 0L))
+      // each result row as var → (lex, datatype), None where unbound
+      def run(select: String, tail: String = ""): Seq[Map[String, Option[(String, String)]]] = {
+        val q = graft.parser.SparqlParser.parse(
+          s"PREFIX : <$ex> SELECT ?x $select WHERE { ?x :q ?z OPTIONAL { ?x :p ?v } } $tail")
+        val df = Results.materialize(c, c.compile(q.algebra))
+        df.collect().toSeq.map(r => df.columns.map { v =>
+          val t = r.getStruct(r.fieldIndex(v))
+          v -> Option(t).map(t => (t.getString(1).stripPrefix(ex), t.getString(2)))
+        }.toMap)
+      }
+      def byX(rs: Seq[Map[String, Option[(String, String)]]]) =
+        rs.groupBy(_("x")).map { case (x, g) => x -> g.toSet }
+      val grouped = byX(run(fns.map(f => s"(${f.toUpperCase}(?v) AS ?${f}_v)").mkString(" "),
+        "GROUP BY ?x"))
+      val windowed = byX(run(fns.map(f =>
+        s"(${f.toUpperCase}(?v) OVER (PARTITION BY ?x) AS ?${f}_v)").mkString(" ")))
+      assert(windowed == grouped, s"$family: window $windowed, GROUP BY $grouped")
+      val u = grouped(Some(("u", null))).head
+      assert(u("sum_v") == int0 && u("avg_v") == int0, s"$family: empty group $u")
+      val frame = "PARTITION BY ?x ORDER BY ?v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+      val lead = run(s"?v (ROW_NUMBER() OVER (PARTITION BY ?x ORDER BY ?v) AS ?rn) " +
+        s"(SUM(?v) OVER ($frame) AS ?s) (AVG(?v) OVER ($frame) AS ?m)")
+      for (r <- lead if r("rn").contains(("1", Term.xsdInteger)))
+        assert(r("s") == int0 && r("m") == int0, s"$family: empty leading frame $r")
+      if (family == "integers") { // integer sums stay xsd:integer, over a frame too
+        assert(grouped(Some(("a", null))).head("sum_v").contains(("55", Term.xsdInteger)))
+        assert(lead.filter(_("x").contains(("a", null))).map(_("s")).toSet ==
+          Set(int0, Some(("25", Term.xsdInteger))))
+      }
+    }
   }
 
   test("BNODE(label) co-refers within a row, differs across rows (tiny store)") {
@@ -917,7 +966,7 @@ class EngineSpec extends AnyFunSuite {
           IriScheme.default)
         val c1 = new Compiler(st1, ExprEval.Ctx(nowEpochUs = 0L))
         assert(c1.compile(alg).df.queryExecution.optimizedPlan.toString
-            .contains("__graft_wsalt"),
+            .contains("__graft_salt"),
           "hotGroupCap=0 must fire the salted window plan for this shape")
         for (parts <- Seq(1, 4, 9))
           assert(run(parts) == base,
@@ -1161,14 +1210,14 @@ class EngineSpec extends AnyFunSuite {
     // pin the DEFAULT-cap plan to the single-phase window (test store stats
     // bound the input far below the cap)
     val baseSol = comp.compile(alg)
-    assert(!baseSol.df.queryExecution.optimizedPlan.toString.contains("__graft_wsalt"),
+    assert(!baseSol.df.queryExecution.optimizedPlan.toString.contains("__graft_salt"),
       "below the cap the plain window plan must be used")
     val base = rows(baseSol)
     spark.conf.set(Compiler.HotGroupCapKey, "0")
     try {
       val forcedSol = comp.compile(alg)
       val plan = forcedSol.df.queryExecution.optimizedPlan.toString
-      assert(plan.contains("__graft_wsalt"),
+      assert(plan.contains("__graft_salt"),
         s"forced gate must compile the salted two-phase plan:\n${plan.take(3000)}")
       assert(rows(forcedSol) == base,
         "salted two-phase windowed GROUP_CONCAT must equal the single-phase window")
