@@ -2071,9 +2071,10 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
 
   /** Compile a property-path pattern. Link/inverse/sequence/alternative expand
     * statically (reference rewriter QueryRewriting.swift:278-293); negated sets are
-    * filtered scans; +, *, ? run an iterative distinct fixpoint with localCheckpoint
-    * (the DataFrame analogue of the W3C ALP visited-set algorithm the reference
-    * uses, MaterializedQueryPlan.swift:1707-1723).
+    * filtered scans; + and * take [[closure]] (a driver BFS over small bounded
+    * edge sets, else the superstep loop: the W3C ALP visited-set algorithm the
+    * reference uses, MaterializedQueryPlan.swift:1707-1723); ? is the
+    * zero-length match unioned with one step.
     */
   def compilePath(s: Node, path: PathE, o: Node, g: Node): Sol = path match {
     case PLink(iri) => compilePattern(QuadPattern(s, N.iri(iri), o, g))
@@ -2240,126 +2241,70 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
       Sol.ofIds(if (t1 == t2) df.select() else df.select().filter(lit(false)), Nil)
   }
 
-  /** Iterative fixpoint for p+ / p*. Seeds from a bound subject/object when
-    * available so the frontier stays small; var-var closure is inherently
-    * quadratic (same in the reference, MaterializedQueryPlan.swift:2036-2068).
+  /** Closure pairs (__ca, __cb) for p+ / p*, the W3C ALP visited-set walk
+    * of the reference (MaterializedQueryPlan.swift:1707-1723, 2036-2068).
+    * The walk starts from the bound endpoint, on reversed edges for a bound
+    * object, and from every vertex for var-var (quadratic in its output, as
+    * in the reference). A bound endpoint over a statistics-bounded edge set
+    * takes a driver BFS; otherwise the superstep loop runs until quiescent.
     */
   private def closure(s: Node, p: PathE, o: Node, g: Node, includeZero: Boolean): Sol = {
-    val (edges0, edgeCard) = pathEdges(p, g)
-    var edges = graft.pipeline.ScratchCache.persist(edges0)
-    // small edge sets broadcast into every fixpoint iteration (the frontier
-    // join then needs no shuffle). Only a statistics bound earns the eager
-    // hint — without one, the persisted edge frame's observed size lets AQE
-    // make the same call per stage, and compile() stays job-free
+    val (edges, edgeCard) = pathEdges(p, g)
+    // the broadcast cap: any broadcast would ship an edge set this small
+    // through the driver anyway. Only a statistics bound earns the driver
+    // path — compile() must not collect an edge set of unknown size
     val broadcastSmall = edgeCard.exists(_ <= 200000L)
-    if (broadcastSmall) edges = broadcast(edges)
-    // Adaptive double-stepping: once a fixpoint has survived a few
-    // iterations it is a DEEP closure, and the sequential driver-loop
-    // latency (~2 small Spark jobs per iteration) dominates — from then on
-    // the frontier advances by {1,2} steps over a once-computed E ∪ E²,
-    // halving the remaining iterations (any path decomposes into steps of 1
-    // or 2, so BFS over E ∪ E² reaches exactly the E-closure). Shallow
-    // closures — the common case — never pay for the E⋈E join; an eager
-    // precompute measured SLOWER on a depth-3 closure than the iterations
-    // it saved. Only a statistics-bounded edge set escalates (E⋈E over an
-    // unbounded set could explode).
-    lazy val doubledStep: DataFrame = {
-      val e2 = edges.join(
-          edges.withColumnRenamed("__ca", "__cb0").withColumnRenamed("__cb", "__cc"),
-          col("__cb") === col("__cb0"))
-        .select(col("__ca"), col("__cc").as("__cb"))
-      broadcast(graft.pipeline.ScratchCache.persist(
-        edges.union(e2).dropDuplicates()))
-    }
+    def arc(r: Row, reverse: Boolean): (Long, Long) =
+      if (reverse) (r.getLong(1), r.getLong(0)) else (r.getLong(0), r.getLong(1))
 
-    // `base` is the step relation the frontier extends with — forward edges,
-    // or their reversal when the closure runs backwards from a bound object
-    // (extending a reversed frontier with FORWARD edges would walk the wrong
-    // direction). `rev` flips the doubled step to match on escalation.
-    def fix(seed: DataFrame, base: DataFrame, rev: Boolean): DataFrame = {
-      var st = base
-      // seed: (__ca, __cb) one-step pairs from the seeds
-      var acc = seed.dropDuplicates().localCheckpoint()
-      var frontier = acc
-      var done = false
-      var iter = 0
-      while (!done) {
-        val next = frontier.join(
-            st.withColumnRenamed("__ca", "__cb0").withColumnRenamed("__cb", "__cc"),
-            frontier("__cb") === col("__cb0"))
-          .select(frontier("__ca"), col("__cc").as("__cb")).dropDuplicates()
-          .join(acc.withColumnRenamed("__ca", "__cxa").withColumnRenamed("__cb", "__cxb"),
-            col("__ca") === col("__cxa") && col("__cb") === col("__cxb"), "left_anti")
-          .localCheckpoint()
-        if (next.isEmpty) done = true
-        else {
-          // each frontier is already checkpointed, so the visited-set union's
-          // lineage stays one union-of-checkpoints deep — re-checkpointing it
-          // every iteration just pays an extra job. Compact periodically so
-          // very deep closures don't accumulate a wide union.
-          iter += 1
-          acc = acc.union(next)
-          if (iter % 8 == 0) acc = acc.localCheckpoint()
-          frontier = next
-          if (iter == 4 && broadcastSmall)
-            st = if (rev) doubledStep.select(col("__cb").as("__ca"), col("__ca").as("__cb"))
-                 else doubledStep
-        }
-      }
-      acc
-    }
-
-    // Bound-endpoint fast path: when statistics bound the edge set under the
-    // broadcast cap, broadcasting would ALREADY route every edge through the
-    // driver (a broadcast is a driver-side collect + re-ship) — so running
-    // the seeded BFS on the driver is strictly less data movement and turns
-    // ~2 Spark jobs per closure level into one edge-collect job plus a
-    // LocalRelation result. The SAME stats bound gates both paths, so big or
-    // unbounded edge sets (the 100 TB shape) still take the distributed
-    // fixpoint; var-var closures always do (their output is edge-set-sized
-    // or larger, which must not materialize on the driver).
-    def localBfs(seedId: Long, reverse: Boolean): Seq[Long] = {
-      val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      edges.select(col("__ca"), col("__cb")).collect().foreach { r =>
-        val (x, y) = if (reverse) (r.getLong(1), r.getLong(0)) else (r.getLong(0), r.getLong(1))
-        adj.computeIfAbsent(x, _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += y
-      }
-      val visited = new java.util.HashSet[Long]()
-      var frontier0 = List(seedId)
-      while (frontier0.nonEmpty) {
-        frontier0 = for {
-          u <- frontier0
-          vs = adj.get(u); if vs != null
-          v <- vs; if visited.add(v)
-        } yield v
-      }
-      import scala.jdk.CollectionConverters._
-      visited.asScala.toSeq
-    }
-    def localSeq(ids: Seq[Long]): DataFrame = {
+    // (seed, reached) pairs: one edge-collect job and a LocalRelation result
+    def localBfs(seed: Long, reverse: Boolean): DataFrame = {
       import spark.implicits._
-      ids.toDF("__cid")
+      val adj = edges.collect().map(arc(_, reverse)).groupMap(_._1)(_._2)
+      val seen = scala.collection.mutable.HashSet.empty[Long]
+      var frontier = Seq(seed)
+      while (frontier.nonEmpty)
+        frontier = frontier.flatMap(adj.getOrElse(_, Array.emptyLongArray)).filter(seen.add)
+      seen.toSeq.map(seed -> _).toDF("__ca", "__cb")
     }
 
-    val pairs: DataFrame = (s, o) match {
-      case (T(t), _) if broadcastSmall =>
-        val sid = store.idOf(t).getOrElse(Long.MinValue)
-        localSeq(localBfs(sid, reverse = false))
-          .select(lit(sid).as("__ca"), col("__cid").as("__cb"))
-      case (_, T(t)) if broadcastSmall =>
-        val oid = store.idOf(t).getOrElse(Long.MinValue)
-        localSeq(localBfs(oid, reverse = true))
-          .select(col("__cid").as("__ca"), lit(oid).as("__cb"))
-      case (T(t), _) =>
-        val sid = store.idOf(t).getOrElse(Long.MinValue)
-        fix(edges.filter(col("__ca") === sid), edges, rev = false)
-      case (_, T(t)) =>
-        // run the closure backwards from the bound object, on reversed edges
-        val oid = store.idOf(t).getOrElse(Long.MinValue)
-        val revEdges = edges.select(col("__cb").as("__ca"), col("__ca").as("__cb"))
-        fix(revEdges.filter(col("__ca") === oid), revEdges, rev = true)
-          .select(col("__cb").as("__ca"), col("__ca").as("__cb"))
-      case _ => fix(edges, edges, rev = false)
+    // (seed, reached) pairs of the superstep loop
+    def loop(seed: Option[Long], reverse: Boolean): DataFrame = {
+      import graft.graph.Supersteps
+      val adj = Supersteps.adjacency(edges.rdd.map(arc(_, reverse)),
+        spark.sessionState.conf.numShufflePartitions, undirected = false)
+      // state (reached, fresh): the seeds that reach the vertex, and those
+      // that reached it in the last superstep, as sorted id arrays; a seed
+      // starts fresh at itself without reaching itself (p+ needs one step).
+      // A message is (reached, heard): the vertex sends itself `reached`
+      // and its out-neighbours `fresh`
+      val none = Array.emptyLongArray
+      val reach = Supersteps.run[Long, (Array[Long], Array[Long]),
+          (Array[Long], Array[Long])](adj, active = Some(_._2.nonEmpty))(
+        v => (none, if (seed.forall(_ == v)) Array(v) else none),
+        { case (v, (reached, fresh), out) =>
+          (if (reached.isEmpty) Iterator.empty else Iterator(v -> (reached, none))) ++
+            (if (fresh.isEmpty) Iterator.empty else out.iterator.map(_ -> (none, fresh))) },
+        { case ((r1, h1), (r2, h2)) =>
+          (Compiler.mergeIds(r1, r2, union = true), Compiler.mergeIds(h1, h2, union = true)) },
+        (_, m) => m.fold((none, none)) { case (reached, heard) =>
+          val fresh = Compiler.mergeIds(heard, reached, union = false)
+          (Compiler.mergeIds(reached, fresh, union = true), fresh) })
+      spark.createDataFrame(reach.flatMap { case (v, (reached, _)) =>
+        reached.iterator.map(a => (a, v)) }).toDF("__ca", "__cb")
+    }
+
+    val bound = (s, o) match {
+      case (T(t), _) => Some((t, false))
+      case (_, T(t)) => Some((t, true))
+      case _ => None
+    }
+    val pairs: DataFrame = bound match {
+      case Some((t, reverse)) =>
+        val seed = store.idOf(t).getOrElse(Long.MinValue)
+        val walk = if (broadcastSmall) localBfs(seed, reverse) else loop(Some(seed), reverse)
+        if (reverse) walk.select(col("__cb").as("__ca"), col("__ca").as("__cb")) else walk
+      case None => loop(None, reverse = false)
     }
 
     val withZero: DataFrame =
@@ -2402,6 +2347,20 @@ final class Compiler(val store: RdfStore, val ctx: ExprEval.Ctx,
 }
 
 object Compiler {
+  /** a ∪ b (`union`) or a ∖ b of two sorted, distinct id arrays. */
+  private def mergeIds(a: Array[Long], b: Array[Long], union: Boolean): Array[Long] = {
+    if (b.isEmpty || a.isEmpty && !union) return a
+    if (a.isEmpty) return b
+    val out = Array.newBuilder[Long]
+    var (i, j) = (0, 0)
+    while (i < a.length || j < b.length) {
+      if (j == b.length || (i < a.length && a(i) < b(j))) { out += a(i); i += 1 }
+      else if (i == a.length || b(j) < a(i)) { if (union) out += b(j); j += 1 }
+      else { if (union) out += a(i); i += 1; j += 1 }
+    }
+    out.result()
+  }
+
   /** Max exact-cardinality bound for which REDUCED takes the no-Exchange
     * local-dedup + single-task-merge plan; larger/unknown inputs use
     * dropDuplicates (map-side partial dedup, Exchange of shrunk sets). */

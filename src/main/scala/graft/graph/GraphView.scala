@@ -1,21 +1,16 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, functions => F}
 import graft.model.{Iri, Term}
+import graft.pipeline.Dedup
 import graft.store.RdfStore
 
-/** Graph-navigation API over a quad store.
-  *
-  * Two layers, mirroring the reference's `GraphProtocol`/`GraphVertexProtocol`/
-  * `GraphAPI` (kasei/kineo `Sources/Kineo/QuadStore/Graph.swift:11-80`):
-  *
-  *  - DataFrame traversal helpers (neighbors, incoming/outgoing edges, rdf:List
-  *    walking) — id-space, lazy, composable with the query engine.
-  *  - A GraphX view (`Graph[VertexId=termId, edgeAttr=predicateId]`) for bulk
-  *    analytics (PageRank, connected components, …) — the "bulk graph analytics
-  *    fit GraphX" half of the design stance.
+/** Graph-navigation API over a quad store, after the reference's
+  * `GraphProtocol`/`GraphVertexProtocol`/`GraphAPI` (kasei/kineo
+  * `Sources/Kineo/QuadStore/Graph.swift:11-80`): id-space, lazy DataFrame
+  * traversal helpers (neighbors, incoming/outgoing edges, rdf:List walking)
+  * that compose with the query engine, and connected components of the
+  * entity graph through the pipeline's [[Dedup.clustersOf]].
   */
 final class GraphView(store: RdfStore) {
 
@@ -95,25 +90,11 @@ final class GraphView(store: RdfStore) {
       .collect().map(_.getLong(0)).toSeq
   }
 
-  /** GraphX view of the entity graph: vertices = term ids, edges = predicate ids. */
-  def graphx: Graph[Long, Long] = {
-    val edges: RDD[Edge[Long]] = entityEdges
-      .select("s", "o", "p").rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), r.getLong(2)))
-    Graph.fromEdges(edges, defaultValue = 0L)
-  }
-
-  /** PageRank over the entity graph → (termId, rank). */
-  def pageRank(tol: Double = 0.001): DataFrame = {
-    val spark = store.spark
-    import spark.implicits._
-    graphx.pageRank(tol).vertices.toDF("id", "rank")
-  }
-
-  /** Connected components over the entity graph → (termId, componentId). */
-  def connectedComponents(): DataFrame = {
-    val spark = store.spark
-    import spark.implicits._
-    graphx.connectedComponents().vertices.toDF("id", "component")
-  }
+  /** Connected components of the entity graph → (id, component): every
+    * endpoint of an entity edge, labelled with its component's min term id
+    * ([[Dedup.clustersOf]]: a driver union-find up to 500k edges, the
+    * superstep loop above). */
+  def connectedComponents(): DataFrame =
+    Dedup.clustersOf(entityEdges.select(F.col("s").as("a"), F.col("o").as("b")))
+      .toDF("id", "component")
 }

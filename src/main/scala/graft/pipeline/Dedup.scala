@@ -30,9 +30,9 @@ object Dedup {
     minhashLsh(spark, dir, threshold = threshold)
 
   /** End-to-end near-dup deduplication: candidate pairs → transitive clusters
-    * (GraphX connected components over the pair graph) → one representative
-    * (min doc_id) per cluster. Output: (doc_id, keep) for every clustered doc —
-    * the drop set is `doc_id != keep`. Pairs from any detector (minhashLsh by
+    * ([[clustersOf]] over the pair graph) → one representative (min doc_id)
+    * per cluster. Output: (doc_id, keep) for every clustered doc — the drop
+    * set is `doc_id != keep`. Pairs from any detector (minhashLsh by
     * default); components run on the pair graph only (≪ corpus), so the
     * expensive step stays the bucketed candidate generation.
     */
@@ -40,28 +40,26 @@ object Dedup {
       threshold: Double = 0.5): DataFrame =
     clustersOf(nearDuplicates(spark, dir, threshold))
 
-  /** Connected-component clustering of an (a, b, …) pair frame.
+  /** Connected-component clustering of an (a, b, …) pair frame: (doc_id,
+    * keep) for every vertex of the pair graph, `keep` the component's min
+    * member id.
     *
-    * Partitioning adapts to the PAIR GRAPH's size, not the corpus's: near-dup
-    * pair graphs are output-sized (≪ corpus), and Pregel pays per-partition
-    * scheduling on every iteration — a 345-edge graph spread over 32
-    * partitions runs rounds of mostly-empty tasks. One edge count (this runs
-    * at query time, not compile time) sizes the graph at ~500k edges per
-    * partition, capped at the session's parallelism for genuinely large
-    * graphs. `gateEdges` parameterizes the union-find/GraphX switch so the
-    * property suite can force BOTH paths over one input (they must agree). */
+    * One edge count (this runs at query time, not compile time) picks the
+    * path by the PAIR GRAPH's size, not the corpus's. Near-dup pair graphs
+    * are output-sized (≪ corpus): up to `gateEdges` edges (≈ 8 MB at 500k)
+    * one bounded collect feeds a driver union-find, which beats any
+    * distributed loop whose per-superstep scheduling dwarfs the work. Above
+    * the gate, min-label propagation runs on the superstep loop until no
+    * label changes, over a graph sized at ~500k edges per partition and
+    * capped at the session's parallelism. `gateEdges` lets the property
+    * suite force BOTH paths over one input (they must agree). */
   def clustersOf(pairs: DataFrame, gateEdges: Long = 500000L): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
     val spark = pairs.sparkSession
     import spark.implicits._
     val p = ScratchCache.persist(
       pairs.select(col("a").cast(LongType), col("b").cast(LongType)))
     val nEdges = p.count()
     if (nEdges <= gateEdges) {
-      // SMALL pair graph (the overwhelmingly common case — near-dup graphs
-      // are output-sized): one bounded collect + driver union-find replaces
-      // a Pregel run whose per-iteration scheduling dwarfs the work. ≤500k
-      // edges ≈ 8 MB on the driver; bigger graphs take the distributed path.
       val edges = p.collect().map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
@@ -76,7 +74,7 @@ object Dedup {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       val verts = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-      // component label = min member id, matching the GraphX/oracle convention
+      // component label = min member id, matching the loop/oracle convention
       val label = verts.iterator.map(v => v -> find(v)).toMap
       val minOf = label.groupMapReduce(_._2)(_._1)(math.min)
       verts.iterator.map(v => (v, minOf(label(v)))).toSeq
@@ -84,12 +82,18 @@ object Dedup {
     } else {
       val parts = math.min(spark.sparkContext.defaultParallelism.toLong,
         nEdges / 500000L + 1L).toInt
-      val edgeRdd = p.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-        .coalesce(parts)
-      val g = Graph.fromEdges(edgeRdd, defaultValue = 0)
-      val comps = g.connectedComponents().vertices.toDF("doc_id", "component")
-      val reps = comps.groupBy("component").agg(min("doc_id").as("keep"))
-      comps.join(reps, "component").select(col("doc_id"), col("keep"))
+      val adj = graft.graph.Supersteps.adjacency(
+        p.rdd.map(r => (r.getLong(0), r.getLong(1))), parts, undirected = true)
+      // state (label, changed). A message is (own, heard): a vertex sends
+      // itself its label and, when it changed, its neighbours
+      val none = Long.MaxValue
+      val labels = graft.graph.Supersteps.run[Long, (Long, Boolean), (Long, Long)](adj,
+          active = Some(_._2))(v => (v, true),
+        { case (v, (l, changed), out) => Iterator(v -> (l, none)) ++
+          (if (changed) out.iterator.map(_ -> (none, l)) else Iterator.empty) },
+        { case ((o1, h1), (o2, h2)) => (math.min(o1, o2), math.min(h1, h2)) },
+        (_, m) => { val (own, heard) = m.get; if (heard < own) (heard, true) else (own, false) })
+      labels.map { case (v, (l, _)) => (v, l) }.toDF("doc_id", "keep")
     }
   }
 
@@ -99,7 +103,7 @@ object Dedup {
       .groupBy(md5(col("text")).as("h"))
       .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keep"))
 
-  /** Full doc→representative mapping via the GraphX connected-components path:
+  /** Full doc→representative mapping via the [[clustersOf]] components path:
     * exact-duplicate groups become STAR edges (each doc → its group's min id,
     * linear in group size — a within-group self-join would be quadratic on a
     * degenerate hot text), components run over that pair graph, singletons
@@ -406,8 +410,8 @@ object Dedup {
       d.filter(col("doc_id") % 20 === 0), n, threshold)
   }
 
-  /** Transitive clusters over the SimHash near-dup pair graph (GraphX
-    * connected components). Both the pairs AND the components are
+  /** Transitive clusters over the SimHash near-dup pair graph
+    * ([[clustersOf]] connected components). Both the pairs AND the components are
     * oracle-checkable — the DuckDB replica closes the same graph with a
     * recursive CTE — so the clustering operator itself is value-verified,
     * not just mechanism-tested. */
@@ -474,16 +478,18 @@ object Dedup {
     val gramArrs = d.select(col("doc_id"), expr(
         s"sort_array(array_distinct(transform(sequence(0, greatest(length(text) - $n, 0)), " +
         s"i -> xxhash64(substring(text, i + 1, $n)))))").as("hs"))
-    // staggered double-bucketing: every doc lands in floor(len/64) and
-    // floor((len+32)/64)+M, so near-dups straddling a bucket boundary still share
-    // a block; (a,b,h) is deduped before counting so the ratio stays exact.
+    // staggered double-bucketing: every doc lands in primary bucket
+    // floor(len/64) and staggered bucket floor((len+32)/64), so near-dups
+    // straddling a bucket boundary still share a block; (a,b,h) is deduped
+    // before counting so the ratio stays exact.
     // Guard the quadratic join: drop blocks over the membership cap — BOTH the
     // anti-join and the membership join run on the doc-level frame (one row
     // per doc per bucket, ~1000× smaller than the gram frame; AQE broadcasts
     // it when small). The broadcast side is the OVERSIZED list, whose size is
     // bounded by corpus/maxBlockDocs (the keep-list grows with #sources ×
     // #length-buckets, unbounded).
-    val oversized = ngramOversizedBlocks(d, maxBlockDocs).select("source", "lenb")
+    val oversized = ngramOversizedBlocks(d, maxBlockDocs)
+      .select("source", "lenb", "is_primary")
     // pb_ok: did this doc's PRIMARY block survive the oversized cap? The
     // emit-once guard below suppresses the staggered-block copy of a pair
     // whenever the two primaries match — which silently LOST the pair when
@@ -493,10 +499,10 @@ object Dedup {
     // the flag re-arms the staggered emit exactly in that regime; one extra
     // broadcast left join on the narrow membership frame, build side bounded
     // by corpus/maxBlockDocs like the anti join's.
-    val ovPrim = oversized.filter(col("lenb") < 1000000)
-      .withColumnRenamed("lenb", "pb").withColumn("__pb_dropped", lit(true))
+    val ovPrim = oversized.filter(col("is_primary"))
+      .select(col("source"), col("lenb").as("pb"), lit(true).as("__pb_dropped"))
     val okMemb = blockMembership(d)
-      .join(broadcast(oversized), Seq("source", "lenb"), "left_anti")
+      .join(broadcast(oversized), Seq("source", "lenb", "is_primary"), "left_anti")
       .join(broadcast(ovPrim), Seq("source", "pb"), "left")
       .withColumn("pb_ok", col("__pb_dropped").isNull)
       .drop("__pb_dropped")
@@ -523,9 +529,9 @@ object Dedup {
     // x.pb_ok === y.pb_ok — checking x suffices); else the staggered block
     val inter = blocked.alias("x").join(blocked.alias("y"),
         col("x.source") === col("y.source") && col("x.lenb") === col("y.lenb") &&
+          col("x.is_primary") === col("y.is_primary") &&
           col("x.doc_id") < col("y.doc_id") &&
-          (col("x.lenb") < 1000000 || col("x.pb") =!= col("y.pb") ||
-            !col("x.pb_ok")))
+          (col("x.is_primary") || col("x.pb") =!= col("y.pb") || !col("x.pb_ok")))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
         graft.functions.SortedIntersectSize(col("x.hs"), col("y.hs")).as("inter"),
         size(col("x.hs")).cast(LongType).as("sa"),
@@ -533,25 +539,30 @@ object Dedup {
     inter
   }
 
-  /** Doc-level (source, lenb, doc_id) block membership — the staggered
-    * double-bucketing used by BOTH [[ngramJaccardOf]]'s guard and
+  /** Doc-level (doc_id, source, pb, lenb, is_primary) block membership — the
+    * staggered double-bucketing used by BOTH [[ngramJaccardOf]]'s guard and
     * [[ngramOversizedBlocks]] (single definition so the routing output always
-    * matches which blocks the guarded join excludes). One row per doc per
-    * bucket: two buckets per doc, so 2·|docs| rows regardless of text size. */
-  private def blockMembership(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), col("source"),
-        (col("n_chars") / 64).cast(IntegerType).as("pb"),
-        explode(array((col("n_chars") / 64).cast(IntegerType),
-          ((col("n_chars") + 32) / 64).cast(IntegerType) + 1000000)).as("lenb"))
+    * matches which blocks the guarded join excludes). A block is (source,
+    * lenb, is_primary), so a primary and a staggered bucket never merge.
+    * Two rows per doc, each carrying the doc's primary bucket `pb`. */
+  private def blockMembership(d: DataFrame): DataFrame = {
+    val pb = (col("n_chars") / 64).cast(IntegerType)
+    d.select(col("doc_id"), col("source"), pb.as("pb"),
+        explode(array(
+          struct(pb.as("lenb"), lit(true).as("is_primary")),
+          struct(((col("n_chars") + 32) / 64).cast(IntegerType).as("lenb"),
+            lit(false).as("is_primary")))).as("blk"))
+      .select(col("doc_id"), col("source"), col("pb"), col("blk.lenb"), col("blk.is_primary"))
       .distinct()
+  }
 
   /** The routing/monitoring companion of [[ngramJaccardOf]]: the
-    * (source, lenb, bn) blocks whose membership exceeds the pairwise cap —
-    * exactly the blocks the guarded join excludes. Feed these docs to
-    * [[minhashLsh]] (bucketed, sub-quadratic) instead. */
+    * (source, lenb, is_primary, bn) blocks whose membership exceeds the
+    * pairwise cap — exactly the blocks the guarded join excludes. Feed these
+    * docs to [[minhashLsh]] (bucketed, sub-quadratic) instead. */
   def ngramOversizedBlocks(d: DataFrame, maxBlockDocs: Int = 4096): DataFrame =
     blockMembership(d)
-      .groupBy("source", "lenb").agg(count(lit(1)).as("bn"))
+      .groupBy("source", "lenb", "is_primary").agg(count(lit(1)).as("bn"))
       .filter(col("bn") > maxBlockDocs)
 
   /** Cross-split leakage audit: the content-hash split

@@ -1,10 +1,9 @@
 package graft.pipeline
 
-import scala.reflect.ClassTag
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.graph.Supersteps
 
 /** Link-graph centrality for corpus curation: web-scale training pipelines
   * weight documents by the link rank of their source (Common Crawl publishes
@@ -20,17 +19,11 @@ import org.apache.spark.sql.functions._
   * bit-identical ranks (same scheme as the IVF/PQ integer Lloyd training).
   * Float PageRank would differ in the last ulp by partition-summation order.
   *
-  * Scale shape: [[pagerank]] and [[labelProp]] share one vertex-centric
-  * superstep loop, the co-partitioned plan of Pregelix (VLDB 2014). One
-  * record per vertex holds its out-neighbours, hash-partitioned once on the
-  * vertex and scratch-persisted. A superstep (1) zips the vertex state with
-  * it and emits messages, (2) combines them per target vertex in ONE
-  * map-side-combined shuffle on the same partitioner, and (3) zips the result
-  * back onto the vertices to apply the update: no edge reshuffle, nothing
-  * driver-side. The loop is RDD code, so no iteration is re-analyzed and AQE
-  * starts no job per stage: a run is one Spark job of iters + 2 stages, and
-  * becomes a DataFrame once, at the end. Dangling nodes (regions) simply
-  * leak rank, stated and replicated in the oracle.
+  * Scale shape: [[pagerank]] and [[labelProp]] run on the engine's one
+  * superstep loop, [[graft.graph.Supersteps]] (the co-partitioned plan of
+  * Pregelix, VLDB 2014): a fixed-round run is one Spark job of iters + 2
+  * stages and becomes a DataFrame once, at the end. Dangling nodes
+  * (regions) simply leak rank, stated and replicated in the oracle.
   */
 object GraphRank {
 
@@ -46,47 +39,19 @@ object GraphRank {
       .unionByName(e(t("nation"), "n", "n_nationkey", "r", "n_regionkey"))
   }
 
-  /** One record per vertex of the (src, dst) edge list `es` with its
-    * out-neighbours, hash-partitioned on the vertex with the session's
-    * shuffle-partition count and scratch-persisted. Directed, the neighbours
-    * are a multiset (a repeated edge sends twice); `undirected`, each edge
-    * links both ways and a neighbour appears once. */
+  /** The loop's adjacency of the (src, dst) edge list `es`, with the
+    * session's shuffle-partition count. */
   private def adjacency(spark: SparkSession, es: DataFrame,
-      undirected: Boolean): RDD[(String, Array[String])] = {
-    val arcs = es.rdd.flatMap { r =>
-      val (s, d) = (r.getString(0), r.getString(1))
-      Iterator(s -> Some(d), d -> (if (undirected) Some(s) else None))
-    }
-    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
-    ScratchCache.persist(arcs.groupByKey(part).mapValues { ns =>
-      if (undirected) ns.flatten.toArray.distinct else ns.flatten.toArray })
-  }
-
-  /** `iters` synchronous supersteps over `adj` from `init(v)`: `send` along
-    * the out-neighbours, `merge` per target on `adj`'s partitioner, and
-    * `update` each vertex from what it heard (`None`: nothing). */
-  private def supersteps[S, M: ClassTag](adj: RDD[(String, Array[String])], iters: Int)(
-      init: String => S, send: (S, Array[String]) => Iterator[(String, M)],
-      merge: (M, M) => M, update: (String, Option[M]) => S): RDD[(String, S)] = {
-    var state = adj.map { case (v, _) => (v, init(v)) }
-    for (_ <- 0 until iters) {
-      val in = state.zipPartitions(adj) { (ss, as) =>
-        ss.zip(as).flatMap { case ((_, s), (_, out)) => send(s, out) }
-      }.reduceByKey(adj.partitioner.get, merge)
-      state = adj.zipPartitions(in, preservesPartitioning = true) { (as, ms) =>
-        val m = ms.toMap
-        as.map { case (v, _) => (v, update(v, m.get(v))) }
-      }
-    }
-    state
-  }
+      undirected: Boolean): RDD[(String, Array[String])] =
+    Supersteps.adjacency(es.rdd.map(r => (r.getString(0), r.getString(1))),
+      spark.sessionState.conf.numShufflePartitions, undirected)
 
   /** Integer fixed-point PageRank; output (node, pr) with pr in micro-units
     * (initial rank 1,000,000 per node, damping 0.85). */
   def pagerank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     val adj = adjacency(spark, edges(spark, dir), undirected = false)
-    val ranks = supersteps[Long, Long](adj, iters)(_ => 1000000L,
-      (r, out) => out.iterator.map(_ -> r / out.length), _ + _,
+    val ranks = Supersteps.run[String, Long, Long](adj, iters)(_ => 1000000L,
+      (_, r, out) => out.iterator.map(_ -> r / out.length), _ + _,
       (_, s) => 150000L + 85L * s.getOrElse(0L) / 100)
     spark.createDataFrame(ranks).toDF("node", "pr")
   }
@@ -106,8 +71,8 @@ object GraphRank {
     * in the map-side message combine, and the update takes the argmax. */
   def labelProp(spark: SparkSession, dir: String, iters: Int = 3): DataFrame = {
     val adj = adjacency(spark, edges(spark, dir), undirected = true)
-    val labels = supersteps[String, Map[String, Int]](adj, iters)(v => v,
-      (lab, out) => out.iterator.map(_ -> Map(lab -> 1)),
+    val labels = Supersteps.run[String, String, Map[String, Int]](adj, iters)(v => v,
+      (_, lab, out) => out.iterator.map(_ -> Map(lab -> 1)),
       (a, b) => b.foldLeft(a) { case (m, (l, c)) => m.updated(l, m.getOrElse(l, 0) + c) },
       (v, votes) => votes.fold(v)(_.minBy { case (l, c) => (-c, l) }._1))
     spark.createDataFrame(labels).toDF("node", "community")
@@ -230,8 +195,8 @@ object GraphRank {
     * operator (component label = min member id, + component size): the
     * corpus-partitioning primitive under the dedup cluster family, exposed
     * directly. Reuses [[Dedup.clustersOf]] — bounded driver union-find for
-    * output-sized pair graphs (≤500k edges), distributed GraphX
-    * connectedComponents above that. Size is one component-keyed count.
+    * output-sized pair graphs (≤500k edges), min-label propagation on the
+    * superstep loop above that. Size is one component-keyed count.
     * Parts that never co-occur with another part (orders holding a single
     * distinct part) are unioned in as size-1 components — the operator
     * partitions the WHOLE sliced part universe, not just the edge-touched

@@ -221,19 +221,17 @@ object Battery {
     "unnest(list_transform(range(0, greatest(length(text) - 3, 0) + 1), " +
     "i -> substring(text, CAST(i + 1 AS INT), 3))) AS gr FROM documents)), " +
     "sizes AS (SELECT doc_id, count(*) AS sz FROM g GROUP BY 1), " +
-    "memb AS (SELECT DISTINCT doc_id, source, u.lenb FROM documents, " +
-    "unnest([CAST(floor(n_chars / 64.0) AS INT), " +
-    "CAST(floor((n_chars + 32) / 64.0) AS INT) + 1000000]) u(lenb)), " +
-    "over AS (SELECT source, lenb FROM memb GROUP BY 1, 2 HAVING count(*) > 4096), " +
-    "blocked AS (SELECT doc_id, b0.source, gr, b0.lenb FROM " +
-    "(SELECT doc_id, source, gr, u.lenb FROM g, " +
-    "unnest([CAST(floor(n_chars / 64.0) AS INT), " +
-    "CAST(floor((n_chars + 32) / 64.0) AS INT) + 1000000]) u(lenb)) b0 " +
-    "LEFT JOIN over o ON o.source = b0.source AND o.lenb = b0.lenb " +
+    "bk AS (SELECT doc_id, CAST(floor(n_chars / 64.0) AS INT) AS lenb, true AS prim " +
+    "FROM documents UNION ALL SELECT doc_id, CAST(floor((n_chars + 32) / 64.0) AS INT), " +
+    "false FROM documents), " +
+    "memb AS (SELECT DISTINCT doc_id, source, lenb, prim FROM documents JOIN bk USING (doc_id)), " +
+    "over AS (SELECT source, lenb, prim FROM memb GROUP BY 1, 2, 3 HAVING count(*) > 4096), " +
+    "blocked AS (SELECT g.doc_id, g.source, gr, bk.lenb, bk.prim FROM g JOIN bk USING (doc_id) " +
+    "LEFT JOIN over o ON o.source = g.source AND o.lenb = bk.lenb AND o.prim = bk.prim " +
     "WHERE o.source IS NULL), " +
     "pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b, x.gr " +
-    "FROM blocked x JOIN blocked y ON x.source = y.source " +
-    "AND x.lenb = y.lenb AND x.gr = y.gr AND x.doc_id < y.doc_id), " +
+    "FROM blocked x JOIN blocked y ON x.source = y.source AND x.lenb = y.lenb " +
+    "AND x.prim = y.prim AND x.gr = y.gr AND x.doc_id < y.doc_id), " +
     "i AS (SELECT a, b, count(*) AS inter FROM pairs GROUP BY 1, 2) "
 
   /** The customer star of q_bgp_star, q_bgp_star_bucketed and q_bgp_star_mem. */
@@ -1190,16 +1188,16 @@ object Battery {
         "FROM bd x JOIN bd y ON x.b = y.b AND x.bh = y.bh AND x.doc_id < y.doc_id) " +
         "SELECT a, b2 AS b, hamming FROM p WHERE hamming <= 10")),
 
-    ("dd_exact_clusters", // full doc→representative map via GraphX components
-      // over star edges (linear in group size); window-min oracle. The corpus
+    ("dd_exact_clusters", // full doc→representative map via Dedup.clustersOf
+      // components over star edges (linear in group size); window-min oracle. The corpus
       // has no exact duplicates, so this also pins the singleton/empty-graph
       // edge of the clustering path.
       (s: SparkSession, d: String) => graft.pipeline.Dedup.exactClusters(s, d),
       Some("SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS keep " +
         "FROM documents")),
 
-    ("dd_simhash_clusters", // transitive near-dup clusters: GraphX connected
-      // components over the simhash pair graph, value-checked against a
+    ("dd_simhash_clusters", // transitive near-dup clusters: Dedup.clustersOf
+      // connected components over the simhash pair graph, value-checked against a
       // recursive-CTE closure of the same graph in DuckDB
       (s: SparkSession, d: String) => graft.pipeline.Dedup.simhashClusters(s, d),
       Some("WITH RECURSIVE t AS (SELECT doc_id, " +

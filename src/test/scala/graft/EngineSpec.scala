@@ -209,33 +209,59 @@ class EngineSpec extends AnyFunSuite {
     assert(nms == Set("alice"))
   }
 
-  test("property path: deep closure escalates to doubled steps (chain of 12)") {
+  test("property path: closure of a 12-chain and a 3-cycle") {
     val ex = "http://example.org/"
-    // a 12-link chain forces >4 fixpoint iterations, crossing the adaptive
-    // double-stepping escalation; the closure must stay exact across the
-    // switch — forwards and backwards
+    // the chain c0 → … → c12 over :next, the 3-cycle d0 → d1 → d2 → d0 over
+    // :ring, and one :name literal that a negated set must not step to
     val n = 12
-    val chain = (0 until n).map(i =>
-      (Iri(s"${ex}c$i"), Iri(ex + "next"), Iri(s"${ex}c${i + 1}"): Term, Iri(ex + "g")))
+    val quads: Seq[(Term, Term, Term)] =
+      (0 until n).map(i => (Iri(s"${ex}c$i"), Iri(ex + "next"), Iri(s"${ex}c${i + 1}"): Term)) ++
+      (0 until 3).map(i => (Iri(s"${ex}d$i"), Iri(ex + "ring"), Iri(s"${ex}d${(i + 1) % 3}"): Term)) :+
+      ((Iri(ex + "c3"), Iri(ex + "name"), Term.str("three")))
     val schema = StructType(Seq("s", "p", "o", "g").map(f =>
       StructField(f, TermRow.schema, nullable = true)))
-    val rows = chain.map { case (s, pp, o, gg) =>
-      Row(TermRow.toRow(s), TermRow.toRow(pp), TermRow.toRow(o), TermRow.toRow(gg)) }
+    val rows = quads.map { case (s, pp, o) =>
+      Row(TermRow.toRow(s), TermRow.toRow(pp), TermRow.toRow(o), TermRow.toRow(Iri(ex + "g"))) }
     val st = StoreEncoder.encode(
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema),
       IriScheme.default)
     val c = new Compiler(st, ExprEval.Ctx(nowEpochUs = 0L))
-    val fwd = Results.materialize(c,
-        c.compile(APath(N.iri(ex + "c0"), PPlus(PLink(ex + "next")), V("e"))))
-      .collect().map(_.getStruct(0).getString(1)).toSet
-    assert(fwd == (1 to n).map(i => s"${ex}c$i").toSet, s"forward: $fwd")
-    val bwd = Results.materialize(c,
-        c.compile(APath(V("b"), PPlus(PLink(ex + "next")), N.iri(s"${ex}c$n"))))
-      .collect().map(_.getStruct(0).getString(1)).toSet
-    assert(bwd == (0 until n).map(i => s"${ex}c$i").toSet, s"backward: $bwd")
+    def iris(a: Algebra): Set[String] = Results.materialize(c, c.compile(a)).collect()
+      .map(_.getStruct(0).getString(1)).toSet
+    val chain = (0 to n).map(i => s"${ex}c$i")
+    val next = PPlus(PLink(ex + "next"))
+    assert(iris(APath(N.iri(ex + "c0"), next, V("e"))) == chain.tail.toSet, "forward")
+    assert(iris(APath(V("b"), next, N.iri(s"${ex}c$n"))) == chain.init.toSet, "backward")
+    // a negated property set has a variable predicate, so its edge set has
+    // no statistics bound: the seeded closure runs on the superstep loop
+    val notName = PPlus(PNeg(Seq(ex + "name"), Nil))
+    assert(iris(APath(N.iri(ex + "c0"), notName, V("e"))) == chain.tail.toSet, "nps forward")
+    assert(iris(APath(V("b"), notName, N.iri(s"${ex}c$n"))) == chain.init.toSet, "nps backward")
+    // var-var: every ordered pair of the chain, C(13, 2) = 78
+    val varVar = APath(V("a"), next, V("b"))
+    val pairs = Results.materialize(c, c.compile(varVar)).collect()
+      .map(r => (r.getAs[Row]("a").getString(1), r.getAs[Row]("b").getString(1))).toSet
+    assert(pairs == (for (i <- 0 to n; j <- i + 1 to n) yield (chain(i), chain(j))).toSet)
+    assert(pairs.size == 78)
+    // compile + collect after a warm run: about log2(depth) quiescence
+    // checks, not jobs per closure level
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(c.compile(varVar).df.collect().length == 78)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get <= 8, s"${jobs.get} jobs")
     // same var on both ends: only cyclic nodes qualify — the chain has none
-    val cyc = c.compile(APath(V("x"), PPlus(PLink(ex + "next")), V("x")))
+    val cyc = c.compile(APath(V("x"), next, V("x")))
     assert(cyc.vars == Set("x") && cyc.df.count() == 0)
+    assert(iris(APath(V("x"), PPlus(PLink(ex + "ring")), V("x"))) ==
+      (0 until 3).map(i => s"${ex}d$i").toSet)
   }
 
   test("property path: plus/star with BOUND OBJECT walk backwards (regression)") {

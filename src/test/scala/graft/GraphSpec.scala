@@ -23,15 +23,22 @@ class GraphSpec extends AnyFunSuite {
     assert(custs >= 1) // at least customer 42 (suppliers share the predicate)
   }
 
-  test("graphx entity graph has fk edges and computes components") {
-    val g = gv.graphx
-    // fk quads: nation->region 25, customer->nation 150, supplier->nation 10,
+  test("entity graph components cover the fk edge endpoints") {
+    import org.apache.spark.sql.functions.{col, shiftright}
+    // object tag < 0x10 → IRI or blank node: the entity edges. fk quads:
+    // nation->region 25, customer->nation 150, supplier->nation 10,
     // orders->customer 1500, lineitem->{orders,part,supplier} 18000
-    assert(g.edges.count() == 25 + 150 + 10 + 1500 + 18000)
-    val cc = gv.connectedComponents()
-    assert(cc.count() > 0)
+    val ee = store.quads.filter(shiftright(col("o"), TermId.PAYLOAD_BITS).bitwiseAND(0xFF) < 0x10)
+    assert(ee.count() == 25 + 150 + 10 + 1500 + 18000)
+    val ends = ee.select(col("s")).union(ee.select(col("o"))).distinct()
+      .collect().map(_.getLong(0)).toSet
+    val cc = gv.connectedComponents().collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(cc.map(_._1).toSet == ends && cc.length == ends.size)
+    // each label is its component's min member, and labels itself
+    val byLabel = cc.groupMap(_._2)(_._1)
+    byLabel.foreach { case (l, ms) => assert(ms.min == l) }
     // everything reachable through the fk web collapses into few components
-    assert(cc.select("component").distinct().count() < 50)
+    assert(byLabel.size < 50)
   }
 
   test("rdf:List walk returns members in order via pointer doubling") {

@@ -164,6 +164,20 @@ class PipelineSpec extends AnyFunSuite {
     assert(unc.toSeq == Seq((1L, 2L)), unc.mkString(","))
   }
 
+  test("ngram jaccard: a primary bucket numbered 1,000,000 is still a primary block") {
+    import spark.implicits._
+    // two identical texts; n_chars 64000010 puts the primary bucket at
+    // 1,000,000, the number a staggered bucket once carried as an offset
+    val t = "identical short text"
+    for (nChars <- Seq(100L, 64000010L)) {
+      val d = Seq((1L, t, "en", "s", nChars), (2L, t, "en", "s", nChars))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+      val rows = Dedup.ngramJaccardOf(d, threshold = 0.5).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(rows.toSeq == Seq((1L, 2L, 1.0)), s"n_chars=$nChars: ${rows.mkString(",")}")
+    }
+  }
+
   test("lsh similarity recalls most of brute-force top-5") {
     val brute = Similarity.bruteTopK(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1076,7 +1090,7 @@ class PipelineSpec extends AnyFunSuite {
   // ---- property tests: the pipeline family's algebraic core ---------------
   // The dedup/curation ops are oracle-checked on one dataset; these pin the
   // invariants that need no oracle — split totality/determinism under
-  // repartition, LSH band-count monotonicity, and union-find == GraphX
+  // repartition, LSH band-count monotonicity, and union-find == superstep
   // components with both gate paths forced over the SAME inputs.
 
   test("property: hash split is total, disjoint, repartition-invariant, and content-keyed") {
@@ -1118,21 +1132,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(p16.nonEmpty, "vacuous: the planted dir must produce pairs")
   }
 
-  test("property: driver union-find == GraphX components, both gate paths over the same random graphs") {
+  test("property: driver union-find == superstep components, both gate paths") {
     import spark.implicits._
-    for (seed <- Seq(11L, 23L, 47L)) {
+    def norm(es: Seq[(Long, Long)]) =
+      es.filter(e => e._1 != e._2).map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
+    val randomGraphs = Seq(11L, 23L, 47L).map { seed =>
       val rnd = new scala.util.Random(seed)
       val n = 60 + rnd.nextInt(60)
-      val edges = Seq.fill(80 + rnd.nextInt(120))(
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(e => e._1 != e._2)
-        .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
+      s"seed=$seed" -> norm(Seq.fill(80 + rnd.nextInt(120))(
+        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)))
+    }
+    // a 40-vertex path with shuffled ids: the min label crosses up to 39
+    // edges, so the loop runs dozens of supersteps and several checks
+    val ids = new scala.util.Random(5L).shuffle((0L until 40L).toList)
+    val path = "path40" -> norm(ids.zip(ids.tail))
+    for ((name, edges) <- randomGraphs :+ path) {
       val df = edges.toDF("a", "b")
       def labels(gate: Long) = Dedup.clustersOf(df, gate).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val uf = labels(Long.MaxValue) // forces the driver union-find
-      val gx = labels(0L)            // forces GraphX connectedComponents
-      assert(uf == gx, s"gate paths disagree at seed=$seed")
+      val loop = labels(0L)          // forces the superstep loop
+      assert(uf == loop, s"gate paths disagree on $name")
       // brute-force closure: label = min reachable node
       val adj = (edges ++ edges.map(_.swap))
         .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
@@ -1141,9 +1161,9 @@ class PipelineSpec extends AnyFunSuite {
         while (f.nonEmpty) { val nx = f.flatMap(adj(_)) -- seen; seen ++= nx; f = nx }
         seen
       }
-      assert(uf.keySet == adj.keySet, s"vertex set at seed=$seed")
+      assert(uf.keySet == adj.keySet, s"vertex set of $name")
       adj.keySet.foreach(v =>
-        assert(uf(v) == reach(v).min, s"label($v) at seed=$seed"))
+        assert(uf(v) == reach(v).min, s"label($v) of $name"))
     }
   }
 
