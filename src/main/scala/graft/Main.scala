@@ -157,6 +157,7 @@ object Main {
     val structQuads: DataFrame =
       if (file.endsWith(".ttl")) {
         import org.apache.spark.sql.types._
+        import scala.jdk.CollectionConverters._
         val doc = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(file)), "UTF-8")
         val rows = RdfIO.parseTurtle(doc).map { case (s, p, o) =>
@@ -164,8 +165,8 @@ object Main {
             TermRow.toRow(o), TermRow.toRow(g)) }
         val schema = StructType(Seq("s", "p", "o", "g").map(n =>
           StructField(n, TermRow.schema, nullable = true)))
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toSeq, math.max(1, rows.size / 10000)), schema)
+        // a local relation: the encoder's batch collect starts no job
+        spark.createDataFrame(rows.asJava, schema)
       } else RdfIO.readNTriples(spark, file, defaultGraph = g.value)
     StoreEncoder.appendBatch(store, structQuads)
   }

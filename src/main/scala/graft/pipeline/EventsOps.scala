@@ -61,15 +61,17 @@ object EventsOps {
 
   /** Weekly cohort retention: users are cohorted by their first active
     * week; for each (cohort week, week offset) count the distinct users
-    * still active. Two narrow user-keyed aggregations plus one
-    * (cohort, offset)-keyed count — the textbook retention matrix, all
-    * integer arithmetic (epoch-week buckets), no timezone sensitivity. */
+    * still active. The distinct (user, week) rows, the first week as a
+    * `min` over a user-keyed window (no self-join, so no join strategy for
+    * adaptive execution to change mid-query), then one (cohort,
+    * offset)-keyed count — the textbook retention matrix, all integer
+    * arithmetic (epoch-week buckets), no timezone sensitivity. */
   def retention(spark: SparkSession, dir: String): DataFrame = {
     val wk = events(spark, dir).select(col("user_id"),
         floor(unix_timestamp(col("ts")) / 604800L).as("w"))
       .distinct()
-    val first = wk.groupBy("user_id").agg(min("w").as("w0"))
-    wk.join(first, "user_id")
+    wk.withColumn("w0", min("w").over(
+        org.apache.spark.sql.expressions.Window.partitionBy("user_id")))
       .groupBy(col("w0").as("cohort"), (col("w") - col("w0")).as("off"))
       .agg(countDistinct("user_id").as("n_users"))
   }

@@ -1,7 +1,11 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import graft.model._
 
 /** A dictionary-encoded RDF quad store backed by two DataFrames.
@@ -44,9 +48,13 @@ final case class RdfStore(
       * partitioned by their exact predicate set, with the subject count and
       * per-predicate quad totals of each set. Answers star-shaped COUNT
       * queries statically — exactly, never as an estimate (the compiler
-      * refuses shapes the stats can't prove). Loaded from a persisted
-      * manifest (the ANALYZE-once contract) or set by [[analyze]]; None =
-      * not computed (StorePersist.save computes them). */
+      * refuses shapes the stats can't prove). Computed once, when
+      * StorePersist.save meets a store without them (`create`, or a base
+      * that had none), or by [[analyze]]; loaded from a persisted manifest;
+      * and kept by a driver-encoded [[StoreEncoder.append]], which moves each
+      * changed subject from its old set to its new one. None = not computed:
+      * an in-memory [[StoreEncoder.encode]] and a distributed append leave
+      * them to StorePersist.save. */
     charSetStats: Option[Seq[CharSetStat]] = None,
     /** true when a persisted manifest recorded `"charSets":null` — the
       * ANALYZE ran at save time and found the store exceeds the set cap, so
@@ -72,8 +80,10 @@ final case class RdfStore(
     * answer statically. The compiler only consults [[charSetStats]] and
     * never computes them, because query COMPILE must not launch a Spark job
     * as a side effect; this is the user-facing way to opt an un-persisted
-    * store in (persisted stores get it automatically at StorePersist.save).
-    * An over-cap result marks the stat disabled so re-saves skip the pass. */
+    * store in (persisted stores get it at StorePersist.save and keep it
+    * across driver-encoded loads) and to re-derive it from scratch (the CLI
+    * `analyze` verb). An over-cap result marks the stat disabled so re-saves
+    * skip the pass. */
   def analyze(): RdfStore = {
     val computed = RdfStore.computeCharSets(quads)
     copy(charSetStats = computed, charSetsDisabled = computed.isEmpty)
@@ -155,6 +165,18 @@ object RdfStore {
     * (~60 B/term → 500k ≈ 30 MB). */
   val BroadcastTerms = 500000L
 
+  /** Batches of up to this many quads are encoded on the driver
+    * ([[StoreEncoder.appendBatch]]); larger ones take the distributed plan.
+    * Sized to the driver memory of a broadcast [[BroadcastTerms]]
+    * dictionary: a collected N-Triples quad (four term structs) measured
+    * 652 B of driver heap after GC (100k quads of five predicates, IRIs,
+    * integers, decimals and strings, JDK 17), so 50k quads hold about 33 MB;
+    * a whole driver encode of 100k quads peaked at about 1.8 kB per quad. */
+  val DriverBatchQuads = 50000
+
+  /** More distinct characteristic sets than this disable the statistic. */
+  val MaxCharSets = 4096
+
   private def isDict(c: org.apache.spark.sql.Column) =
     shiftright(c, PAYLOAD_BITS).bitwiseAND(0xFF).isin(dictTags.map(Integer.valueOf): _*)
 
@@ -210,7 +232,7 @@ object RdfStore {
     * stops at `maxSets + 1` sets, so such a corpus is never collected. Sets are sorted by predicate ids, so equal
     * stores give equal results. */
   def computeCharSets(quads: DataFrame,
-      maxSets: Int = 4096): Option[Seq[CharSetStat]] = {
+      maxSets: Int = MaxCharSets): Option[Seq[CharSetStat]] = {
     type Acc = scala.collection.mutable.HashMap[Seq[Long], (Long, Array[Long])]
     def add(m: Acc, preds: Seq[Long], n: Long, occ: Array[Long]): Unit =
       m.get(preds) match {
@@ -256,7 +278,9 @@ object StoreEncoder {
   private def termStruct: org.apache.spark.sql.Column =
     struct(col("kind"), col("lex"), col("dt"), col("lang"), col("num"))
 
-  /** A store with no quads and no terms, its statistics known — no job. */
+  /** A store with no quads and no terms, its statistics known — no job. Its
+    * characteristic sets are known too (none), so a driver-encoded append
+    * onto it keeps them and `create` saves them without a pass. */
   def empty(spark: SparkSession, scheme: IriScheme): RdfStore = {
     def none(schema: org.apache.spark.sql.types.StructType) =
       spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -267,41 +291,275 @@ object StoreEncoder {
   }
 
   /** Encode a DataFrame of struct-space quads (columns s,p,o,g of [[TermRow.schema]])
-    * into an [[RdfStore]]: an [[append]] onto the [[empty]] store. */
+    * into an in-memory [[RdfStore]]: an [[append]] onto the [[empty]] store,
+    * without characteristic sets (only [[RdfStore.analyze]] or a save adds
+    * them to a store built in memory). */
   def encode(structQuads: DataFrame, scheme: IriScheme): RdfStore =
     append(empty(structQuads.sparkSession, scheme), structQuads)
+      .copy(charSetStats = None, charSetsDisabled = false)
 
   /** Bulk append (the reference's only mutation: `MutableQuadStoreProtocol
     * .load(version:quads:)`, QuadStore.swift:141-144,170-258), batch-sized:
+    * RDF graphs are sets, so the batch is deduped within itself and against
+    * the store (ids preserve term identity incl. lexical form, so id-tuple
+    * dedup IS term dedup). See [[appendBatch]] for the two plans. The
+    * returned store reads `store`'s frames, the cached batch quads and the
+    * batch's fresh terms.
+    */
+  def append(store: RdfStore, structQuads: DataFrame): RdfStore = {
+    val (appended, batch) = appendBatch(store, structQuads)
+    // a store kept in memory reads its batch from the cache, not from rows
+    // shipped by the driver with every query
+    if (batch.storageLevel == StorageLevel.NONE) batch.persist(StorageLevel.MEMORY_AND_DISK)
+    appended
+  }
+
+  /** [[append]] for a caller that saves the store at once, also returning
+    * the batch's new quads. The distributed plan caches them, and a caller
+    * that saves the store and then drops it unpersists them; the driver plan
+    * leaves them uncached, since the save reads them once.
     *
+    * One bounded collect of `driverQuads + 1` quads (a small file is one
+    * split, so one job) picks the plan from the batch's size, as
+    * `Dedup.clustersOf` does from its edge count. `driverQuads` lets the
+    * tests force both plans over one input (they must give equal stores).
+    *
+    * '''Up to `driverQuads` quads''' ([[RdfStore.DriverBatchQuads]]): the
+    * batch is encoded on the driver with two more jobs.
+    *  1. The dictionary probe: the dictionary rows whose `lex` is one of the
+    *     batch terms', matched to full terms on the driver. Terms the store
+    *     lacks get fresh ids past the dictionary's max payload, in sorted
+    *     term order. The dictionary is never shuffled.
+    *  1. The store probe ([[probeStore]]): one job over the store's quads
+    *     restricted to the batch's subjects and (p, o) pairs, returning only
+    *     batch-bounded partials.
+    * The fresh terms become a local relation, and the new quads the same
+    * rows as a local relation (for the statistics: `odec` is the same
+    * `try_cast`, and collecting it starts no job) and as an RDD (for the
+    * store, so that no optimizer folds them into a query's plan). The
+    * statistics follow from the batch and the probe: each touched
+    * predicate's profile and the graph ids are updated exactly, and each
+    * changed subject moves from its old characteristic set to its new one.
+    * A base whose statistics are not known to be complete recomputes them
+    * as the distributed plan does: with no graph ids, every profile; with a
+    * touched profile that has a count but no distinct counts (a manifest
+    * older than those), the touched ones. A base without characteristic
+    * sets appends without them, so StorePersist.save computes them.
+    *
+    * '''Above it''', the distributed plan:
     *  1. the batch dictionary — every term the batch needs, looked up in
     *     the existing dictionary by one grouping — is materialized once;
     *     terms the store lacks get fresh ids past the current maximum, by a
     *     deterministic numbering of the materialized rows, so every use sees
     *     the same ids;
-    *  2. the batch's new quads are encoded against that small frame, deduped
-    *     within the batch and against the store (RDF graphs are sets; ids
-    *     preserve term identity incl. lexical form, so id-tuple dedup IS term
-    *     dedup), and materialized once;
-    *  3. statistics merge: untouched predicates keep their profiles, touched
+    *  1. the batch's new quads are encoded against that small frame, deduped
+    *     and materialized once;
+    *  1. statistics merge: untouched predicates keep their profiles, touched
     *     ones are recomputed in one aggregation over their quads plus the
     *     batch (on a persisted store the predicate filter prunes to their
     *     `p=` directories). A base whose statistics are not known to be
-    *     complete gets a full recompute.
-    *
-    * The batch's frames are materialized lazily: the first job that reads
-    * one (the next step's) computes it, so materializing costs no job of
-    * its own. The returned store reads `store`'s frames, two local
-    * checkpoints (freed by the context cleaner once the store is dropped)
-    * and the cached batch quads (see [[appendBatch]]).
+    *     complete gets a full recompute. The appended store carries no
+    *     characteristic sets.
+    * Its frames are materialized lazily: the first job that reads one (the
+    * next step's) computes it, so materializing costs no job of its own.
     */
-  def append(store: RdfStore, structQuads: DataFrame): RdfStore =
-    appendBatch(store, structQuads)._1
+  def appendBatch(store: RdfStore, structQuads: DataFrame,
+      driverQuads: Int = RdfStore.DriverBatchQuads): (RdfStore, DataFrame) = {
+    val rows = structQuads.limit(driverQuads + 1).collect()
+    if (rows.length <= driverQuads) appendLocal(store, rows)
+    else appendDistributed(store, structQuads)
+  }
 
-  /** [[append]], also returning the batch's new quads, which the appended
-    * store caches: a caller that saves the store and then drops it
-    * unpersists them. */
-  def appendBatch(store: RdfStore, structQuads: DataFrame): (RdfStore, DataFrame) = {
+  /** An id-space quad (s, p, o, g); a null id is a null term. */
+  private type IdQuad = (java.lang.Long, java.lang.Long, java.lang.Long, java.lang.Long)
+
+  /** A term's identity in its struct: (kind, lex, dt, lang); `num` follows
+    * from lex and dt. */
+  private type TermKey = (Int, String, String, String)
+
+  private def termKey(r: Row, from: Int): TermKey =
+    (r.getInt(from), r.getString(from + 1), r.getString(from + 2), r.getString(from + 3))
+
+  private val localSchema: StructType = StructType(Seq("s", "p", "o", "g")
+    .map(StructField(_, LongType)) ++ Seq(StructField("onum", DoubleType),
+      StructField("olex", StringType)))
+
+  private def appendLocal(store: RdfStore, rows: Array[Row]): (RdfStore, DataFrame) = {
+    val spark = store.spark
+    // 1. term ids: inline, else the dictionary's, else fresh
+    val structs = rows.iterator.flatMap(r => positions.indices.map(r.getStruct))
+      .filter(_ != null).map(t => termKey(t, 0) -> t).toMap
+    val inline = structs.flatMap { case (k, t) =>
+      store.scheme.tryInline(TermRow.fromRow(t)).map(k -> _) }
+    val needed = structs.keySet -- inline.keySet
+    val stored =
+      if (needed.isEmpty || store.dict.terms == 0) Map.empty[TermKey, Long]
+      else store.terms.filter(col("lex").isInCollection(needed.map(_._2)))
+        .select("id", "kind", "lex", "dt", "lang").collect()
+        .map(r => termKey(r, 1) -> r.getLong(0)).filter(kv => needed(kv._1)).toMap
+    val firstFresh = store.dict.maxPayload + 1
+    val fresh = (needed -- stored.keySet).toSeq
+      .sorted(Ordering.by((k: TermKey) => (k._1, k._2, Option(k._3), Option(k._4))))
+      .zipWithIndex.map { case (k, i) =>
+        k -> make(dictTag(TermRow.fromRow(structs(k))), firstFresh + i) }
+    val ids = inline ++ stored ++ fresh
+    def id(t: Row): java.lang.Long = if (t == null) null else Long.box(ids(termKey(t, 0)))
+
+    // 2. the batch's distinct quads, each with its object, less those the
+    // store holds
+    val batch = mutable.LinkedHashMap[IdQuad, Row]()
+    for (r <- rows) batch.getOrElseUpdate(
+      (id(r.getStruct(0)), id(r.getStruct(1)), id(r.getStruct(2)), id(r.getStruct(3))),
+      r.getStruct(2))
+    val storeEmpty = store.knownGraphIds.isDefined && store.predProfiles.isEmpty
+    val probe = if (storeEmpty || batch.isEmpty) StoreProbe(Set.empty, Map.empty, Set.empty)
+      else probeStore(store.quads, batch.keys)
+    val newRows = batch.iterator.collect { case (q, o) if !probe.dups(q) =>
+      Row(q._1, q._2, q._3, q._4, Option(o).map(_.get(4)).orNull,
+        Option(o).map(_.get(1)).orNull) }.toSeq
+    def encoded(rows: DataFrame) = rows.select(col("s"), col("p"), col("o"), col("g"),
+      col("onum"), col("olex").try_cast(DecimalType(38, 18)).as("odec"))
+    // the statistics read the local relation (no job); the store reads the
+    // same rows as an RDD, which the optimizer cannot fold into the plans of
+    // the queries over an in-memory store
+    val added = encoded(spark.createDataFrame(newRows.asJava, localSchema)).collect().toSeq
+    val batchQuads = encoded(spark.createDataFrame(spark.sparkContext.parallelize(newRows),
+      localSchema))
+    val freshTerms = spark.createDataFrame(fresh.map { case (k, i) =>
+      Row.fromSeq(i +: structs(k).toSeq) }.asJava, termsSchema)
+
+    // 3. statistics
+    val quads = store.quads.unionByName(batchQuads)
+    val stats = if (store.knownGraphIds.isEmpty) RdfStore.computeStats(quads) else {
+      val touched = added.map(_.getLong(1)).distinct
+      if (touched.exists(p => store.predProfiles.get(p).exists(pr => pr.count > 0 && pr.distS == 0)))
+        recomputeTouched(store, batchQuads, touched)
+      else mergeStats(store, added, probe)
+    }
+    val (sets, disabled) =
+      if (store.charSetsDisabled) (None, true)
+      else store.charSetStats match {
+        case Some(cs) =>
+          val moved = moveSubjects(cs, probe.held, added)
+          (moved, moved.isEmpty)
+        case None => (None, false)
+      }
+    val graphs = (store.knownGraphIds.getOrElse(Nil) ++ stats.graphIds).distinct.sorted
+    (RdfStore(quads, store.terms.unionByName(freshTerms), store.scheme, graphs,
+      stats.profiles, stats.spgAllInline, charSetStats = sets, charSetsDisabled = disabled,
+      knownGraphIds = Some(graphs),
+      knownDict = Some(DictStats(store.dict.terms + fresh.size,
+        if (fresh.nonEmpty) firstFresh + fresh.size - 1 else store.dict.maxPayload))),
+      batchQuads)
+  }
+
+  /** What the store holds of a batch: the batch quads it holds, each batch
+    * subject's quad count per predicate (`held`), and the batch (p, o) pairs
+    * it holds. */
+  private final case class StoreProbe(dups: Set[IdQuad], held: Map[Long, Map[Long, Long]],
+      pairs: Set[(Long, Long)])
+
+  /** The store probe, one job over the quads of the batch's subjects and
+    * those of the batch's predicates with one of its objects. Each partition
+    * returns only batch-bounded partials, merged here: a common pair such as
+    * (rdf:type, C) yields one flag, never its rows. */
+  private def probeStore(quads: DataFrame, batch: Iterable[IdQuad]): StoreProbe = {
+    val subjects = batch.flatMap(q => Option(q._1)).map(_.longValue).toSet
+    val pairs = batch.collect { case (_, p, o, _) if p != null && o != null =>
+      (p.longValue, o.longValue) }.toSet
+    val bc = quads.sparkSession.sparkContext.broadcast((batch.toSet, subjects, pairs))
+    val parts = try quads.filter(col("s").isInCollection(subjects) ||
+        col("p").isInCollection(pairs.map(_._1)) && col("o").isInCollection(pairs.map(_._2)))
+      .select(positions.map(col): _*).rdd.mapPartitions { it =>
+        val (qs, ss, ps) = bc.value
+        val (dups, held, found) = (mutable.HashSet[IdQuad](),
+          mutable.HashMap[(Long, Long), Long](), mutable.HashSet[(Long, Long)]())
+        def id(r: Row, i: Int) = r.get(i).asInstanceOf[java.lang.Long]
+        for (r <- it) {
+          val q = (id(r, 0), id(r, 1), id(r, 2), id(r, 3))
+          if (q._1 != null && q._2 != null && ss(q._1.longValue)) {
+            if (qs(q)) dups += q
+            val sp = (q._1.longValue, q._2.longValue)
+            held(sp) = held.getOrElse(sp, 0L) + 1
+          }
+          if (q._2 != null && q._3 != null) {
+            val po = (q._2.longValue, q._3.longValue)
+            if (ps(po)) found += po
+          }
+        }
+        Iterator((dups.toArray, held.toArray, found.toArray))
+      }.collect() finally bc.destroy()
+    StoreProbe(parts.flatMap(_._1).toSet,
+      parts.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _)
+        .groupMap(_._1._1)(kv => kv._1._2 -> kv._2).view.mapValues(_.toMap).toMap,
+      parts.flatMap(_._3).toSet)
+  }
+
+  /** The statistics of `store` plus its new quads `added` (rows s, p, o, g,
+    * onum, odec), updated exactly: a touched predicate's `distS` counts the
+    * batch subjects the store does not hold with it, its `distO` the objects
+    * whose (p, o) pair the store does not hold. The graph ids are the
+    * batch's. */
+  private def mergeStats(store: RdfStore, added: Seq[Row], probe: StoreProbe): QuadStats = {
+    def dictAt(r: Row, i: Int) = !r.isNullAt(i) && isDictTag(tag(r.getLong(i)))
+    def ids(qs: Seq[Row], i: Int) = qs.filterNot(_.isNullAt(i)).map(_.getLong(i)).toSet
+    val profiles = added.groupBy(_.getLong(1)).map { case (p, qs) =>
+      val old = store.predProfiles.getOrElse(p,
+        PredProfile(allInline = true, allNumeric = true, 0L, decExact = true))
+      val n = old.count + qs.size
+      val distS = old.distS + ids(qs, 0).count(s => !probe.held.get(s).exists(_.contains(p)))
+      val distO = old.distO + ids(qs, 2).count(o => !probe.pairs((p, o)))
+      val allNumeric = old.allNumeric && qs.forall(!_.isNullAt(4))
+      p -> PredProfile(old.allInline && !qs.exists(dictAt(_, 2)), allNumeric, n,
+        old.oTags ++ ids(qs, 2).map(tag),
+        decExact = old.decExact && allNumeric && qs.forall(r => r.isNullAt(4) || !r.isNullAt(5)),
+        funcS = distS == n, distS = distS, distO = distO)
+    }
+    QuadStats(store.predProfiles ++ profiles,
+      store.spgAllInline && !added.exists(r => dictAt(r, 0) || dictAt(r, 1) || dictAt(r, 3)),
+      ids(added, 3).toSeq.sorted)
+  }
+
+  /** Characteristic sets `sets` with each subject of the new quads `added`
+    * moved from its old set (its per-predicate counts in the store, `held`)
+    * to its new one; a set left with no subject goes. None when more than
+    * [[RdfStore.MaxCharSets]] sets result, as a full pass would give. */
+  private def moveSubjects(sets: Seq[CharSetStat], held: Map[Long, Map[Long, Long]],
+      added: Seq[Row]): Option[Seq[CharSetStat]] = {
+    val m = mutable.HashMap.from(sets.map(cs => cs.preds -> (cs.subjects, cs.occ)))
+    def shift(pc: Map[Long, Long], sign: Long): Unit = if (pc.nonEmpty) {
+      val preds = pc.keys.toSeq.sorted
+      val (n, occ) = m.getOrElse(preds, (0L, preds.map(_ => 0L)))
+      if (n + sign == 0) m -= preds
+      else m(preds) = (n + sign, preds.lazyZip(occ).map((p, c) => c + sign * pc(p)))
+    }
+    for ((s, qs) <- added.filterNot(_.isNullAt(0)).groupBy(_.getLong(0))) {
+      val before = held.getOrElse(s, Map.empty[Long, Long])
+      shift(before, -1)
+      shift(qs.foldLeft(before)((pc, q) =>
+        pc.updated(q.getLong(1), pc.getOrElse(q.getLong(1), 0L) + 1)), 1)
+    }
+    if (m.size > RdfStore.MaxCharSets) None
+    else Some(m.toSeq.map { case (preds, (n, occ)) => CharSetStat(preds, n, occ) }
+      .sortBy(_.preds)(Ordering.Implicits.seqOrdering[Seq, Long]))
+  }
+
+  /** The statistics of `store` plus `batchQuads` with the `touched`
+    * predicates' profiles recomputed in one aggregation over their quads plus
+    * the batch (on a persisted store the predicate filter prunes to their
+    * `p=` directories); untouched predicates keep theirs. */
+  private def recomputeTouched(store: RdfStore, batchQuads: DataFrame,
+      touched: Seq[Long]): QuadStats =
+    if (touched.isEmpty) QuadStats(store.predProfiles, store.spgAllInline, Nil)
+    else {
+      val t = RdfStore.computeStats(store.quads
+        .filter(col("p").isin(touched: _*)).unionByName(batchQuads))
+      QuadStats(store.predProfiles ++ t.profiles, store.spgAllInline && t.spgAllInline,
+        t.graphIds)
+    }
+
+  private def appendDistributed(store: RdfStore,
+      structQuads: DataFrame): (RdfStore, DataFrame) = {
     val spark = structQuads.sparkSession
     val scheme = store.scheme
     val inl = udf { (r: org.apache.spark.sql.Row) =>
@@ -359,28 +617,18 @@ object StoreEncoder {
       // exact-decimal companion: the lexical form parsed at the engine's
       // xsd:decimal working precision; NULL (unparseable / out of range)
       // disables the predicate's decExact flag and with it the fast path
-      col("o.lex").try_cast(org.apache.spark.sql.types.DecimalType(38, 18))
-        .as("odec"))
+      col("o.lex").try_cast(DecimalType(38, 18)).as("odec"))
       .dropDuplicates("s", "p", "o", "g")
       .join(store.quads.select("s", "p", "o", "g"), Seq("s", "p", "o", "g"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // 3. statistics
     val quads = store.quads.unionByName(batchQuads)
     val stats =
       if (store.knownGraphIds.isEmpty) RdfStore.computeStats(quads)
       else if (store.predProfiles.isEmpty) RdfStore.computeStats(batchQuads)
-      else {
-        val touched = batchQuads.select("p").rdd
-          .mapPartitions(_.map(_.getLong(0)).toSet.iterator).collect().distinct
-        if (touched.isEmpty) QuadStats(store.predProfiles, store.spgAllInline, Nil)
-        else {
-          val t = RdfStore.computeStats(store.quads
-            .filter(col("p").isin(touched.toSeq: _*)).unionByName(batchQuads))
-          QuadStats(store.predProfiles ++ t.profiles, store.spgAllInline && t.spgAllInline,
-            t.graphIds)
-        }
-      }
+      else recomputeTouched(store, batchQuads, batchQuads.select("p").rdd
+        .mapPartitions(_.map(_.getLong(0)).toSet.iterator).collect().distinct.toSeq)
     val graphs = (store.knownGraphIds.getOrElse(Nil) ++ stats.graphIds).distinct.sorted
     (RdfStore(quads, store.terms.unionByName(freshTerms), scheme, graphs, stats.profiles,
       stats.spgAllInline, knownGraphIds = Some(graphs),

@@ -20,7 +20,9 @@ import graft.model.IriScheme
   * count: `clamp(ceil(quads / 32768), 1, 32)` ([[bucketsFor]]), so a store
   * of up to 32,768 quads is one file per directory and stores from about
   * 1 M quads up keep 32 buckets. Its `buckets` argument forces a count for
-  * that one save; [[replace]] (`load`, `analyze`) derives it again.
+  * that one save; [[replace]] (`load`, `analyze`) derives it again. The
+  * two tables are written at once, and a one-bucket table from one task with
+  * no exchange.
   *
   * `meta.json` keys: `defaultGraphs`, `namedGraphs`, `spgAllInline`,
   * `profiles` (per-predicate [[PredProfile]]s), `charSets` (characteristic
@@ -105,30 +107,31 @@ object StorePersist {
   def save(store: RdfStore, dir: String, buckets: Int = 0): Unit = {
     val spark = store.spark
     val n = if (buckets > 0) buckets else bucketsFor(store.quadCount)
-    val tbl = quadsTable(dir)
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    // p-partitioned, subject-bucketed layout: repartition by the SAME hash the
-    // bucketing uses so each (predicate-dir, bucket) is exactly one file —
-    // bound-p scans prune to their directory AND still report
-    // HashPartitioning(s, n) + per-file s-sortedness, so star joins stay
-    // shuffle-free after pruning
-    store.quads
-      .repartition(n, col("s"))
-      .write.partitionBy(PartitionCol).bucketBy(n, "s").sortBy("s", "o")
-      .option("path", s"$dir/quads")
-      .mode(SaveMode.Overwrite).saveAsTable(tbl)
-    // id-bucketed dictionary: every late-materialization join probes the
-    // dictionary on id, so persisting HashPartitioning(id, n) (+ per-bucket
-    // id order, one file per bucket) removes the Exchange AND the Sort of
-    // the dictionary side from every decode join in every reopening session
-    // — the dictionary is the LARGE side of those joins at scale
-    val ttbl = termsTable(dir)
-    spark.sql(s"DROP TABLE IF EXISTS $ttbl")
-    store.terms
-      .repartition(n, col("id"))
-      .write.bucketBy(n, "id").sortBy("id")
-      .option("path", s"$dir/terms")
-      .mode(SaveMode.Overwrite).saveAsTable(ttbl)
+    val (tbl, ttbl) = (quadsTable(dir), termsTable(dir))
+    // the two tables share nothing, so they are written at once
+    concurrently({
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      // p-partitioned, subject-bucketed layout: repartition by the SAME hash
+      // the bucketing uses so each (predicate-dir, bucket) is exactly one
+      // file — bound-p scans prune to their directory AND still report
+      // HashPartitioning(s, n) + per-file s-sortedness, so star joins stay
+      // shuffle-free after pruning
+      oneFilePerBucket(store.quads, n, "s")
+        .write.partitionBy(PartitionCol).bucketBy(n, "s").sortBy("s", "o")
+        .option("path", s"$dir/quads")
+        .mode(SaveMode.Overwrite).saveAsTable(tbl)
+    }, {
+      // id-bucketed dictionary: every late-materialization join probes the
+      // dictionary on id, so persisting HashPartitioning(id, n) (+ per-bucket
+      // id order, one file per bucket) removes the Exchange AND the Sort of
+      // the dictionary side from every decode join in every reopening session
+      // — the dictionary is the LARGE side of those joins at scale
+      spark.sql(s"DROP TABLE IF EXISTS $ttbl")
+      oneFilePerBucket(store.terms, n, "id")
+        .write.bucketBy(n, "id").sortBy("id")
+        .option("path", s"$dir/terms")
+        .mode(SaveMode.Overwrite).saveAsTable(ttbl)
+    })
     val profiles = store.predProfiles.map { case (p, pr) =>
       s"""{"p":$p,"allInline":${pr.allInline},"allNumeric":${pr.allNumeric},""" +
         s""""count":${pr.count},"oTags":[${pr.oTags.mkString(",")}],""" +
@@ -181,6 +184,25 @@ object StorePersist {
          |"profiles":$profiles}""".stripMargin
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "meta.json"), meta)
   }
+
+  /** Run `a` and, on a thread of its own (which inherits this thread's
+    * active session and job properties), `b`; return when both have ended,
+    * rethrowing `a`'s failure, else `b`'s. */
+  private def concurrently(a: => Unit, b: => Unit): Unit = {
+    var failure: Option[Throwable] = None
+    val t = new Thread(() => try b catch { case e: Throwable => failure = Some(e) })
+    t.start()
+    try a finally t.join()
+    failure.foreach(throw _)
+  }
+
+  /** `df` laid out so that a write bucketed by `key` into `n` buckets gives
+    * one file per bucket: hash-partitioned by the bucketing's own hash, or,
+    * for one bucket, merged into one task with no exchange (a store of up to
+    * 32,768 quads then writes each table in one job, not two). */
+  private def oneFilePerBucket(df: org.apache.spark.sql.DataFrame, n: Int,
+      key: String): org.apache.spark.sql.DataFrame =
+    if (n == 1) df.coalesce(1) else df.repartition(n, col(key))
 
   /** Save `store` as the store at `dir`, crash-safely: write a sibling
     * directory, then swap it in. `store`'s frames may read `dir` itself (an
